@@ -152,16 +152,3 @@ class Manifest:
             )
         )
 
-
-def incomplete_only(
-    df: DataFrame, spark: SparkSession, manifest: Manifest, run_id: str
-) -> DataFrame:
-    """Filter the bucketed frame to buckets not yet marked done.
-
-    Uses an isin-filter (the completed list is tiny and driver-known) so
-    Catalyst can push it into the scan as a partition/predicate filter —
-    cheaper than a join for resume."""
-    done = manifest.completed_buckets(spark, run_id)
-    if not done:
-        return df
-    return df.filter(~F.col(BUCKET_COL).isin(done))

@@ -1,10 +1,9 @@
 """Enrichment stage — constants and broadcast-join lookups.
 
 Covers the reference's per-source static field merge
-(pkg/pipeline/pipeline.go:1054-1123: ``fields``, ``fieldsUnderKey``,
-``fieldsFromEnv``), addHostMeta
-(pkg/interceptor/addhostmeta/interceptor.go:91-136), and addK8sMeta's
-indexed pod lookup (pkg/interceptor/addk8smeta/interceptor.go:88-121).
+(pkg/pipeline/pipeline.go:1054-1123: ``fields``, ``fieldsUnderKey``)
+and addK8sMeta's indexed pod lookup
+(pkg/interceptor/addk8smeta/interceptor.go:88-121).
 
 addK8sMeta is the one true join in loggie: extract keys from a
 pattern-shaped field, look them up in a local index, splice workload
@@ -15,9 +14,6 @@ rather than trusting the threshold.
 """
 
 from __future__ import annotations
-
-import os
-import socket
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,29 +32,6 @@ def add_static_fields(
     for k, v in fields.items():
         df = df.withColumn(k, F.lit(v))
     return df
-
-
-def add_env_fields(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """fieldsFromEnv: header key → env var name (pipeline.go:1013-1033).
-    Resolved on the driver at plan time — constants on the cluster."""
-    for k, env_name in mapping.items():
-        df = df.withColumn(k, F.lit(os.environ.get(env_name, "")))
-    return df
-
-
-def add_host_meta(df: DataFrame, target: str = "host") -> DataFrame:
-    """addHostMeta: hostname/os/platform computed once, added to every
-    event (addhostmeta/interceptor.go:91-136)."""
-    import platform
-
-    return df.withColumn(
-        target,
-        F.struct(
-            F.lit(socket.gethostname()).alias("hostname"),
-            F.lit(platform.system().lower()).alias("os"),
-            F.lit(platform.machine()).alias("arch"),
-        ),
-    )
 
 
 def apply_schema_interceptor(

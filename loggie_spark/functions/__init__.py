@@ -1,13 +1,13 @@
 from loggie_spark.functions.tokens import (
-    decode_tokens_ascii,
-    decode_tokens_utf8,
+    decode_batch,
+    decode_tokens_arrow,
     encode_text_to_tokens,
 )
 from loggie_spark.functions.truncate import truncate_utf8_bytes
 
 __all__ = [
-    "decode_tokens_ascii",
-    "decode_tokens_utf8",
+    "decode_batch",
+    "decode_tokens_arrow",
     "encode_text_to_tokens",
     "truncate_utf8_bytes",
 ]

@@ -5,15 +5,19 @@ UTF-8 bytes of the rendered log line, one int per byte. The per-row
 invariant against the reference is token-array equality, so both
 directions must be lossless.
 
-Two decode paths:
+One decoder, :func:`decode_batch`, turns a whole Arrow ``ListArray`` of
+tokens into a ``StringArray``; both decode paths call it:
 
-* :func:`decode_tokens_utf8` — the general path: an Arrow-batched pandas
-  UDF (never per-row Python at the plan level; the batch loop is a tight
-  ``bytes(...)`` constructor over numpy buffers).
-* :func:`decode_tokens_ascii` — pure-JVM fast path when the corpus is
-  known 7-bit ASCII (each byte is its own code point, so
-  ``transform(tokens, chr)`` + ``array_join`` is exact). Stays inside
-  whole-stage codegen; use it when datagen guarantees ASCII.
+* :func:`decode_tokens_arrow` — in-plan, a scalar Arrow UDF over the
+  token column, so only ``tokens`` crosses into Python and only
+  ``body`` comes back (Catalyst prunes ``tokens`` downstream when
+  nothing reads it).
+* ``sources.arrow_reader.read_sequences_arrow`` — in-task, over the
+  row groups it reads with pyarrow.
+
+Each token is taken mod 256 (``x & 0xFF``) as one byte, and bytes that
+are not valid UTF-8 become U+FFFD, so the result is always valid UTF-8
+and never depends on which rows share a batch.
 
 Mirrors the reference's source-side body handling: events carry a raw
 byte body (pkg/core/api/base.go:61-70) that codecs/interceptors decode
@@ -22,22 +26,57 @@ byte body (pkg/core/api/base.go:61-70) that codecs/interceptors decode
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 
-@F.pandas_udf(StringType())
-def decode_tokens_utf8(tokens: pd.Series) -> pd.Series:
-    """array<int32> of UTF-8 byte values → string (Arrow-batched)."""
-    return pd.Series(
-        [
-            None if t is None else bytes(bytearray(int(b) & 0xFF for b in t)).decode("utf-8", errors="replace")
-            for t in tokens
-        ],
-        dtype="object",
+def decode_batch(tokens: pa.ListArray) -> pa.StringArray:
+    """array<int32> of UTF-8 byte values → string, one Arrow batch at a
+    time.
+
+    The int32 values are cast to uint8 and reused as the data buffer of
+    a StringArray with the same (rebased) offsets and validity, so NULL
+    lists stay NULL and sliced arrays need no copy of the lists. The
+    result is validated in full; only if some row is not valid UTF-8
+    is the batch decoded row by row with U+FFFD replacement. A NULL
+    token inside a list counts as byte 0.
+    """
+    start = tokens.offsets[0]
+    offsets = pc.subtract(tokens.offsets, start)
+    values = tokens.values.slice(start.as_py(), offsets[-1].as_py()).fill_null(0)
+    data = values.to_numpy(zero_copy_only=False).astype(np.uint8)
+    valid = tokens.is_valid() if tokens.null_count else None
+    body = pa.StringArray.from_buffers(
+        len(tokens),
+        offsets.buffers()[1],
+        pa.py_buffer(data),
+        None if valid is None else valid.buffers()[1],
     )
+    try:
+        body.validate(full=True)
+    except pa.ArrowInvalid:
+        bounds = offsets.to_numpy()
+        is_valid = [True] * len(tokens) if valid is None else valid.to_pylist()
+        body = pa.array(
+            [
+                data[bounds[i] : bounds[i + 1]].tobytes().decode("utf-8", "replace")
+                if ok
+                else None
+                for i, ok in enumerate(is_valid)
+            ],
+            type=pa.string(),
+        )
+    return body
+
+
+# Un-annotated lambda: arrow_udf infers its kind from type hints and
+# accepts only ``pa.Array`` there; no hints means a scalar Arrow UDF.
+_decode_udf = F.arrow_udf(lambda tokens: decode_batch(tokens), StringType())
 
 
 @F.pandas_udf(ArrayType(IntegerType()))
@@ -52,102 +91,17 @@ def encode_text_to_tokens(text: pd.Series) -> pd.Series:
 def decode_tokens_arrow(
     df, tokens_col: str = "tokens", out_col: str = "body", keep_tokens: bool = True
 ):
-    """Zero-loop vectorized decode via ``mapInArrow``: the ListArray's
-    int32 value buffer is cast to uint8 and REUSED as the UTF-8 data
-    buffer of a new StringArray with the same offsets — no per-row
-    Python, no per-row JVM allocation. This is the scale path for the
-    parse stage's token→body decode.
+    """``df`` with ``out_col`` = :func:`decode_batch` of ``tokens_col``.
 
-    ``keep_tokens=False`` drops the token column from the RETURNED
-    batches: Catalyst cannot prune columns through an opaque
-    mapInArrow node, so a metrics-only job (nothing downstream reads
-    tokens) would otherwise pay the Python→JVM transfer of the fattest
-    column for nothing — ~4x the bytes of the decoded body. Jobs that
-    write routed rows keep it (token-array equality at the sink).
-
-    Falls back to the pandas UDF per batch when nulls/slicing break the
-    buffer-reuse preconditions (never in the synthetic corpus).
+    ``keep_tokens=False`` drops the token column from the result; jobs
+    that write routed rows keep it (token-array equality at the sink).
     """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import StructField
-
-    from pyspark.sql.types import StructType
-
-    # Fresh StructType: .add() mutates in place, and df.schema is a
-    # cached object on the DataFrame — mutating it corrupts resolution.
-    kept = [f for f in df.schema.fields if keep_tokens or f.name != tokens_col]
-    out_schema = StructType(kept + [StructField(out_col, StringType())])
-    idx = df.columns.index(tokens_col)
-
-    def decode_batches(batches):
-        for b in batches:
-            col = b.column(idx)
-            try:
-                if col.null_count or col.offset:
-                    raise ValueError("slow path")
-                offsets = col.offsets
-                if offsets.offset:
-                    raise ValueError("slow path")
-                values = col.values.to_numpy(zero_copy_only=False)
-                data = values.astype(np.uint8).tobytes()
-                body = pa.StringArray.from_buffers(
-                    len(col), offsets.buffers()[1], pa.py_buffer(data)
-                )
-            except Exception:
-                body = pa.array(
-                    [
-                        None
-                        if t is None
-                        else bytes(bytearray(x & 0xFF for x in t)).decode(
-                            "utf-8", errors="replace"
-                        )
-                        for t in col.to_pylist()
-                    ],
-                    type=pa.string(),
-                )
-            arrays = [
-                b.column(i)
-                for i in range(b.num_columns)
-                if keep_tokens or i != idx
-            ] + [body]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in out_schema.fields]
-            )
-
-    return df.mapInArrow(decode_batches, out_schema)
-
-
-def decode_tokens_jvm(tokens: Column | str) -> Column:
-    """Exact UTF-8 decode entirely inside whole-stage codegen.
-
-    Trick: ``chr(b)`` maps byte value b (0-255) to the code point b;
-    a string of such chars encoded as ISO-8859-1 yields exactly the
-    original byte sequence (Latin-1 is the identity on 0-255); decoding
-    THAT as UTF-8 reassembles multi-byte characters correctly. No
-    Python process, no Arrow hop — this is the fastest decode path on
-    CPU-constrained executors (the Arrow path pays a full JVM→Python→
-    JVM serialization of the token column).
-    """
-    col = F.col(tokens) if isinstance(tokens, str) else tokens
-    latin1 = F.array_join(
-        F.transform(col, lambda b: F.chr(F.pmod(b, F.lit(256)))), ""
-    )
-    return F.decode(F.encode(latin1, "ISO-8859-1"), "UTF-8")
-
-
-def decode_tokens_ascii(tokens: Column | str) -> Column:
-    """JVM-only decode valid iff every token < 128 (ASCII).
-
-    ``chr(i)`` maps a code point; for 7-bit input code point == byte, so
-    this equals the UTF-8 decode while staying in whole-stage codegen.
-    """
-    col = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.array_join(F.transform(col, lambda b: F.chr(b)), "")
+    out = df.withColumn(out_col, _decode_udf(F.col(tokens_col)))
+    return out if keep_tokens else out.drop(tokens_col)
 
 
 def encode_text_to_tokens_ascii(text: Column | str) -> Column:
-    """JVM-only inverse of :func:`decode_tokens_ascii` (ASCII input).
+    """JVM-only :func:`encode_text_to_tokens` for ASCII input.
 
     ``split(s, '')`` can yield a trailing empty string (Java split with
     limit -1), so empties are filtered before ``ascii``.

@@ -47,8 +47,3 @@ def truncate_utf8_bytes(col: Column | str, max_bytes: int) -> Column:
         raw.substr(F.lit(1), cut).cast("string")
     )
 
-
-def truncate_utf8_bytes_ascii(col: Column | str, max_bytes: int) -> Column:
-    """Known-ASCII fast path: bytes == chars, plain substring."""
-    target = F.col(col) if isinstance(col, str) else col
-    return F.substring(target, 1, max_bytes)

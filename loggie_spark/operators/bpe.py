@@ -32,8 +32,6 @@ from pyspark.sql.functions import pandas_udf
 
 from loggie_spark.operators.dedup import spread_small_input, tokenize
 
-MERGE_SCHEMA = "rank INT, left STRING, right STRING, merged STRING, pair_count BIGINT"
-
 
 def bpe_train(
     docs: DataFrame,
@@ -110,21 +108,6 @@ def _apply_merge(
         else:
             out.append(t)
     return out
-
-
-def bpe_train_df(
-    docs: DataFrame,
-    n_merges: int = 6,
-    top_words: int = 4096,
-    text_col: str = "text",
-) -> DataFrame:
-    """``bpe_train`` as a DataFrame (the queryable/sinkable shape)."""
-    spark = docs.sparkSession
-    rows = bpe_train(docs, n_merges=n_merges, top_words=top_words, text_col=text_col)
-    return spark.createDataFrame(
-        [(m["rank"], m["left"], m["right"], m["merged"], m["pair_count"]) for m in rows],
-        schema=MERGE_SCHEMA,
-    )
 
 
 def _encode_word(word: str, merges: list[tuple[str, str, str]]) -> list[str]:

@@ -775,18 +775,6 @@ def source_token_drift(
     )
 
 
-def reference_distribution(
-    docs: DataFrame, top_v: int = 100, text_col: str = "text"
-) -> list[tuple[str, float]]:
-    """Export the top-``top_v`` corpus token distribution as a plain
-    ``[(word, p)]`` list — the frozen reference a streaming drift
-    monitor (streaming.pipeline.stream_source_drift) compares windows
-    against. V rows to the driver: config-sized by construction."""
-    vocab = vocab_stats(docs, top_k=top_v, text_col=text_col).collect()
-    tot = sum(r.tf for r in vocab)
-    return [(r.word, r.tf / tot) for r in vocab]
-
-
 def binary_auc(
     df: DataFrame, score: Column, label: Column
 ) -> DataFrame:

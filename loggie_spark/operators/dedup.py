@@ -341,35 +341,6 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     return F.aggregate(contrib, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs: band the 60-bit fingerprint into ``bands``
-    15-bit slices (a pair within hamming ≤ bands-1 must share ≥1 exact
-    band), bucket-join, verify hamming distance. ``bucket_cap`` bounds
-    degenerate buckets (:func:`_cap_buckets`)."""
-    # Barrier: the 60-wide bit-vote fold must evaluate once per row,
-    # not once per band entry per join side.
-    fp = _materialize(
-        spread_small_input(df).select(F.col(id_col).alias("_id"), F.col(text_col)),
-        {"_fp": simhash(F.col(text_col))},
-    ).select("_id", "_fp")
-    return fingerprint_hamming_pairs(
-        fp,
-        fp_col="_fp",
-        id_col="_id",
-        max_hamming=max_hamming,
-        bands=bands,
-        fp_bits=SIMHASH_BITS,
-        bucket_cap=bucket_cap,
-    )
-
-
 def fingerprint_hamming_pairs(
     df: DataFrame,
     fp_col: str = "fp",

@@ -18,9 +18,9 @@ after dedup/quality filtering:
 * :func:`pack_sequences_greedy` — exact no-straddle greedy packing (a
   sequence never splits; a bin flushes when the next sequence would
   overflow). Inherently a stateful fold, so Arrow-batched
-  ``applyInPandas`` per (source, shard) group — shards bound group
-  size at 10^12 rows, trading global optimality for parallelism the
-  same way every production packer does.
+  ``applyInPandas`` per shard group — shards bound group size at
+  10^12 rows, trading global optimality for parallelism the same way
+  every production packer does.
 
 Scale notes: chunking is narrow (grows rows, never shuffles bytes
 twice); both packers shuffle only (doc_id, n_tok, source, shard) — the
@@ -108,12 +108,15 @@ def pack_sequences_greedy(
     max_len: int = 2048,
     n_shards: int = 64,
 ) -> DataFrame:
-    """Exact greedy no-straddle packing: walk sequences in doc order;
-    if the current bin can't fit the next sequence, flush and start a
-    new bin. Sequences longer than ``max_len`` get a bin of their own.
+    """Exact greedy no-straddle packing: walk each source's sequences
+    in doc order; if the current bin can't fit the next sequence, flush
+    and start a new bin. Sequences longer than ``max_len`` get a bin of
+    their own, and a bin never holds two sources.
 
-    Stateful fold → ``applyInPandas`` per (source, shard). Shard by a
-    stable id hash so each group is ~rows/n_shards; at 10^12 rows set
+    Stateful fold → ``applyInPandas`` per shard, over (source, doc)
+    order with a flush at every source change, so ``pack_id`` =
+    ``(shard << 40) + k`` is unique across sources. Shard by a stable
+    id hash so each group is ~rows/n_shards; at 10^12 rows set
     n_shards so a group fits an executor (packing quality is unchanged
     — greedy packing is order-local, and each shard keeps doc order).
     Only (id, len, source, shard) ride the shuffle — never the tokens.
@@ -139,17 +142,17 @@ def pack_sequences_greedy(
     )
 
     def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        src, shard = key
+        pdf = pdf.sort_values([source_col, id_col])
+        (shard,) = key
         base = int(shard) << 40  # shard-disjoint pack_id space
-        pack, fill = 0, 0
-        ids, offs, packs = [], [], []
-        for _id, ln in zip(pdf[id_col], pdf[len_col]):
+        pack, fill, prev_src = 0, 0, None
+        offs, packs = [], []
+        for src, ln in zip(pdf[source_col], pdf[len_col]):
             ln = int(ln)
-            if fill > 0 and fill + ln > max_len:
+            if fill > 0 and (fill + ln > max_len or src != prev_src):
                 pack += 1
                 fill = 0
-            ids.append(_id)
+            prev_src = src
             packs.append(base + pack)
             offs.append(fill)
             fill += ln
@@ -158,8 +161,8 @@ def pack_sequences_greedy(
                 fill = 0
         return pd.DataFrame(
             {
-                id_col: ids,
-                source_col: [src] * len(ids),
+                id_col: pdf[id_col].to_numpy(),
+                source_col: pdf[source_col].to_numpy(),
                 "pack_id": packs,
                 "pack_offset": offs,
             }
@@ -174,4 +177,4 @@ def pack_sequences_greedy(
         len_col,
         F.pmod(F.xxhash64(id_col), F.lit(n_shards)).alias("_shard"),
     )
-    return narrow.groupBy(source_col, "_shard").applyInPandas(fold, schema)
+    return narrow.groupBy("_shard").applyInPandas(fold, schema)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from loggie_spark.functions.vectors import cosine, dot, norm
+from loggie_spark.functions.vectors import dot, norm
 
 
 def brute_force_topk(
@@ -520,17 +520,6 @@ def pq_codebook_prefix(
         .collect()
     )
     return [[float(x) for x in r[1]] for r in rows]
-
-
-def _sq_dist(sv: Column, cent: list[float]) -> Column:
-    """Squared L2 vs a literal centroid subvector, left-folded in
-    double from 0.0 — the exact grouping the oracle's list_sum
-    reproduces."""
-    c = F.array(*[F.lit(float(x)) for x in cent])
-    diffs = F.zip_with(
-        sv, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def pq_encode(

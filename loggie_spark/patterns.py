@@ -231,10 +231,6 @@ def go_layout_to_jvm(layout: str) -> str:
 _PATTERN_TOKEN = re.compile(r"\$\{(.+?)\}")
 
 
-class PatternRenderError(ValueError):
-    """Strict-mode render failure (pattern.go:149-151)."""
-
-
 def k8s_token_column(token: str) -> str:
     """Column-name convention for ``${_k8s.*}`` tokens (k8meta.go:28-31,
     85-130): the addK8sMeta broadcast enrich lands pod/node metadata in

@@ -137,11 +137,10 @@ class PipelineConfig:
     n_buckets: int = 64  # checkpoint/work units; ~4096 at 100 TB
     salt: int = 8  # write-skew salt for heavy-hitter routes
     source_col: str = "source"
-    decode_tokens: bool = True  # tokens:array<int32> → body:string
-    # keep the token column through the decode hop: required when the
-    # sink writes routed rows (token-array equality invariant); a
-    # metrics-only job sets False — Catalyst can't prune through the
-    # opaque mapInArrow node, and tokens are ~4x the body's bytes.
+    # keep the token column after the tokens → body decode: the sink
+    # writes it with routed rows (token-array equality invariant).
+    # False drops it at the decode; Catalyst also prunes it wherever
+    # nothing downstream reads it.
     keep_tokens: bool = True
     time_col_name: str | None = None  # deterministic ${+...}; None = now()
 
@@ -162,10 +161,9 @@ class Pipeline:
         action). Returns the routed frame with sink/route_key columns,
         program-dropped rows removed, render-failures flagged."""
         cfg = self.cfg
-        if cfg.decode_tokens and "tokens" in df.columns and "body" not in df.columns:
-            # Arrow-native buffer-reuse decode (functions/tokens.py) —
-            # the vectorized scale path; the pandas UDF remains as the
-            # general fallback for pathological inputs.
+        if "tokens" in df.columns and "body" not in df.columns:
+            # tokens:array<int32> → body:string through the one batch
+            # decoder (functions/tokens.py), as a scalar Arrow UDF.
             from loggie_spark.functions.tokens import decode_tokens_arrow
 
             df = decode_tokens_arrow(df, "tokens", "body", keep_tokens=cfg.keep_tokens)

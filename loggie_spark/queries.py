@@ -2156,7 +2156,6 @@ def pl_default_injection(spark: SparkSession, sf_dir: str) -> DataFrame:
         sources=[SourceSpec(f"src{i}") for i in range(20)],
         sinks=[SinkSpec("k", route_pattern="t-${source}")],
         interceptors=[{"type": "maxbytes", "maxBytes": 64}],
-        decode_tokens=False,
     )
     routed = Pipeline(cfg).transform(docs)
     return routed.groupBy(

@@ -38,8 +38,12 @@ def get_spark(
     # In local mode the driver JVM IS the executor: the 1g default heap
     # OOMs the vectorized parquet reader at 32 concurrent tasks over
     # array<int32> columns. Size it to the machine (must be set before
-    # the JVM launches; no-op if a gateway already exists).
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # the JVM launches; no-op if a gateway already exists): half its
+    # memory, between the -Xms8g floor and 48g. A heap larger than the
+    # machine grows until the kernel kills the JVM.
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    default_mem = f"{min(48, max(8, physical // 2**31))}g"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -6,11 +6,12 @@ Why: stage isolation (BENCH_SCALING.json) shows the decode hop's cost
 is NOT the parquet scan (pure-JVM token scan+agg: 0.47 s for 10M rows)
 and NOT the byte cast (+0.2 s) — it is the JVM→Python Arrow transfer
 of the ``array<int32>`` column (~3.3 s for 10M rows / 3.4 GB of token
-ints at 32 cores). Reading the row group with pyarrow inside the task
-eliminates that leg: the int32 value buffer casts to uint8 and is
-REUSED as the UTF-8 buffer of the decoded body (same trick as
-functions/tokens.decode_tokens_arrow), so the only cross-runtime
-transfer is the ~4× smaller decoded body on the way back.
+ints at 32 cores). The in-plan decode (functions/tokens.
+decode_tokens_arrow, a scalar Arrow UDF) must still send every token
+array from the JVM into Python; reading the row group with pyarrow
+inside the task removes that leg. Both paths decode with the same
+``functions.tokens.decode_batch``, so the only cross-runtime transfer
+here is the ~4× smaller decoded body on the way back.
 
 Unit of work is a (file, row_group) pair: row groups are the natural
 split (bounded memory, full parallelism regardless of file count —
@@ -59,8 +60,9 @@ def read_sequences_arrow(
 ) -> DataFrame:
     """Decoded sequences frame (doc_id, n_tok, source, body[, tokens])
     read + decoded entirely in Arrow, one task per parquet row group."""
-    import numpy as np
     import pyarrow as pa
+
+    from loggie_spark.functions.tokens import decode_batch
 
     units = _list_row_groups(path)
     # One work partition per core slot, NOT more: each partition spins a
@@ -71,13 +73,14 @@ def read_sequences_arrow(
     work = spark.createDataFrame(units, "f string, rg int").repartition(n_parts)
 
     out_schema = SEQ_SCHEMA_DECODED + (", tokens array<int>" if keep_tokens else "")
+    cols = ["doc_id", "n_tok", "source", "tokens"]
+    names = ["doc_id", "n_tok", "source", "body"] + (["tokens"] if keep_tokens else [])
 
     def read_units(batches):
         import pyarrow.parquet as pq
 
         for b in batches:
             for f, rg in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                cols = ["doc_id", "n_tok", "source", "tokens"]
                 # use_threads=False: Spark already runs one reader per
                 # core slot; pyarrow's own pool (ncpus threads PER
                 # worker) would put ~cores² runnable threads on the box
@@ -85,43 +88,10 @@ def read_sequences_arrow(
                 # until this is pinned).
                 tbl = pq.ParquetFile(f).read_row_group(
                     rg, columns=cols, use_threads=False
-                )
-                for chunk_tbl in tbl.to_batches():
-                    gi = chunk_tbl.schema.get_field_index
-                    col = chunk_tbl.column(gi("tokens"))
-                    try:
-                        if col.null_count or col.offset:
-                            raise ValueError("slow path")
-                        offsets = col.offsets
-                        if offsets.offset:
-                            raise ValueError("slow path")
-                        values = col.values.to_numpy(zero_copy_only=False)
-                        data = values.astype(np.uint8).tobytes()
-                        body = pa.StringArray.from_buffers(
-                            len(col), offsets.buffers()[1], pa.py_buffer(data)
-                        )
-                    except Exception:
-                        body = pa.array(
-                            [
-                                None
-                                if t is None
-                                else bytes(bytearray(x & 0xFF for x in t)).decode(
-                                    "utf-8", errors="replace"
-                                )
-                                for t in col.to_pylist()
-                            ],
-                            type=pa.string(),
-                        )
-                    arrays = [
-                        chunk_tbl.column(gi("doc_id")),
-                        chunk_tbl.column(gi("n_tok")),
-                        chunk_tbl.column(gi("source")),
-                        body,
-                    ]
-                    names = ["doc_id", "n_tok", "source", "body"]
-                    if keep_tokens:
-                        arrays.append(col)
-                        names.append("tokens")
-                    yield pa.RecordBatch.from_arrays(arrays, names=names)
+                ).select(cols)
+                for batch in tbl.to_batches():
+                    doc_id, n_tok, source, tokens = batch.columns
+                    arrays = [doc_id, n_tok, source, decode_batch(tokens), tokens]
+                    yield pa.RecordBatch.from_arrays(arrays[: len(names)], names=names)
 
     return work.mapInArrow(read_units, out_schema)

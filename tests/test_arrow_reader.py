@@ -63,3 +63,42 @@ def test_arrow_reader_null_tokens_and_keep(spark, tmp_path):
     assert got["a"].body == "hi" and got["a"].tokens == [104, 105]
     assert got["b"].body is None and got["b"].tokens is None
     assert got["c"].body == "" and got["c"].tokens == []
+
+
+def test_decode_paths_agree_on_hostile_tokens(spark, tmp_path):
+    """The in-plan decode and the in-task reader give the same strings
+    on tokens that are not UTF-8 bytes, and an invalid row decodes the
+    same whether or not a NULL row shares its Arrow batch."""
+    bad = [104, 105, 255, 195]  # "hi" + a stray and a truncated byte
+    alone = [Row(doc_id="bad", tokens=bad, n_tok=4, source="s")]
+    mixed = alone + [
+        Row(doc_id="null", tokens=None, n_tok=0, source="s"),
+        Row(doc_id="empty", tokens=[], n_tok=0, source="s"),
+        Row(doc_id="wide", tokens=[-1, 300, 65, -128], n_tok=4, source="s"),
+        Row(doc_id="utf8", tokens=list("é✓".encode("utf-8")), n_tok=5, source="s"),
+    ]
+    want = {
+        "bad": ("hi\ufffd\ufffd", 8),
+        "null": (None, None),
+        "empty": ("", 0),
+        "wide": ("\ufffd,A\ufffd", 8),
+        "utf8": ("é✓", 5),
+    }
+    for name, rows in (("alone", alone), ("mixed", mixed)):
+        # One file, one row group, one partition: each fixture is one
+        # Arrow batch on both paths.
+        path = str(tmp_path / name)
+        spark.createDataFrame(
+            rows, "doc_id string, tokens array<int>, n_tok int, source string"
+        ).coalesce(1).write.parquet(path)
+        in_plan = decode_tokens_arrow(
+            spark.read.parquet(path), "tokens", "body", keep_tokens=False
+        )
+        for df in (in_plan, read_sequences_arrow(spark, path)):
+            got = {
+                r.doc_id: (r.body, r.n)
+                for r in df.select(
+                    "doc_id", "body", F.octet_length("body").alias("n")
+                ).collect()
+            }
+            assert got == {r.doc_id: want[r.doc_id] for r in rows}, (name, got)

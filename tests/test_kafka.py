@@ -74,7 +74,6 @@ def test_kafka_source_into_pipeline_transform(spark):
             )
         ],
         sinks=[SinkSpec("out", "app-${level}", partition_key="${svc}")],
-        decode_tokens=False,
     )
     routed = Pipeline(cfg).transform(events)
     got = sorted((r.route_key, r._pkey) for r in routed.collect())
@@ -123,7 +122,6 @@ def test_partition_key_colocates_in_written_layout(spark, tmp_path):
         sinks=[SinkSpec("kafka", "fixed", partition_key="${pk}")],
         n_buckets=4,
         salt=8,
-        decode_tokens=False,
     )
     out = str(tmp_path / "out")
     Pipeline(cfg).run(spark, df, out, run_id="r1")

@@ -4,6 +4,7 @@ oracle, routed-row token equality, and crash/resume exactly-once
 
 from __future__ import annotations
 
+import re
 import shutil
 
 import pyspark.sql.functions as F
@@ -215,8 +216,9 @@ def test_flagship_plan_shape(spark):
     """Lock the single-scan property the r01→r02 rewrite earned: the
     flagship physical plan must contain exactly ONE shuffle Exchange
     (the metrics aggregate), ONE BroadcastExchange (enrich), ONE
-    FileScan, and ZERO SortMergeJoin / CartesianProduct — so later
-    rounds can't silently regress to multi-pass."""
+    FileScan, ONE Python node (the token decode), and ZERO
+    SortMergeJoin / CartesianProduct — so later rounds can't silently
+    regress to multi-pass."""
     from loggie_spark.datagen import sequences_from_documents
     from loggie_spark.sinks.metrics import sink_metrics
 
@@ -232,6 +234,10 @@ def test_flagship_plan_shape(spark):
     assert n_shuffle == 1, f"expected 1 shuffle Exchange, got {n_shuffle}:\n{plan}"
     assert n_broadcast == 1, f"expected 1 BroadcastExchange, got {n_broadcast}:\n{plan}"
     assert plan.count("FileScan") == 1, plan
+    # One Python node, the token decode: CollapseProject and filter
+    # pushdown must not copy the decode UDF into later operators.
+    n_python = len(re.findall(r"\b(?:ArrowEvalPython|BatchEvalPython|MapInArrow)\b", plan))
+    assert n_python == 1, f"expected 1 Python decode node, got {n_python}:\n{plan}"
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 

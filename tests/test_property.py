@@ -7,7 +7,8 @@ Oracled semantics (reference citations in each test):
 * maxbytes subUtf8 truncation (interceptor/maxbytes/interceptor.go:107-115)
 * transformer `replace` with max-N (action/replace.go:79-84 →
   strings.Replace)
-* token encode/decode UTF-8 round-trip (the input_hint contract)
+* token encode/decode UTF-8 round-trip (the input_hint contract), and
+  the batch decoder on arbitrary int32 lists
 * file-source multiline merge (source/file/multilines.go:115-140)
 """
 
@@ -81,17 +82,59 @@ def test_replace_action_matches_strings_replace(spark, rows, old, new, max_n):
 @given(rows=st.lists(texty, min_size=1, max_size=40))
 @settings(**SETTINGS)
 def test_token_roundtrip_any_unicode(spark, rows):
-    from loggie_spark.functions.tokens import decode_tokens_utf8, encode_text_to_tokens
+    from loggie_spark.functions.tokens import decode_tokens_arrow, encode_text_to_tokens
 
     df = spark.createDataFrame([Row(i=i, s=s) for i, s in enumerate(rows)])
-    out = df.select(
-        "i",
-        decode_tokens_utf8(encode_text_to_tokens(F.col("s"))).alias("back"),
-        encode_text_to_tokens(F.col("s")).alias("toks"),
-    ).collect()
+    enc = df.withColumn("toks", encode_text_to_tokens(F.col("s")))
+    out = decode_tokens_arrow(enc, "toks", "back").collect()
     for r in out:
         assert r.back == rows[r.i]
         assert r.toks == [int(b) for b in rows[r.i].encode("utf-8")]
+
+
+def _decode_oracle(t: list | None) -> str | None:
+    """Each token mod 256 is one byte (a NULL token is byte 0); bytes
+    that are not UTF-8 become U+FFFD."""
+    if t is None:
+        return None
+    return bytes((x or 0) & 0xFF for x in t).decode("utf-8", "replace")
+
+
+token_lists = st.one_of(
+    st.none(),
+    texty.map(lambda s: list(s.encode("utf-8"))),
+    st.lists(
+        st.one_of(
+            st.integers(0, 255),
+            st.integers(-(2**31), 2**31 - 1),
+            st.none(),
+        ),
+        max_size=12,
+    ),
+)
+
+
+@given(
+    rows=st.lists(token_lists, max_size=30),
+    lo=st.integers(0, 30),
+    n=st.integers(0, 30),
+)
+@settings(max_examples=300, deadline=None)
+def test_decode_batch_matches_oracle(rows, lo, n):
+    """The one batch decoder, on pyarrow arrays (no Spark): arbitrary
+    int32 lists — negatives, > 255, invalid UTF-8, NULL lists and
+    tokens, empty lists — whole and sliced, always give the oracle's
+    strings as a valid UTF-8 StringArray."""
+    import pyarrow as pa
+
+    from loggie_spark.functions.tokens import decode_batch
+
+    arr = pa.array(rows, pa.list_(pa.int32()))
+    for batch in (arr, arr.slice(lo, n)):
+        out = decode_batch(batch)
+        out.validate(full=True)
+        assert out.type == pa.string()
+        assert out.to_pylist() == [_decode_oracle(t) for t in batch.to_pylist()]
 
 
 def _multiline_oracle(

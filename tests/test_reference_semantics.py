@@ -64,7 +64,6 @@ def test_injected_maxbytes_truncates_in_transform(spark):
         sources=[SourceSpec("s")],
         sinks=[SinkSpec("out", "fixed")],
         interceptors=[{"type": "maxbytes", "maxBytes": 10}],
-        decode_tokens=False,
     )
     out = Pipeline(cfg).transform(df).collect()
     assert all(len(r.body) == 10 for r in out)
@@ -210,7 +209,6 @@ def test_fields_under_key_nesting(spark):
         name="p",
         sources=[SourceSpec("a", fields={"fleet": "edge"}, fields_under_key="fields")],
         sinks=[SinkSpec("out", "fixed")],
-        decode_tokens=False,
     )
     r = Pipeline(single).transform(df.filter(F.col("source") == "a")).collect()[0]
     assert r.fields.fleet == "edge"
@@ -222,7 +220,6 @@ def test_fields_under_key_nesting(spark):
             SourceSpec("b", fields={"zone": "eu"}, fields_under_key="fields"),
         ],
         sinks=[SinkSpec("out", "fixed")],
-        decode_tokens=False,
     )
     rows = {r.source: r for r in Pipeline(multi).transform(df).collect()}
     assert rows["a"].fields.fleet == "edge" and rows["a"].fields.zone == ""
@@ -240,7 +237,6 @@ def test_fields_under_key_nesting(spark):
                     SourceSpec("b", fields={"y": "2"}, fields_under_key="k2"),
                 ],
                 sinks=[SinkSpec("out", "fixed")],
-                decode_tokens=False,
             )
         ).transform(df)
 
@@ -259,7 +255,6 @@ def test_body_and_timestamp_key_remap(spark):
         name="p",
         sources=[SourceSpec("s", body_key="log", timestamp_key="ts")],
         sinks=[SinkSpec("out", "fixed")],
-        decode_tokens=False,
         time_col_name="_pt",
     )
     r = Pipeline(cfg).transform(df).collect()[0]

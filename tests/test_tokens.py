@@ -4,8 +4,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from loggie_spark.functions.tokens import (
-    decode_tokens_ascii,
-    decode_tokens_utf8,
+    decode_tokens_arrow,
     encode_text_to_tokens,
     encode_text_to_tokens_ascii,
 )
@@ -15,8 +14,7 @@ def test_utf8_roundtrip(spark):
     lines = ["hello world", "", "naïve café — ünïcode ✓", '{"a": 1}', "10.0.0.1 - - [x] 404"]
     df = spark.createDataFrame([Row(text=t) for t in lines])
     enc = df.withColumn("tokens", encode_text_to_tokens(F.col("text")))
-    dec = enc.withColumn("back", decode_tokens_utf8(F.col("tokens")))
-    rows = dec.collect()
+    rows = decode_tokens_arrow(enc, "tokens", "back").collect()
     for r in rows:
         assert r.back == r.text
         assert r.tokens == [int(b) for b in r.text.encode("utf-8")]
@@ -32,10 +30,8 @@ def test_ascii_jvm_path_matches_udf(spark):
     ).collect()
     for r in both:
         assert r.jvm == r.udf
-    dec = df.select(
-        "text", decode_tokens_ascii(encode_text_to_tokens_ascii(F.col("text"))).alias("back")
-    ).collect()
-    for r in dec:
+    enc = df.withColumn("tokens", encode_text_to_tokens_ascii(F.col("text")))
+    for r in decode_tokens_arrow(enc, "tokens", "back").collect():
         assert r.back == r.text
 
 
@@ -62,11 +58,9 @@ def test_truncate_utf8(spark):
 
 
 def test_decode_arrow_drop_tokens(spark):
-    """keep_tokens=False: the fat token column is dropped from the
-    returned Arrow batches (Catalyst can't prune through mapInArrow);
+    """keep_tokens=False: the token column is dropped from the result;
     the decode itself stays identical."""
     from loggie_spark.datagen import generate_sequences
-    from loggie_spark.functions.tokens import decode_tokens_arrow
 
     df = generate_sequences(spark, 50, partitions=2)
     kept = decode_tokens_arrow(df, "tokens", "body", keep_tokens=True)

@@ -208,6 +208,25 @@ def test_pack_sequences_greedy_no_straddle(spark):
     assert all(r.pack_id >= 0 for r in sharded)
     assert len({r.pack_id >> 40 for r in sharded}) <= 8
 
+    # Two sources sharing shards: a pack_id names one pack of one
+    # source, so no pack mixes sources and none overflows max_len.
+    lens = {(src, i): 300 + 37 * i for src in ("a", "b") for i in range(40)}
+    two = spark.createDataFrame(
+        [(i + (1000 if src == "b" else 0), src, n) for (src, i), n in lens.items()],
+        "doc_id long, source string, n_tok long",
+    )
+    for n_shards in (1, 4):
+        packs: dict[int, list] = {}
+        for r in pack_sequences_greedy(two, max_len=2048, n_shards=n_shards).collect():
+            n = lens[(r.source, r.doc_id % 1000)]
+            packs.setdefault(r.pack_id, []).append((r.source, r.pack_offset, n))
+        for members in packs.values():
+            assert len({src for src, _, _ in members}) == 1, members
+            members.sort(key=lambda m: m[1])
+            assert members[0][1] == 0, members
+            if len(members) > 1:
+                assert sum(n for _, _, n in members) <= 2048, members
+
 
 def test_chunk_sequences_disjoint_and_tail(spark):
     from pyspark.sql import functions as F
