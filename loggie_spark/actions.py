@@ -7,23 +7,29 @@ short-circuits the rest of the program for that row; ``dropEvent()``
 drops the row; per-action ``ignoreError`` / ``dropIfError`` policies
 (action/action.go:33-38,110-120).
 
-Here the whole program compiles to column expressions over one
-DataFrame pass. Row-level control flow becomes hidden boolean columns:
+Here a program compiles at plan time into column expressions; no
+per-row Python runs. The compiler keeps a symbolic row — each column's
+current value as an expression over the input columns — and per-row
+control state: ``dropped`` (dropEvent, dropIfError; filtered at the
+end), ``halted`` (return() or an action failing under the default
+policy: the rest of the interceptor is skipped and the event forwards
+as-is, actions.go:51-66) and the open if/else branch. ``halted`` ends
+only its own interceptor — Intercept still invokes the next one
+(transformer.go:85-95) — so it resets at every interceptor boundary.
+A write under live state is ``CASE WHEN state THEN new ELSE old END``.
 
-* ``_dropped``  — set by dropEvent(); rows filtered at the end
-* ``_returned`` — set by return(); gates every later action via
-  ``F.when`` so short-circuit semantics hold per row
-* ``_errored``  — set when an action fails without ignoreError /
-  dropIfError: the remaining program is skipped for that row and the
-  event is forwarded as-is (Actions.Exec aborts on the first error,
-  actions.go:51-66; Intercept still invokes, transformer.go:85-95)
+Expensive steps (regex, grok, jsonDecode) are kernels, computed once
+per row in one ``inline(array(struct(...)))`` Generate and read back as
+plain attributes (Catalyst would otherwise re-inline them into every
+reference). Each slot runs only on the rows its source and program
+state reach: ``CASE WHEN source = name AND <state> THEN kernel END``. A
+kernel reading another kernel's output goes into a second Generate.
 
-No per-row Python executes: every action is a Catalyst expression
-(regex/split/cast/concat/...), so the program stays inside whole-stage
-codegen.
+Per-source programs (``belongTo``) compile without gates on forks of
+one context; :func:`dispatch` merges them so each column is written
+once: ``CASE source WHEN a THEN value_a ... ELSE old END``.
 
-Program shape (mirrors the YAML in the reference's example configs,
-pkg/interceptor/transformer/example/pipeline.yml):
+Program shape (pkg/interceptor/transformer/example/pipeline.yml):
 
     [
       {"action": "regex(body)", "pattern": "(?<ip>\\S+) ..."},
@@ -36,15 +42,17 @@ pkg/interceptor/transformer/example/pipeline.yml):
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loggie_spark.expr import compile_condition, parse_call
-from loggie_spark.fieldpath import col_for_path, flat_name, parse_path
+from loggie_spark.fieldpath import flat_name, parse_path
 from loggie_spark.patterns import (
     compile_pattern,
     expand_grok,
@@ -53,10 +61,11 @@ from loggie_spark.patterns import (
     normalize_named_groups,
 )
 
-DROPPED = "_dropped"
-RETURNED = "_returned"
-ERRORED = "_errored"
-CONTROL_COLS = (DROPPED, RETURNED, ERRORED)
+# A value heavier than this (expression size in column reads) is
+# computed once in the Generate instead of inlined into every reader,
+# so a program that keeps reading what it wrote cannot grow its
+# expressions exponentially.
+_PIN_WEIGHT = 64
 
 _NAMED_GROUP_ANY = re.compile(r"\(\?P?<([a-zA-Z][a-zA-Z0-9_]*)>")
 
@@ -66,103 +75,256 @@ def _java_pattern(pattern: str) -> str:
     return _NAMED_GROUP_ANY.sub(r"(?<\1>", normalize_named_groups(pattern))
 
 
-@dataclass
+class _Val(NamedTuple):
+    """A symbolic value: its expression, the Generate depth it reads
+    (0 = input columns only) and its size in column reads."""
+
+    expr: Column
+    level: int = 0
+    weight: int = 1
+
+
+def _and(parts: list[Column]) -> Column | None:
+    return functools.reduce(operator.and_, parts) if parts else None
+
+
+class Plan:
+    """One compile over one input frame: the kernels its Generates
+    compute, and a frame to probe expression types on."""
+
+    def __init__(self, df: DataFrame, time_col: Column | None = None, env: dict | None = None):
+        self.df = self.probe = df  # probe: df + every kernel as a column
+        self.kernels: list[tuple[str, Column, int]] = []  # (name, slot, depth)
+        self.time_col, self.env = time_col, env
+
+    def root(self) -> _Ctx:
+        """A context over every row, each column its input value."""
+        quoted = {c: "`" + c.replace("`", "``") + "`" for c in self.df.columns}
+        return _Ctx(self, {c: _Val(F.col(q)) for c, q in quoted.items()})
+
+    def kernel(self, expr: Column, gate: Column | None, level: int) -> Column:
+        name = f"__k{len(self.kernels)}"
+        self.kernels.append((name, expr if gate is None else F.when(gate, expr), level))
+        self.probe = self.probe.withColumn(name, expr)
+        return F.col(name)
+
+    def dtypes(self, *cols: Column) -> list:
+        probe = self.probe.select(*[c.alias(f"_{i}") for i, c in enumerate(cols)])
+        return [f.dataType for f in probe.schema.fields]
+
+    def frame(self, ctx: _Ctx) -> DataFrame:
+        """One Generate per kernel depth, then every column once;
+        dropped rows removed."""
+        df = self.df
+        for level in sorted({lv for _, _, lv in self.kernels}):
+            slots = [slot.alias(name) for name, slot, lv in self.kernels if lv == level]
+            df = df.select("*", F.inline(F.array(F.struct(*slots))))
+        if ctx.dropped is not None:
+            df = df.filter(~ctx.dropped.expr)
+        return df.select(*[v.expr.alias(n) for n, v in ctx.cols.items()])
+
+
 class _Ctx:
-    """Mutable compile state threaded through the program."""
+    """Compile state of one program over the rows ``selector`` picks
+    (None = every row): the symbolic row and its control state."""
 
-    df: DataFrame
-    gate: Column  # row must satisfy this for the action to apply
-    gate_is_total: bool  # True ⇒ gate is literally "not returned/dropped yet"
-    program_has_control: bool = False
-    time_col: Column | None = None  # deterministic ${+...} rendering
-    env: dict[str, str] | None = None
-    seq: int = 0  # unique-temp-column counter
+    def __init__(self, plan: Plan, cols: dict[str, _Val], selector=None, dropped=None):
+        self.plan = plan
+        self.cols = cols  # output order
+        self.selector: Column | None = selector
+        self.dropped: _Val | None = dropped
+        self.halted: _Val | None = None
+        self.branch: _Val | None = None
+        self.step()
 
-    def next_tmp(self, tag: str) -> str:
-        self.seq += 1
-        return f"__{tag}_{self.seq}"
+    def fork(self, selector: Column) -> _Ctx:
+        return _Ctx(self.plan, dict(self.cols), selector, self.dropped)
 
-    def existing(self, name: str) -> Column | None:
-        return F.col(name) if name in self.df.columns else None
+    def step(self) -> None:
+        """Start a step: what it writes depends on what it reads."""
+        self._lvl, self._wt = 0, 0
+
+    def end_interceptor(self) -> None:
+        """return() and failed actions end only their own interceptor."""
+        self.halted = self.branch = None
+        self.step()
+
+    @property
+    def unconditional(self) -> bool:
+        return self.halted is None and self.branch is None
+
+    # -- reads ---------------------------------------------------------------
+
+    def _use(self, v: _Val) -> Column:
+        self._lvl, self._wt = max(self._lvl, v.level), self._wt + v.weight
+        return v.expr
+
+    def _made(self, expr: Column) -> _Val:
+        return _Val(expr, self._lvl, self._wt + 1)
+
+    def col(self, name: str) -> Column:
+        """Current value of column ``name``; a string NULL when the row
+        has no such column (eventops reads a missing key as empty)."""
+        v = self.cols.get(name)
+        if v is None:
+            return F.lit(None).cast("string")
+        if v.weight > _PIN_WEIGHT:
+            attr = self.plan.kernel(v.expr, self.selector, v.level + 1)
+            v = self.cols[name] = _Val(attr, v.level + 1)
+        return self._use(v)
+
+    def read(self, path: str) -> Column:
+        """Resolve a dotted field path (fieldpath DSL) on the current row."""
+        segs = parse_path(path)
+        if not segs:
+            raise ValueError(f"empty field path: {path!r}")
+        if segs[0] not in self.cols:
+            return F.lit(None).cast("string")
+        return functools.reduce(Column.getItem, segs[1:], self.col(segs[0]))
+
+    def kernel(self, expr: Column) -> Column:
+        """``expr`` computed once per row in the Generate, on the rows
+        this step reaches as far as state at its inputs' depth tells."""
+        level = self._lvl
+        parts = [] if self.selector is None else [self.selector]
+        for v, keep in ((self.dropped, False), (self.halted, False), (self.branch, True)):
+            if v is not None and v.level <= level:
+                parts.append(v.expr if keep else ~v.expr)
+        self._lvl, self._wt = level + 1, self._wt + 1
+        return self.plan.kernel(expr, _and(parts), level + 1)
+
+    # -- writes --------------------------------------------------------------
+
+    def _gate(self) -> Column | None:
+        """Rows a write at this point applies to (None = all)."""
+        parts = [] if self.halted is None else [~self._use(self.halted)]
+        return _and(parts + ([] if self.branch is None else [self._use(self.branch)]))
 
     def set_col(self, name: str, value: Column) -> None:
-        old = self.existing(name)
-        if self.gate_is_total and not self.program_has_control:
-            self.df = self.df.withColumn(name, value)
-        else:
-            if old is not None:
-                # Type-changing overwrite (strconv/timestamp): ungated
-                # rows keep the old value coerced with try_cast — the
-                # implicit ANSI Cast the CaseWhen would insert throws on
-                # malformed rows that the gate is excluding on purpose.
-                old_t = self.df.schema[name].dataType
-                new_t = self.df.select(value.alias("_probe")).schema[0].dataType
-                fallback = old if old_t == new_t else old.try_cast(new_t)
-            else:
-                fallback = F.lit(None)
-            self.df = self.df.withColumn(name, F.when(self.gate, value).otherwise(fallback))
+        gate = self._gate()
+        if gate is not None:
+            fallback = F.lit(None)
+            if name in self.cols:
+                # Type-changing overwrite (strconv/timestamp): rows the
+                # gate excludes keep the old value through try_cast; the
+                # implicit ANSI cast CASE would insert throws on them.
+                # (Catalyst drops a try_cast to the same type.)
+                fallback = self.col(name).try_cast(self.plan.dtypes(value)[0])
+            value = F.when(gate, value).otherwise(fallback)
+        self.cols[name] = self._made(value)
 
     def del_col(self, name: str) -> None:
-        if name not in self.df.columns:
+        if name not in self.cols:
             return
-        if self.gate_is_total and not self.program_has_control:
-            self.df = self.df.drop(name)
+        gate = self._gate()
+        if gate is None:
+            del self.cols[name]
         else:
-            self.df = self.df.withColumn(
-                name, F.when(self.gate, F.lit(None)).otherwise(F.col(name))
-            )
+            self.cols[name] = self._made(F.when(gate, F.lit(None)).otherwise(self.col(name)))
+
+    def _flag(self, old: _Val | None, hit: Column) -> _Val:
+        return self._made(hit if old is None else self._use(old) | hit)
 
     def apply_error_policy(self, failed: Column, extra: dict) -> None:
-        """Per-action error policy (action.go:110-128):
+        """Per-action error policy (action.go:110-128): ``dropIfError``
+        drops failing rows (ErrorDropEvent); ``ignoreError`` swallows the
+        failure; by default the rest of the program is skipped for that
+        row (Actions.Exec returns the error, actions.go:56-63)."""
+        drop = extra.get("dropIfError")
+        if extra.get("ignoreError") and not drop:
+            return
+        hit = F.coalesce(failed, F.lit(False))
+        if self.branch is not None:
+            hit = self._use(self.branch) & hit
+        if not drop:
+            self.halted = self._flag(self.halted, hit)
+            return
+        if self.halted is not None:
+            hit = ~self._use(self.halted) & hit
+        self.dropped = self._flag(self.dropped, hit)
 
-        * ``dropIfError``  — failing rows are dropped (ErrorDropEvent);
-        * ``ignoreError``  — failure swallowed, program continues;
-        * default          — the remaining program is SKIPPED for that
-          row (Actions.Exec returns the error, actions.go:56-63) and
-          the event forwards as-is — ``_errored`` gates later steps.
-        """
-        hit = self.gate & F.coalesce(failed, F.lit(False))
-        if extra.get("dropIfError"):
-            self.df = self.df.withColumn(DROPPED, F.col(DROPPED) | hit)
-        elif not extra.get("ignoreError"):
-            self.df = self.df.withColumn(ERRORED, F.col(ERRORED) | hit)
-            # Errored rows SURVIVE, so later writes must be gated off
-            # them — force the conditional write path from here on.
-            self.program_has_control = True
+    # -- programs ------------------------------------------------------------
+
+    def run(self, steps: list[dict]) -> None:
+        """Compile one interceptor's program onto this context."""
+        for step in steps:
+            if "if" not in step:
+                self._one(step)
+                continue
+            # A condition over a missing/NULL field is NULL in SQL but
+            # false in the reference's eventops (GetString → ""), so
+            # coalesce. Evaluated once, before either branch writes.
+            self.step()
+            cond = compile_condition(step["if"], self.read)
+            cond = self._made(F.coalesce(cond, F.lit(False)))
+            for sub in step.get("then") or []:
+                self.branch = cond
+                self._one(sub)
+            for sub in step.get("else") or []:
+                self.branch = cond._replace(expr=~cond.expr)
+                self._one(sub)
+            self.branch = None
+
+    def _one(self, step: dict) -> None:
+        name, args = parse_call(step["action"])
+        if name not in _ACTIONS:
+            raise KeyError(f"unknown action: {name}")
+        self.step()
+        _ACTIONS[name](self, args, {k: v for k, v in step.items() if k != "action"})
 
 
-def _materialize(
-    ctx: _Ctx,
-    cols: dict[str, Column],
-    tag: str,
-    miss: dict[str, Column] | None = None,
-) -> tuple[dict[str, Column], list[str]]:
-    """Evaluate ``cols`` once per row behind an inline() Generate
-    barrier, gated on ctx.gate (lazy CaseWhen — ungated rows never run
-    the computation). Returns (attribute refs, temp names to drop).
+def _case(arms: list[tuple[Column, Column]], default: Column | None) -> Column:
+    expr = F.when(*arms[0])
+    for selector, value in arms[1:]:
+        expr = expr.when(selector, value)
+    return expr if default is None else expr.otherwise(default)
 
-    Catalyst's CollapseProject re-inlines expressions into every
-    downstream reference; for expensive parses (regex/from_json) that
-    multiplies work by the reference count. Generate output is plain
-    attributes, free to reference any number of times.
 
-    ``miss`` supplies the typed per-field value for ungated rows
-    (default: string null).
-    """
-    prefix = ctx.next_tmp(tag)
-    names = {k: f"{prefix}_{k}" for k in cols}
-    hit = F.struct(*[v.alias(names[k]) for k, v in cols.items()])
-    miss = miss or {}
-    miss_struct = F.struct(
-        *[
-            miss.get(k, F.lit(None).cast("string")).alias(names[k])
-            for k in cols
-        ]
-    )
-    gate = ctx.gate if not (ctx.gate_is_total and not ctx.program_has_control) else None
-    arr = F.array(hit if gate is None else F.when(gate, hit).otherwise(miss_struct))
-    ctx.df = ctx.df.select("*", F.inline(arr))
-    return {k: F.col(n) for k, n in names.items()}, list(names.values())
+def _merged(expr: Column, vals: list[_Val]) -> _Val:
+    return _Val(expr, max(v.level for v in vals), sum(v.weight for v in vals) + 1)
+
+
+def dispatch(base: _Ctx, branches: list[_Ctx]) -> _Ctx:
+    """Merge per-source contexts forked from ``base`` into one context
+    over every row. A column a source changed becomes ``CASE WHEN
+    <its selector> THEN value ... ELSE <base value or NULL> END`` with
+    one arm per source that changed it; a source that deleted it reads
+    NULL. The last source writing a column sets its type and the other
+    values are try_cast to it, as sequential gated writes did."""
+    names = list(base.cols)
+    for b in branches:
+        names += [c for c in b.cols if c not in names]
+    merge = {}  # column → (arms, its values: writers in order, then the base value)
+    for c in names:
+        default = base.cols.get(c)
+        arms = [(b.selector, b.cols.get(c)) for b in branches if b.cols.get(c) is not default]
+        writers = [v for _, v in arms if v is not None]
+        if arms:
+            merge[c] = (arms, writers + ([] if default is None else [default]), len(writers))
+    probe = [v.expr for _, vals, _ in merge.values() if len(vals) > 1 for v in vals]
+    types = iter(base.plan.dtypes(*probe) if probe else ())
+
+    out = _Ctx(base.plan, {c: base.cols.get(c) for c in names})
+    for c, (arms, vals, n_writers) in merge.items():
+        typed = {id(v): next(types) for v in vals} if len(vals) > 1 else {}
+        target = typed.get(id(vals[max(n_writers - 1, 0)]))  # last writer, else the base
+
+        def cast(v: _Val | None) -> Column:
+            if v is None:
+                return F.lit(None)
+            return v.expr if typed.get(id(v)) == target else v.expr.try_cast(target)
+
+        default = base.cols.get(c)
+        rest = None if default is None else cast(default)
+        out.cols[c] = _merged(_case([(sel, cast(v)) for sel, v in arms], rest), vals)
+
+    out.dropped = base.dropped
+    flags = [(b.selector, b.dropped) for b in branches if b.dropped is not base.dropped]
+    if flags:
+        rest = F.lit(False) if base.dropped is None else base.dropped.expr
+        cases = [(sel, v.expr) for sel, v in flags]
+        out.dropped = _merged(_case(cases, rest), [v for _, v in flags])
+    return out
 
 
 ActionFn = Callable[[_Ctx, list[str], dict], None]
@@ -205,7 +367,7 @@ def _set_bool(ctx: _Ctx, args: list[str], extra: dict) -> None:
 
 @register_action("copy")
 def _copy(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.set_col(flat_name(args[1]), col_for_path(args[0]))
+    ctx.set_col(flat_name(args[1]), ctx.read(args[0]))
 
 
 @register_action("move")
@@ -215,7 +377,7 @@ def _move(ctx: _Ctx, args: list[str], extra: dict) -> None:
     if dst == "_root":  # move.go:53-61 — to=_root splices under root
         _under_root(ctx, [src], extra)
         return
-    ctx.set_col(flat_name(dst), col_for_path(src))
+    ctx.set_col(flat_name(dst), ctx.read(src))
     ctx.del_col(flat_name(src))
 
 
@@ -229,33 +391,32 @@ def _del(ctx: _Ctx, args: list[str], extra: dict) -> None:
 def _under_root(ctx: _Ctx, args: list[str], extra: dict) -> None:
     """Splice a struct column's fields to root (underroot.go:51-54)."""
     name = args[0]
-    if not (ctx.gate_is_total and not ctx.program_has_control):
+    if not ctx.unconditional:
         raise ValueError("underRoot inside a conditional is not supported")
     src = flat_name(name)
-    schema = dict(zip(ctx.df.columns, [f.dataType for f in ctx.df.schema.fields]))
-    dtype = schema.get(src)
-    if dtype is None:
+    if src not in ctx.cols:
         return
     from pyspark.sql.types import StructType
 
-    if isinstance(dtype, StructType):
-        for f_ in dtype.fields:
-            ctx.df = ctx.df.withColumn(f_.name, F.col(src).getField(f_.name))
-        ctx.df = ctx.df.drop(src)
-    else:
+    value = ctx.col(src)
+    dtype = ctx.plan.dtypes(value)[0]
+    if not isinstance(dtype, StructType):
         raise ValueError(f"underRoot target {name!r} is not a struct column")
+    for f_ in dtype.fields:
+        ctx.set_col(f_.name, value.getField(f_.name))
+    ctx.del_col(src)
 
 
 @register_action("dropEvent")
 def _drop_event(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.df = ctx.df.withColumn(DROPPED, F.col(DROPPED) | ctx.gate)
-    ctx.program_has_control = True
+    gate = ctx._gate()
+    ctx.dropped = ctx._flag(ctx.dropped, F.lit(True) if gate is None else gate)
 
 
 @register_action("return")
 def _return(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.df = ctx.df.withColumn(RETURNED, F.col(RETURNED) | ctx.gate)
-    ctx.program_has_control = True
+    hit = F.lit(True) if ctx.branch is None else ctx._use(ctx.branch)
+    ctx.halted = ctx._flag(ctx.halted, hit)
 
 
 @register_action("print")
@@ -288,11 +449,11 @@ def _add_meta(ctx: _Ctx, args: list[str], extra: dict) -> None:
     target = args[0] if args else extra.get("target", "meta")
     fields: list[Column] = []
     for col_name, meta_key in _META_COLUMN_KEYS:
-        if col_name in ctx.df.columns:
-            fields.append(F.col(col_name).alias(meta_key))
-    if "pipelineName" in extra and "pipeline" not in ctx.df.columns:
+        if col_name in ctx.cols:
+            fields.append(ctx.col(col_name).alias(meta_key))
+    if "pipelineName" in extra and "pipeline" not in ctx.cols:
         fields.append(F.lit(extra["pipelineName"]).alias("systemPipelineName"))
-    ptime = ctx.time_col if ctx.time_col is not None else F.current_timestamp()
+    ptime = ctx.plan.time_col if ctx.plan.time_col is not None else F.current_timestamp()
     fields.append(ptime.alias("systemProductTime"))
     ctx.set_col(flat_name(target), F.struct(*fields))
 
@@ -319,7 +480,7 @@ def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict)
     FindStringSubmatch (regex.go:70-116); match success is detected by
     the split arity.
     """
-    src = col_for_path(key).cast("string")
+    src = ctx.read(key).cast("string")
     groups = named_groups(pattern)
     jpat = _java_pattern(pattern)
     n = len(groups)
@@ -336,25 +497,12 @@ def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict)
 
     parts = F.split(F.regexp_replace(src, wrapped, repl), _XSEP)
 
-    # Materialize the split ARRAY once behind an inline() Generate
-    # barrier. Without it, Catalyst's collapsed projections re-evaluate
-    # the regex for every downstream reference (each group column, each
-    # sink struct in the fan-out) — measured 8-50× regex re-runs per
-    # row on the flagship. Materializing the array (not one struct
-    # field per group) matters too: struct fields inside a Generate get
-    # no subexpression elimination, so n groups would still run the
-    # automaton n+1 times per row (measured 4.9 s → 0.9 s on
-    # pl_grok_parse and 3.6 s → 0.8 s on pl_regex_route_metrics at
-    # sf0.1 from this change alone). Generate output is a plain
-    # attribute; the per-group F.get()s on it are free.
-    attrs, temps = _materialize(
-        ctx,
-        {"__parts": parts},
-        "rx",
-        miss={"__parts": F.lit(None).cast("array<string>")},
-    )
-    parr = attrs["__parts"]
-    # coalesce: a NULL body (or an ungated row's NULL array) yields
+    # The split ARRAY is the kernel: inlined, the regex re-ran for every
+    # reference (8-50× per row on the flagship), and one struct field per
+    # group would still run it n+1 times (no subexpression elimination
+    # inside a Generate; 4.9 s → 0.9 s on pl_grok_parse at sf0.1).
+    parr = ctx.kernel(parts)
+    # coalesce: a NULL body (or a row the kernel skipped) yields
     # NULL size/get (Spark 4 ANSI), but the reference's GetString("")
     # → no-match → action error semantics need a definite False here.
     matched = F.coalesce(
@@ -378,7 +526,6 @@ def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict)
     if extra.get("deleteSrc", False) and key != "body":
         ctx.del_col(flat_name(key))
     ctx.apply_error_policy(~matched, extra)
-    ctx.df = ctx.df.drop(*temps)
 
 
 @register_action("regex")
@@ -414,7 +561,7 @@ def _split(ctx: _Ctx, args: list[str], extra: dict) -> None:
     sep: str = extra["separator"]
     keys: list[str] = extra["keys"]
     max_n: int = extra.get("max", -1)
-    src = col_for_path(key).cast("string")
+    src = ctx.read(key).cast("string")
     # Java split limit: -1 = no limit; loggie max = number of pieces.
     parts = F.split(src, re.escape(sep), max_n if max_n > 0 else -1)
     failed = F.size(parts) != len(keys)
@@ -444,44 +591,32 @@ def _json_decode(ctx: _Ctx, args: list[str], extra: dict) -> None:
     """
     key = args[0]
     to = args[1] if len(args) > 1 else None
-    src = col_for_path(key).cast("string")
+    src = ctx.read(key).cast("string")
     schema = extra.get("schema")
 
     if schema:
         import pyspark.sql.types as T
 
         parsed = F.from_json(src, schema)
-        struct_t = T._parse_datatype_string(schema)
-        field_names = [f_.name for f_ in struct_t.fields]
-        miss_parsed = F.lit(None).cast(struct_t)
+        field_names = [f_.name for f_ in T._parse_datatype_string(schema).fields]
         getter = lambda p, n: p.getField(n)  # noqa: E731
     else:
         parsed = F.from_json(src, "map<string,string>")
         field_names = extra.get("fields") or []
-        miss_parsed = F.lit(None).cast("map<string,string>")
         getter = lambda p, n: p.getItem(n)  # noqa: E731
         if to is None and not field_names:
             raise ValueError("schemaless jsonDecode to root needs a 'fields' list")
 
+    # The PARSED VALUE is the kernel: one from_json per row, not one per
+    # lifted field or reader (same lesson as _apply_regex's array).
+    pattr = ctx.kernel(parsed)
+    failed = pattr.isNull() & src.isNotNull()
+    ctx.apply_error_policy(failed, extra)
     if to:
-        failed = parsed.isNull() & src.isNotNull()
-        ctx.apply_error_policy(failed, extra)
-        ctx.set_col(flat_name(to), parsed)
+        ctx.set_col(flat_name(to), pattr)
     else:
-        # One from_json per row via the Generate barrier, not one per
-        # lifted field: materialize the PARSED VALUE itself (struct
-        # fields inside the Generate get no subexpression elimination,
-        # so one struct field per lifted key would still run from_json
-        # n+1 times — same lesson as _apply_regex's array).
-        attrs, temps = _materialize(
-            ctx, {"__parsed": parsed}, "js", miss={"__parsed": miss_parsed}
-        )
-        pattr = attrs["__parsed"]
-        failed = pattr.isNull() & src.isNotNull()
-        ctx.apply_error_policy(failed, extra)
         for n in field_names:
             ctx.set_col(flat_name(n), getter(pattr, n))
-        ctx.df = ctx.df.drop(*temps)
 
     if extra.get("deleteSrc", True) and key != "body":
         ctx.del_col(flat_name(key))
@@ -491,7 +626,7 @@ def _json_decode(ctx: _Ctx, args: list[str], extra: dict) -> None:
 def _json_encode(ctx: _Ctx, args: list[str], extra: dict) -> None:
     key = args[0]
     to = args[1] if len(args) > 1 else key
-    ctx.set_col(flat_name(to), F.to_json(col_for_path(key)))
+    ctx.set_col(flat_name(to), F.to_json(ctx.read(key)))
 
 
 # --------------------------------------------------------------------------
@@ -504,7 +639,7 @@ def _replace(ctx: _Ctx, args: list[str], extra: dict) -> None:
     key = args[0]
     old, new = extra["old"], extra["new"]
     max_n = int(extra.get("max", -1))
-    src = col_for_path(key).cast("string")
+    src = ctx.read(key).cast("string")
     if max_n < 0:
         ctx.set_col(flat_name(key), F.replace(src, F.lit(old), F.lit(new)))
     else:
@@ -518,7 +653,7 @@ def _replace(ctx: _Ctx, args: list[str], extra: dict) -> None:
 @register_action("replaceRegex")
 def _replace_regex(ctx: _Ctx, args: list[str], extra: dict) -> None:
     key = args[0]
-    src = col_for_path(key).cast("string")
+    src = ctx.read(key).cast("string")
     ctx.set_col(flat_name(key), F.regexp_replace(src, extra["expression"], extra["replace"]))
 
 
@@ -538,7 +673,7 @@ def _strconv(ctx: _Ctx, args: list[str], extra: dict) -> None:
     # y/yes/n/no for bools (Go ParseBool doesn't).
     key, typ = args[0], args[1]
     spark_t = {"bool": "boolean", "int": "long", "float": "double"}[typ]
-    src = col_for_path(key)
+    src = ctx.read(key)
     cast = src.try_cast(spark_t)  # ANSI-safe: malformed → null → error policy
     if extra.get("keepOriginal"):
         from loggie_spark.functions.gofmt import go_float_str
@@ -554,9 +689,7 @@ def _strconv(ctx: _Ctx, args: list[str], extra: dict) -> None:
         ctx.set_col(flat_name(key), F.coalesce(rendered, src.cast("string")))
         return
     failed = cast.isNull() & src.isNotNull()
-    # Policy must be applied BEFORE the overwrite: Column exprs resolve
-    # by name at use-time, so after set_col 'failed' would see the new
-    # (already-cast) column and never fire.
+    # Policy before the overwrite: the overwrite is gated by it.
     ctx.apply_error_policy(failed, extra)
     ctx.set_col(flat_name(key), cast)
 
@@ -570,8 +703,8 @@ def _to_str(ctx: _Ctx, args: list[str], extra: dict) -> None:
 
     from loggie_spark.functions.gofmt import go_float_str
 
-    src = col_for_path(args[0])
-    dtype = ctx.df.select(src.alias("_probe")).schema[0].dataType
+    src = ctx.read(args[0])
+    dtype = ctx.plan.dtypes(src)[0]
     if isinstance(dtype, (DoubleType, FloatType)):
         out = go_float_str(src)
     else:
@@ -596,7 +729,7 @@ def _timestamp(ctx: _Ctx, args: list[str], extra: dict) -> None:
     to_layout = extra.get("toLayout", "")
     from_loc = extra.get("fromLocation", "")
     to_loc = extra.get("toLocation", "")
-    src = col_for_path(key)
+    src = ctx.read(key)
 
     if from_layout == "unix":
         ts = F.timestamp_seconds(src.try_cast("long"))
@@ -611,7 +744,7 @@ def _timestamp(ctx: _Ctx, args: list[str], extra: dict) -> None:
             ts = F.to_utc_timestamp(ts, from_loc)
 
     failed = ts.isNull() & src.isNotNull()
-    ctx.apply_error_policy(failed, extra)  # before overwrite (name-resolution)
+    ctx.apply_error_policy(failed, extra)  # before the overwrite it gates
     if to_layout == "unix":
         out = ts.cast("long")
     elif to_layout == "unix_ms":
@@ -626,23 +759,17 @@ def _timestamp(ctx: _Ctx, args: list[str], extra: dict) -> None:
 def _fmt(ctx: _Ctx, args: list[str], extra: dict) -> None:
     ctx.set_col(
         flat_name(args[0]),
-        compile_pattern(extra["pattern"], time_col=ctx.time_col, env=ctx.env),
+        compile_pattern(extra["pattern"], ctx.plan.time_col, ctx.plan.env, path=ctx.read),
     )
 
 
 @register_action("fmtKey")
 def _fmt_key(ctx: _Ctx, args: list[str], extra: dict) -> None:
     # fmtkey.go:83-101 — rename keys matching regex; plan-time rename.
-    if not (ctx.gate_is_total and not ctx.program_has_control):
+    if not ctx.unconditional:
         raise ValueError("fmtKey inside a conditional is not supported")
     pat = re.compile(extra["regex"])
-    repl = extra["replace"]
-    for c in list(ctx.df.columns):
-        if c in CONTROL_COLS:
-            continue
-        new = pat.sub(repl, c)
-        if new != c:
-            ctx.df = ctx.df.withColumnRenamed(c, new)
+    ctx.cols = {pat.sub(extra["replace"], c): v for c, v in ctx.cols.items()}
 
 
 # --------------------------------------------------------------------------
@@ -650,72 +777,15 @@ def _fmt_key(ctx: _Ctx, args: list[str], extra: dict) -> None:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class CompiledProgram:
-    """Result of compiling an action program against a DataFrame."""
-
-    df: DataFrame
-    dropped_col: str = DROPPED
-
-    def finish(self, keep_control_cols: bool = False) -> DataFrame:
-        out = self.df.filter(~F.col(DROPPED))
-        if not keep_control_cols:
-            out = out.drop(*CONTROL_COLS)
-        return out
-
-
 def apply_program(
     df: DataFrame,
     program: list[dict],
     time_col: Column | None = None,
     env: dict[str, str] | None = None,
-) -> CompiledProgram:
-    """Compile + attach an action program to ``df``.
-
-    Returns a :class:`CompiledProgram`; call ``.finish()`` to filter
-    dropped rows and strip control columns.
-    """
-    for c in CONTROL_COLS:
-        df = df.withColumn(c, F.lit(False))
-    ctx = _Ctx(
-        df=df,
-        gate=~F.col(DROPPED) & ~F.col(RETURNED) & ~F.col(ERRORED),
-        gate_is_total=True,
-        time_col=time_col,
-        env=env,
-    )
-    _apply_steps(ctx, program, extra_gate=None)
-    return CompiledProgram(df=ctx.df)
-
-
-def _apply_steps(ctx: _Ctx, steps: list[dict], extra_gate: Column | None) -> None:
-    for step in steps:
-        if "if" in step:
-            # Three-valued logic guard: a condition over a missing/null
-            # field is NULL in SQL, but the reference's eventops treats
-            # it as false (GetString on a missing key → ""). Without
-            # this, NULL gates poison _dropped/_returned and silently
-            # drop unparsed rows.
-            cond = F.coalesce(compile_condition(step["if"]), F.lit(False))
-            then_gate = cond if extra_gate is None else (extra_gate & cond)
-            else_gate = ~cond if extra_gate is None else (extra_gate & ~cond)
-            # Conditionals introduce partial gates for everything below.
-            ctx.program_has_control = True
-            for sub in step.get("then", []) or []:
-                _apply_one(ctx, sub, then_gate)
-            for sub in step.get("else", []) or []:
-                _apply_one(ctx, sub, else_gate)
-        else:
-            _apply_one(ctx, step, extra_gate)
-
-
-def _apply_one(ctx: _Ctx, step: dict, extra_gate: Column | None) -> None:
-    call = step["action"]
-    name, args = parse_call(call)
-    if name not in _ACTIONS:
-        raise KeyError(f"unknown action: {name}")
-    extra = {k: v for k, v in step.items() if k != "action"}
-    base_gate = ~F.col(DROPPED) & ~F.col(RETURNED) & ~F.col(ERRORED)
-    ctx.gate = base_gate if extra_gate is None else (base_gate & extra_gate)
-    ctx.gate_is_total = extra_gate is None
-    _ACTIONS[name](ctx, args, extra)
+) -> DataFrame:
+    """Compile an action program onto ``df`` (every row runs it);
+    dropped rows are removed."""
+    plan = Plan(df, time_col=time_col, env=env)
+    ctx = plan.root()
+    ctx.run(program)
+    return plan.frame(ctx)

@@ -1,9 +1,9 @@
-"""Enrichment stage — constants and broadcast-join lookups.
+"""Enrichment stage — the schema interceptor and broadcast-join lookups.
 
-Covers the reference's per-source static field merge
-(pkg/pipeline/pipeline.go:1054-1123: ``fields``, ``fieldsUnderKey``)
-and addK8sMeta's indexed pod lookup
-(pkg/interceptor/addk8smeta/interceptor.go:88-121).
+Covers addK8sMeta's indexed pod lookup
+(pkg/interceptor/addk8smeta/interceptor.go:88-121). The per-source
+static fields (pkg/pipeline/pipeline.go:1054-1123) are literals in the
+pipeline's per-source dispatch (pipeline.py), not a join.
 
 addK8sMeta is the one true join in loggie: extract keys from a
 pattern-shaped field, look them up in a local index, splice workload
@@ -17,21 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def add_static_fields(
-    df: DataFrame, fields: dict[str, object], under_key: str | None = None
-) -> DataFrame:
-    """Per-source constant fields (pipeline.go:1098-1123). With
-    ``under_key`` the constants nest in one struct column."""
-    if under_key:
-        return df.withColumn(
-            under_key,
-            F.struct(*[F.lit(v).alias(k) for k, v in fields.items()]),
-        )
-    for k, v in fields.items():
-        df = df.withColumn(k, F.lit(v))
-    return df
 
 
 def apply_schema_interceptor(

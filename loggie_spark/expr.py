@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from loggie_spark.fieldpath import col_for_path
 
-ConditionFn = Callable[[list[str]], Column]
+ConditionFn = Callable[[list[str], Callable[[str], Column]], Column]
 
 _CONDITIONS: dict[str, ConditionFn] = {}
 
@@ -39,44 +39,44 @@ def register_condition(name: str) -> Callable[[ConditionFn], ConditionFn]:
 
 
 @register_condition("equal")
-def _equal(args: list[str]) -> Column:
+def _equal(args: list[str], path) -> Column:
     # equal.go:53-60 — string compare after byte→string.
-    return col_for_path(args[0]).cast("string") == F.lit(args[1])
+    return path(args[0]).cast("string") == F.lit(args[1])
 
 
 @register_condition("contain")
-def _contain(args: list[str]) -> Column:
-    return col_for_path(args[0]).cast("string").contains(args[1])
+def _contain(args: list[str], path) -> Column:
+    return path(args[0]).cast("string").contains(args[1])
 
 
 @register_condition("exist")
-def _exist(args: list[str]) -> Column:
-    return col_for_path(args[0]).isNotNull()
+def _exist(args: list[str], path) -> Column:
+    return path(args[0]).isNotNull()
 
 
 @register_condition("greater")
-def _greater(args: list[str]) -> Column:
-    return col_for_path(args[0]).try_cast("double") > float(args[1])
+def _greater(args: list[str], path) -> Column:
+    return path(args[0]).try_cast("double") > float(args[1])
 
 
 @register_condition("less")
-def _less(args: list[str]) -> Column:
-    return col_for_path(args[0]).try_cast("double") < float(args[1])
+def _less(args: list[str], path) -> Column:
+    return path(args[0]).try_cast("double") < float(args[1])
 
 
 @register_condition("match")
-def _match(args: list[str]) -> Column:
-    return col_for_path(args[0]).cast("string").rlike(args[1])
+def _match(args: list[str], path) -> Column:
+    return path(args[0]).cast("string").rlike(args[1])
 
 
 @register_condition("oneOf")
-def _one_of(args: list[str]) -> Column:
-    return col_for_path(args[0]).cast("string").isin(*args[1:])
+def _one_of(args: list[str], path) -> Column:
+    return path(args[0]).cast("string").isin(*args[1:])
 
 
 @register_condition("hasPrefix")
-def _has_prefix(args: list[str]) -> Column:
-    return col_for_path(args[0]).cast("string").startswith(args[1])
+def _has_prefix(args: list[str], path) -> Column:
+    return path(args[0]).cast("string").startswith(args[1])
 
 
 # -- parser -----------------------------------------------------------------
@@ -95,8 +95,9 @@ def parse_call(text: str) -> tuple[str, list[str]]:
     return name, args
 
 
-def compile_condition(expr: str) -> Column:
-    """Compile a full condition expression to a boolean Column.
+def compile_condition(expr: str, path: Callable[[str], Column] = col_for_path) -> Column:
+    """Compile a full condition expression to a boolean Column; ``path``
+    resolves field paths (the action compiler passes its symbolic row).
 
     A single connector kind per expression — mixing AND and OR is an
     error, matching conditions.go:116-161 (no parentheses either).
@@ -116,7 +117,7 @@ def compile_condition(expr: str) -> Column:
         name, args = parse_call(part)
         if name not in _CONDITIONS:
             raise KeyError(f"unknown condition: {name}")
-        col = _CONDITIONS[name](args)
+        col = _CONDITIONS[name](args, path)
         cols.append(~col if negate else col)
 
     out = cols[0]

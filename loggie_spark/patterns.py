@@ -244,8 +244,10 @@ def compile_pattern(
     pattern: str,
     time_col: Column | None = None,
     env: dict[str, str] | None = None,
+    path=None,
 ) -> Column:
-    """Compile a ``${...}`` routing pattern into a Column expression.
+    """Compile a ``${...}`` routing pattern into a Column expression;
+    ``path`` resolves field paths (default: fieldpath.col_for_path).
 
     - ``${a.b}``       → header/field path (fieldpath DSL, so
       ``${a.[b.c]}`` bracket-escaped keys resolve like everywhere else)
@@ -262,6 +264,7 @@ def compile_pattern(
     """
     from loggie_spark.fieldpath import col_for_path
 
+    path = path or col_for_path
     env = env if env is not None else dict(os.environ)
     tcol = time_col if time_col is not None else F.current_timestamp()
 
@@ -281,7 +284,7 @@ def compile_pattern(
                 F.coalesce(F.col(k8s_token_column(token)).cast("string"), F.lit(""))
             )
         else:
-            parts.append(col_for_path(token).cast("string"))
+            parts.append(path(token).cast("string"))
         pos = m.end()
     if pos < len(pattern):
         parts.append(F.lit(pattern[pos:]))

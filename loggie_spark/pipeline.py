@@ -4,17 +4,26 @@ metrics, resumable via the checkpoint manifest.
 One loggie pipeline (sources → interceptor chain → queue → sink,
 pkg/pipeline/pipeline.go:242-270) compiles to ONE declarative DataFrame
 program and at most two jobs: the routed write and the (tiny) metrics
-aggregate. There is no per-event loop anywhere — per-source interceptor
-scoping (``belongTo``, pkg/core/interceptor/extension.go:23-35) becomes
-a column gate ``source == name``, and the whole action program runs
-inside whole-stage codegen.
+aggregate. There is no per-event loop anywhere.
+
+Per-source interceptor scoping (``belongTo``,
+pkg/core/interceptor/extension.go:23-35) is one dispatch, not a gate
+on every action: each source's program compiles once, as if it were
+the only one, and a single ``CASE source WHEN …`` per output column
+picks the value of the row's own source (actions.dispatch). Their
+regex/grok/jsonDecode steps share one Generate whose slots run only on
+their source's rows. The per-source static ``fields``
+(fillEventMetaAndHeader, pipeline.go:1054-1123) are literals in that
+same CASE, not a join; the only join left is the ``lookup``
+(addK8sMeta) broadcast enrich. Pipeline-level interceptors (maxbytes,
+normalize, transformer) then compile over every row.
 
 Scale design (100 TB / 1000 executors):
 * the only wide operations are the final write's repartition (salted,
   bounded by route-key cardinality) and the metrics groupBy (map-side
   combined, key space = pipelines × sources × sinks);
-* parse/enrich/route are narrow — filters and projections the optimizer
-  pushes into the scan;
+* parse/enrich/route are narrow — projections and filters over one
+  scan, inside whole-stage codegen;
 * skewed heavy-hitter sources are defused by salting the write
   repartition with ``pmod(xxhash64(doc_id), salt)``;
 * resume prunes completed buckets at the scan (checkpoint.py).
@@ -24,14 +33,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql import Observation
 
-from loggie_spark.actions import CONTROL_COLS, DROPPED, ERRORED, RETURNED, _apply_steps, _Ctx
+from loggie_spark.actions import Plan, _Ctx, dispatch
 from loggie_spark.checkpoint import BUCKET_COL, Manifest, with_bucket
-from loggie_spark.enrich import add_static_fields, broadcast_enrich
+from loggie_spark.enrich import broadcast_enrich
 from loggie_spark.sinks.router import (
     FAILED_COL,
     PKEY_COL,
@@ -85,7 +94,10 @@ def merge_interceptor_list(base: list[dict], defaults: list[dict]) -> list[dict]
 @dataclass
 class SourceSpec:
     """One named source: its parse program + static enrichment
-    (fillEventMetaAndHeader semantics, pipeline.go:1054-1123)."""
+    (fillEventMetaAndHeader semantics, pipeline.go:1054-1123). With
+    more than one source, a row is the event of the source its
+    ``source_col`` names; a row no source names passes through
+    unparsed with NULL fields."""
 
     name: str
     program: list[dict] = field(default_factory=list)
@@ -169,75 +181,40 @@ class Pipeline:
             df = decode_tokens_arrow(df, "tokens", "body", keep_tokens=cfg.keep_tokens)
 
         time_col = F.col(cfg.time_col_name) if cfg.time_col_name else None
+        plan = Plan(df, time_col=time_col)
+        ctx = plan.root()
+        fields = {s.name: s.resolved_fields() for s in cfg.sources}
+        under_keys = {
+            s.fields_under_key for s in cfg.sources if fields[s.name] and s.fields_under_key
+        }
+        if len(under_keys) > 1:
+            raise ValueError(
+                f"sources declare conflicting fields_under_key values: {under_keys}"
+            )
+        under_key = next(iter(under_keys), None)
 
-        # Per-source action programs, gated by source name (belongTo).
-        for c in CONTROL_COLS:
-            df = df.withColumn(c, F.lit(False))
-        ctx = _Ctx(
-            df=df,
-            gate=~F.col(DROPPED) & ~F.col(RETURNED) & ~F.col(ERRORED),
-            gate_is_total=True,
-            time_col=time_col,
-        )
-        multi = len(cfg.sources) > 1
-        for src in cfg.sources:
-            gate = (F.col(cfg.source_col) == src.name) if multi else None
-            if multi:
-                ctx.program_has_control = True
-            _apply_steps(ctx, src.program, extra_gate=gate)
-            self._remap_source_keys(ctx, src, gate, time_col)
+        if len(cfg.sources) == 1:
+            # One source: every row is its event.
+            src = cfg.sources[0]
+            self._source_stage(ctx, src)
+            f = fields[src.name]
+            if f and under_key:
+                ctx.set_col(under_key, F.struct(*[F.lit(v).alias(k) for k, v in f.items()]))
+            else:
+                for k, v in f.items():
+                    ctx.set_col(k, F.lit(v))
+        elif cfg.sources:
+            ctx = self._dispatch(ctx, fields, under_key)
 
         # Pipeline-level interceptors: user-configured merged with the
         # silently-injected defaults (sysconfig/config.go:58-88). metric
         # and retry are structural here — exact per-sink counts and the
         # manifest resume are built into run(); maxbytes and
         # normalize/transformer programs compile into this same pass.
-        for icp in self.cfg.effective_interceptors():
+        for icp in cfg.effective_interceptors():
+            ctx.end_interceptor()
             self._apply_interceptor(ctx, icp)
-
-        out = ctx.df.filter(~F.col(DROPPED)).drop(*CONTROL_COLS)
-
-        # Static per-source constants (+ fieldsFromEnv/fieldsFromPath,
-        # resolved at plan time) → one broadcast dim join when any
-        # source declares fields (constant-folded when single-source).
-        const_fields = {
-            s.name: s.resolved_fields() for s in cfg.sources if s.resolved_fields()
-        }
-        under_keys = {
-            s.fields_under_key
-            for s in cfg.sources
-            if s.resolved_fields() and s.fields_under_key
-        }
-        if len(under_keys) > 1:
-            raise ValueError(
-                f"sources declare conflicting fields_under_key values: {under_keys}"
-            )
-        under_key = next(iter(under_keys)) if under_keys else None
-        if const_fields:
-            if not multi:
-                out = add_static_fields(
-                    out, next(iter(const_fields.values())), under_key=under_key
-                )
-            else:
-                spark = out.sparkSession
-                keys = sorted({k for f in const_fields.values() for k in f})
-                rows = [
-                    tuple([name] + [str(f.get(k, "")) for k in keys])
-                    for name, f in const_fields.items()
-                ]
-                schema = ", ".join(
-                    [f"{cfg.source_col} string"] + [f"{k} string" for k in keys]
-                )
-                dim = spark.createDataFrame(rows, schema)
-                out = broadcast_enrich(out, dim, [cfg.source_col])
-                if under_key:
-                    # Nest the joined field columns into one struct
-                    # (fixed schema across sources: a source that never
-                    # declares a key carries "" there, mirroring the
-                    # dim-join fill above).
-                    out = out.withColumn(
-                        under_key, F.struct(*[F.col(k) for k in keys])
-                    ).drop(*keys)
+        out = plan.frame(ctx)
 
         # Lookup enrichment (addK8sMeta-shaped broadcast join).
         if cfg.lookup is not None:
@@ -253,28 +230,48 @@ class Pipeline:
         )
         return out
 
+    def _dispatch(self, ctx: _Ctx, fields: dict[str, dict], under_key: str | None) -> _Ctx:
+        """belongTo: each source's stage compiles, without gates, on a
+        fork of ``ctx`` that sees only its rows; one ``CASE source``
+        per column merges them. Static fields are string literals in the
+        same CASE (a source declaring some keys carries "" for the rest);
+        rows no source names keep their columns and get NULL fields."""
+        cfg = self.cfg
+        key = F.col(cfg.source_col)
+        keys = sorted({k for f in fields.values() for k in f})
+        branches = []
+        for src in cfg.sources:
+            b = ctx.fork(key == src.name)
+            self._source_stage(b, src)
+            f = fields[src.name]
+            for k in keys if f else ():
+                b.set_col(k, F.lit(str(f.get(k, ""))))
+            branches.append(b)
+        out = dispatch(ctx, branches)
+        if under_key:
+            out.set_col(under_key, F.struct(*[out.col(k).alias(k) for k in keys]))
+            for k in keys:
+                out.del_col(k)
+        return out
+
     @staticmethod
-    def _remap_source_keys(ctx: _Ctx, src: SourceSpec, gate, time_col) -> None:
-        """bodyKey / timestampKey remaps (pipeline.go:1076-1095):
+    def _source_stage(ctx: _Ctx, src: SourceSpec) -> None:
+        """The source's program, then its bodyKey / timestampKey remaps
+        (pipeline.go:1076-1095) on every row it did not drop:
         timestampKey exposes the formatted product time under a header
         key; bodyKey moves the body under a header key and blanks the
         body."""
-        if not (src.body_key or src.timestamp_key):
-            return
-        from loggie_spark.patterns import go_layout_to_jvm
-
-        ctx.gate = (
-            (~F.col(DROPPED) & ~F.col(RETURNED) & ~F.col(ERRORED))
-            if gate is None
-            else (~F.col(DROPPED) & ~F.col(RETURNED) & ~F.col(ERRORED) & gate)
-        )
-        ctx.gate_is_total = gate is None
+        ctx.run(src.program)
+        ctx.end_interceptor()
         if src.timestamp_key:
+            from loggie_spark.patterns import go_layout_to_jvm
+
             layout = src.timestamp_layout or DEFAULT_TS_LAYOUT
-            t = time_col if time_col is not None else F.current_timestamp()
+            t = ctx.plan.time_col if ctx.plan.time_col is not None else F.current_timestamp()
             ctx.set_col(src.timestamp_key, F.date_format(t, go_layout_to_jvm(layout)))
-        if src.body_key and "body" in ctx.df.columns:
-            ctx.set_col(src.body_key, F.col("body"))
+        if src.body_key and "body" in ctx.cols:
+            ctx.step()
+            ctx.set_col(src.body_key, ctx.col("body"))
             ctx.set_col("body", F.lit(""))
 
     @staticmethod
@@ -288,10 +285,8 @@ class Pipeline:
 
             target = icp.get("target", "body")
             max_bytes = int(icp.get("maxBytes", 131072))  # maxbytes/config.go:28
-            if target in ctx.df.columns:
-                ctx.gate = ~F.col(DROPPED) & ~F.col(RETURNED) & ~F.col(ERRORED)
-                ctx.gate_is_total = True
-                ctx.set_col(target, truncate_utf8_bytes(target, max_bytes))
+            if target in ctx.cols:
+                ctx.set_col(target, truncate_utf8_bytes(ctx.col(target), max_bytes))
             return
         if typ in ("normalize", "transformer"):
             from loggie_spark.processors import compile_processors
@@ -301,7 +296,7 @@ class Pipeline:
                 if typ == "normalize"
                 else icp.get("actions", [])
             )
-            _apply_steps(ctx, program, extra_gate=None)
+            ctx.run(program)
             return
         raise KeyError(f"unknown pipeline interceptor type: {typ}")
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from loggie_spark.actions import CompiledProgram, apply_program
+from loggie_spark.actions import apply_program
 
 
 def _regex(p: dict) -> list[dict]:
@@ -149,5 +149,5 @@ def compile_processors(processors: list[dict]) -> list[dict]:
     return program
 
 
-def apply_processors(df: DataFrame, processors: list[dict]) -> CompiledProgram:
+def apply_processors(df: DataFrame, processors: list[dict]) -> DataFrame:
     return apply_program(df, compile_processors(processors))

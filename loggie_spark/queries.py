@@ -110,7 +110,7 @@ def pl_regex_route_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "else": [{"action": "add(topic, common)"}],
         },
     ]
-    routed = apply_program(df, program).finish()
+    routed = apply_program(df, program)
     return routed.groupBy("topic").agg(F.count(F.lit(1)).alias("cnt"))
 
 
@@ -153,7 +153,7 @@ def pl_grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = events.withColumn("body", line)
     out = apply_program(
         df, [{"action": "grok(body)", "match": AUDIT_GROK, "ignoreBlank": False}]
-    ).finish()
+    )
     return out.select("event_id", *list(_GROK_IDX))
 
 
@@ -178,7 +178,7 @@ def pl_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"action": "copy(k, k_int)"},
             {"action": "strconv(k_int, int)"},
         ],
-    ).finish()
+    )
     return out.select("event_id", F.col("k").alias("k_str"), "k_int")
 
 
@@ -205,7 +205,7 @@ def pl_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = apply_program(
         docs.withColumn("head", first3),
         [{"action": "split(head)", "separator": " ", "keys": ["w1", "w2", "w3"]}],
-    ).finish()
+    )
     return out.select("doc_id", "w1", "w2", "w3")
 
 
@@ -240,7 +240,7 @@ def pl_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "toLayout": "2006.01.02",
             },
         ],
-    ).finish()
+    )
     return out.select("event_id", "unix_ts", "day")
 
 
@@ -271,7 +271,7 @@ def pl_timestamp_loc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "toLocation": "Asia/Shanghai",
             }
         ],
-    ).finish()
+    )
     return out.select("event_id", "sh_time")
 
 
@@ -1662,7 +1662,7 @@ def pl_addmeta(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         [{"action": "addMeta(meta)", "pipelineName": "p1"}],
         time_col=F.col("_t"),
-    ).finish()
+    )
     return out.select(
         "doc_id",
         F.col("meta.systemSourceName").alias("src_name"),
@@ -1693,7 +1693,7 @@ def pl_normalize_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"convert": {"convert": [{"from": "k_num", "to": "int"}]}},
             {"add": {"fields": {"site": "eu"}}},
         ],
-    ).finish()
+    )
     return out.select("event_id", "k", "k_num", "site")
 
 
@@ -1767,7 +1767,7 @@ def pl_convert_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             }
         ],
-    ).finish()
+    )
     return out.select("event_id", "i_conv", "f_conv", "b_conv")
 
 
@@ -1961,7 +1961,7 @@ def pl_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"action": "replace(under2)", "old": " ", "new": "_", "max": 2},
             {"action": "replaceRegex(novowel)", "expression": "[aeiou]", "replace": "*"},
         ],
-    ).finish()
+    )
     return out.select("doc_id", "under2", "novowel")
 
 
@@ -1997,7 +1997,7 @@ def pl_tostr(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"action": "toStr(line_s)"},
             {"action": "toStr(big_s)"},
         ],
-    ).finish()
+    )
     return out.select("l_orderkey", "l_linenumber", "qty_s", "price_s", "line_s", "big_s")
 
 
@@ -2028,7 +2028,7 @@ def pl_conditions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "then": [{"action": "add(calm, calm)"}],
             },
         ],
-    ).finish()
+    )
     return out.select("event_id", "sev", "calm")
 
 
@@ -2353,7 +2353,7 @@ def pl_error_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"action": "strconv(s, float)"},
             {"action": "add(tag, ok)"},
         ],
-    ).finish()
+    )
     return out.select("event_id", "s", "tag")
 
 
@@ -3978,8 +3978,8 @@ def th_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pl_parse_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter routing of parse failures: rows whose access-log
-    regex does not match carry the default error policy (_errored
-    gates the rest of the program, row forwards as-is), and the sink
+    regex does not match carry the default error policy (the rest of
+    the program is skipped, the row forwards as-is), and the sink
     selectors split the stream — parsed rows fan out to kafka by
     status, unparsed rows route to the 'dlq' sink. The production
     contract for untrusted input: a bad line never kills the job and
@@ -3999,7 +3999,7 @@ def pl_parse_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"action": "regex(body)", "pattern": ACCESS_PATTERN},
         {"action": "add(topic, parsed)"},
     ]
-    out = apply_program(ev, program).finish()
+    out = apply_program(ev, program)
     sinks = [
         SinkSpec("kafka", "acc-${status}", selector="exist(topic)"),
         SinkSpec("dlq", "unparsed", selector="NOT exist(topic)"),

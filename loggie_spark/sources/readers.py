@@ -121,7 +121,7 @@ def decode_regex_codec(
     groups from the body → columns; optional bodyFields lift."""
     from loggie_spark.actions import apply_program
 
-    out = apply_program(df, [{"action": f"regex({body_col})", "pattern": pattern}]).finish()
+    out = apply_program(df, [{"action": f"regex({body_col})", "pattern": pattern}])
     if body_field:
         out = out.withColumn(body_col, F.col(body_field))
     return out

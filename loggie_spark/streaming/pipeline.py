@@ -3,8 +3,9 @@ loggie's continuous mode (sources → interceptors → sink, running
 forever with at-least-once checkpointing).
 
 The SAME compiled transform (Pipeline.transform) runs on a streaming
-DataFrame: every action compiles to stateless column expressions, so
-the parse → enrich → route program is streaming-safe by construction.
+DataFrame: the per-source dispatch is one Generate plus stateless
+column expressions (actions.py), so the parse → enrich → route program
+is streaming-safe by construction.
 What changes is the rim:
 
 * source: ``readStream`` (file/kafka source; file shown here — a real
@@ -44,7 +45,10 @@ def stream_pipeline(
 ) -> StreamingQuery:
     """Continuous parse → enrich → route into a partitioned parquet
     sink. ``available_now=True`` drains the backlog and stops (used in
-    tests and backfills); otherwise the query runs until stopped.
+    tests and backfills); otherwise the query runs until stopped. A
+    query over a processing-time state timeout
+    (``stateful.no_data_monitor``) never stops by itself, even under
+    ``available_now``.
 
     Sources: a parquet directory (``input_path`` + ``schema``), or —
     when ``kafka_source`` is a :class:`~loggie_spark.sources.kafka.

@@ -46,7 +46,13 @@ def no_data_monitor(
     stream: DataFrame, key_col: str = "source", timeout_ms: int = 10_000
 ) -> DataFrame:
     """Per-key liveness: emits (key, active, n) on data and
-    (key, no_data, n) when a key is silent past the timeout."""
+    (key, no_data, n) when a key is silent past the timeout.
+
+    The timeout is processing time, so a query over it never ends on
+    its own, not even under ``trigger(availableNow=True)``: Spark keeps
+    running empty batches to fire the timeouts, and
+    ``processAllAvailable()`` does not return either. Stop it once the
+    input's batches are committed (see its progress)."""
 
     def fn(key, pdfs, state):
         if state.hasTimedOut:
@@ -196,7 +202,8 @@ def rate_limit_decisions(
 
     State per key is TWO longs (current window start + its count) —
     bounded regardless of traffic; idle keys are garbage-collected by a
-    processing-time timeout. Within a micro-batch each key's events are
+    processing-time timeout, so, like :func:`no_data_monitor`, a query
+    over it never ends under ``availableNow`` and must be stopped. Within a micro-batch each key's events are
     sorted by (event time, id), so a single-batch replay reproduces the
     batch report's (ts, id)-ranked verdicts exactly; across batches the
     decision order is arrival order, as a real limiter's must be.

@@ -28,5 +28,21 @@ def _release_shared_frames():
     release_shared()
 
 
+@pytest.fixture(autouse=True)
+def _no_leaked_streams():
+    """Fail any test that leaves a streaming query running: a leaked
+    query keeps competing for the session's cores through every later
+    test. The leaked queries are stopped first."""
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    leaked = session.streams.active if session is not None else []
+    for q in leaked:
+        q.stop()
+    if leaked:
+        pytest.fail(f"streaming queries left running: {[q.name or q.id for q in leaked]}")
+
+
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"

@@ -20,7 +20,7 @@ ACCESS_LINE = '10.244.0.1 - - [13/Dec/2021:12:40:48 +0000] "GET / HTTP/1.1" 404 
 
 def test_regex_parse_access_log(spark):
     df = spark.createDataFrame([Row(body=ACCESS_LINE)])
-    out = apply_program(df, [{"action": "regex(body)", "pattern": ACCESS_PATTERN}]).finish()
+    out = apply_program(df, [{"action": "regex(body)", "pattern": ACCESS_PATTERN}])
     r = out.collect()[0]
     assert r.ip == "10.244.0.1"
     assert r.id == "-"
@@ -49,7 +49,7 @@ def test_example_pipeline_route(spark):
             "else": [{"action": "add(topic, common)"}],
         },
     ]
-    out = apply_program(df, program).finish()
+    out = apply_program(df, program)
     got = {r.status: r.topic for r in out.collect()}
     assert got == {"200": "common", "404": "not_found", "302": "common"}  # 500 dropped
 
@@ -62,7 +62,7 @@ def test_grok_reference_case(spark):
         "%{IPV4:ip} %{PATH:path} %{UUID:uuid}"
     )
     df = spark.createDataFrame([Row(body=line)])
-    out = apply_program(df, [{"action": "grok(body)", "match": match}]).finish()
+    out = apply_program(df, [{"action": "grok(body)", "match": match}])
     r = out.collect()[0]
     assert r.datetime == "2022/05/28 01:32:01"
     assert r.file == "logTest.go"
@@ -77,7 +77,7 @@ def test_split_action(spark):
     out = apply_program(
         df,
         [{"action": "split(body)", "separator": " ", "keys": ["x", "y", "z"]}],
-    ).finish()
+    )
     r = out.collect()[0]
     assert (r.x, r.y, r.z) == ("a", "b", "c")
 
@@ -94,21 +94,21 @@ def test_split_arity_drop(spark):
                 "dropIfError": True,
             }
         ],
-    ).finish()
+    )
     rows = out.collect()
     assert len(rows) == 1 and rows[0].x == "a"
 
 
 def test_strconv_and_convert(spark):
     df = spark.createDataFrame([Row(v="42"), Row(v="oops")])
-    out = apply_program(df, [{"action": "strconv(v, int)"}]).finish()
+    out = apply_program(df, [{"action": "strconv(v, int)"}])
     got = sorted([r.v for r in out.collect()], key=lambda x: (x is None, x))
     assert got == [42, None]
 
     out2 = apply_program(
         spark.createDataFrame([Row(v="1.5"), Row(v="x")]),
         [{"action": "strconv(v, float)", "dropIfError": True}],
-    ).finish()
+    )
     assert [r.v for r in out2.collect()] == [1.5]
 
 
@@ -116,7 +116,7 @@ def test_json_decode_schemaless(spark):
     df = spark.createDataFrame([Row(body='{"log":"hello", "stream":"stderr"}')])
     out = apply_program(
         df, [{"action": "jsonDecode(body)", "fields": ["log", "stream"]}]
-    ).finish()
+    )
     r = out.collect()[0]
     assert r.log == "hello" and r.stream == "stderr"
 
@@ -132,7 +132,7 @@ def test_timestamp_action(spark):
                 "toLayout": "unix",
             }
         ],
-    ).finish()
+    )
     assert out.collect()[0].t == 1623313747
 
 
@@ -145,7 +145,7 @@ def test_copy_move_del_set(spark):
         {"action": "setInt(n, 7)"},
         {"action": "setBool(f, true)"},
     ]
-    out = apply_program(df, program).finish()
+    out = apply_program(df, program)
     r = out.collect()[0]
     assert r.c == "1" and r.d == "2" and r.n == 7 and r.f is True
     assert "a" not in out.columns and "b" not in out.columns
@@ -179,7 +179,7 @@ def test_fmt_and_replace(spark):
         {"action": "fmt(k)", "pattern": "${a}-${b}"},
         {"action": "replace(t)", "old": "world", "new": "W", "max": 1},
     ]
-    out = apply_program(df, program).finish()
+    out = apply_program(df, program)
     r = out.collect()[0]
     assert r.k == "x-y"
     assert r.t == "hello W world"
@@ -219,14 +219,14 @@ def test_null_condition_rows_survive(spark):
             "else": [{"action": "add(topic, common)"}],
         },
     ]
-    out = apply_program(df, program).finish()
+    out = apply_program(df, program)
     rows = out.collect()
     assert len(rows) == 2
     assert all(r.topic is None for r in rows)
 
     # With ignoreError the failure is swallowed and the program runs on.
     program[0]["ignoreError"] = True
-    out2 = apply_program(df, program).finish()
+    out2 = apply_program(df, program)
     rows2 = out2.collect()
     assert len(rows2) == 2
     assert all(r.topic == "common" for r in rows2)
@@ -240,6 +240,36 @@ def test_default_error_policy_aborts_program_per_row(spark):
         {"action": "strconv(v, int)"},
         {"action": "add(seen, yes)"},
     ]
-    out = apply_program(df, program).finish()
+    out = apply_program(df, program)
     got = {r.v: r.seen for r in out.collect()}
     assert got == {42: "yes", None: None}
+
+
+def test_chained_kernels_and_long_programs(spark):
+    """A parse step that reads another parse step's output runs in a
+    second Generate after the first; a program that keeps rewriting one
+    column under control state still compiles to a bounded plan (heavy
+    values are computed once instead of inlined into every reader)."""
+    df = spark.createDataFrame(
+        [Row(id="1", body='x {"a": "b"}'), Row(id="2", body="nope")]
+    )
+    program = [
+        {"action": "regex(body)", "pattern": r"(?<head>\S+) (?<payload>.*)"},
+        {"action": "jsonDecode(payload)", "fields": ["a"]},
+    ]
+    out = apply_program(df, program)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Generate inline(") == 2, plan
+    assert {r.id: (r.head, r.a) for r in out.collect()} == {
+        "1": ("x", "b"),
+        "2": (None, None),
+    }
+
+    # 40 gated rewrites each read `body` twice (value + fallback): inlined,
+    # the expression would double per step.
+    program = [{"action": "regex(body)", "pattern": r"(?<n>\d+)"}] + [
+        {"action": "replace(body)", "old": "q", "new": "q"}
+    ] * 40
+    digits = spark.createDataFrame([Row(body="q1q"), Row(body="qq")])
+    out = apply_program(digits, program)
+    assert sorted((r.body, r.n) for r in out.collect()) == [("q1q", "1"), ("qq", None)]

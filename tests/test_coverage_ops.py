@@ -20,7 +20,7 @@ def test_normalize_processors_chain(spark):
         {"rename": {"rename": [{"from": "level", "to": "severity"}]}},
         {"drop": {"targets": ["body"]}},
     ]
-    out = apply_processors(df, processors).finish()
+    out = apply_processors(df, processors)
     r = out.collect()[0]
     assert r.severity == "ERROR" and r.n == 42 and r.site == "eu"
     # jsonDecode can error per-row (default policy: abort + forward
@@ -36,7 +36,7 @@ def test_normalize_processors_chain(spark):
             {"rename": {"rename": [{"from": "a", "to": "c"}]}},
             {"drop": {"targets": ["b"]}},
         ],
-    ).finish()
+    )
     assert out2.columns == ["c"]
     assert out2.collect()[0].c == "1"
 

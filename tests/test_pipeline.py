@@ -213,12 +213,15 @@ def test_write_routed_rotation_analog(spark, tmp_path):
 
 
 def test_flagship_plan_shape(spark):
-    """Lock the single-scan property the r01→r02 rewrite earned: the
-    flagship physical plan must contain exactly ONE shuffle Exchange
-    (the metrics aggregate), ONE BroadcastExchange (enrich), ONE
-    FileScan, ONE Python node (the token decode), and ZERO
+    """Lock the single-scan, single-dispatch plan: the flagship physical
+    plan must contain exactly ONE shuffle Exchange (the metrics
+    aggregate), ONE FileScan, ONE Python node (the token decode), ONE
+    ``Generate inline`` (the per-source parse dispatch: every regex,
+    grok and jsonDecode in one barrier), ONE route ``explode``, ZERO
+    BroadcastExchange (static fields are literals, not a join) and ZERO
     SortMergeJoin / CartesianProduct — so later rounds can't silently
-    regress to multi-pass."""
+    regress to multi-pass. With a ``lookup`` the addK8sMeta-style join
+    adds exactly one BroadcastExchange."""
     from loggie_spark.datagen import sequences_from_documents
     from loggie_spark.sinks.metrics import sink_metrics
 
@@ -226,20 +229,34 @@ def test_flagship_plan_shape(spark):
     seq = sequences_from_documents(docs).withColumn(
         "_ptime", F.lit("2024-03-01 00:00:00").cast("timestamp")
     )
+
+    def shape(cfg) -> tuple[str, int]:
+        df = sink_metrics(Pipeline(cfg).transform(seq), cfg.name)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        n_broadcast = plan.count("BroadcastExchange")
+        n_shuffle = plan.count("Exchange") - n_broadcast
+        assert n_shuffle == 1, f"expected 1 shuffle Exchange, got {n_shuffle}:\n{plan}"
+        assert plan.count("FileScan") == 1, plan
+        # One Python node, the token decode: CollapseProject and filter
+        # pushdown must not copy the decode UDF into later operators.
+        n_python = len(re.findall(r"\b(?:ArrowEvalPython|BatchEvalPython|MapInArrow)\b", plan))
+        assert n_python == 1, f"expected 1 Python decode node, got {n_python}:\n{plan}"
+        assert plan.count("Generate inline(") == 1, f"expected 1 parse Generate:\n{plan}"
+        assert plan.count("Generate explode(") == 1, f"expected 1 route explode:\n{plan}"
+        assert "SortMergeJoin" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        return plan, n_broadcast
+
     cfg = reference_pipeline(time_col_name="_ptime")
-    df = sink_metrics(Pipeline(cfg).transform(seq), cfg.name)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_broadcast = plan.count("BroadcastExchange")
-    n_shuffle = plan.count("Exchange") - n_broadcast
-    assert n_shuffle == 1, f"expected 1 shuffle Exchange, got {n_shuffle}:\n{plan}"
-    assert n_broadcast == 1, f"expected 1 BroadcastExchange, got {n_broadcast}:\n{plan}"
-    assert plan.count("FileScan") == 1, plan
-    # One Python node, the token decode: CollapseProject and filter
-    # pushdown must not copy the decode UDF into later operators.
-    n_python = len(re.findall(r"\b(?:ArrowEvalPython|BatchEvalPython|MapInArrow)\b", plan))
-    assert n_python == 1, f"expected 1 Python decode node, got {n_python}:\n{plan}"
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
+    plan, n_broadcast = shape(cfg)
+    assert n_broadcast == 0, f"expected no BroadcastExchange, got {n_broadcast}:\n{plan}"
+
+    cfg.lookup = spark.createDataFrame(
+        [("access", "edge-dc"), ("app", "svc-dc")], "source string, dc string"
+    )
+    cfg.lookup_keys = ["source"]
+    plan, n_broadcast = shape(cfg)
+    assert n_broadcast == 1, f"expected 1 BroadcastExchange (lookup), got {n_broadcast}:\n{plan}"
 
 
 def test_iceberg_write_capability_gate(spark):

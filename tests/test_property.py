@@ -73,7 +73,7 @@ def test_replace_action_matches_strings_replace(spark, rows, old, new, max_n):
     df = spark.createDataFrame([Row(i=i, body=s) for i, s in enumerate(rows)])
     out = apply_program(
         df, [{"action": "replace(body)", "old": old, "new": new, "max": max_n}]
-    ).finish()
+    )
     got = {r.i: r.body for r in out.collect()}
     for i, s in enumerate(rows):
         assert got[i] == s.replace(old, new, max_n), (s, old, new, max_n, got[i])

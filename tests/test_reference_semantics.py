@@ -1,11 +1,13 @@
 """Round-2 reference-parity semantics: default interceptor injection,
 toStr Go float formatting (Go table tests), timestamp locations,
 addMeta full meta, grok pattern files, fieldsFromEnv/Path,
-bodyKey/timestampKey remaps, file-source scan options."""
+bodyKey/timestampKey remaps, interceptor boundaries, the per-source
+dispatch on hostile source values, file-source scan options."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -85,7 +87,7 @@ def test_tostr_go_table(spark):
             {"action": "toStr(i)"},
             {"action": "toStr(f)"},
         ],
-    ).finish()
+    )
     r = out.collect()[0]
     assert (r.b, r.i, r.f) == ("true", "200", "200.1")
 
@@ -98,7 +100,7 @@ def test_tostr_go_table(spark):
         -2.5e-08: "-2.5e-08",
     }
     df2 = spark.createDataFrame([(v,) for v in cases], "v double")
-    out2 = apply_program(df2, [{"action": "toStr(v)"}]).finish()
+    out2 = apply_program(df2, [{"action": "toStr(v)"}])
     got = {r2.v for r2 in out2.collect()}
     assert got == set(cases.values())
 
@@ -121,7 +123,7 @@ def test_timestamp_locations(spark):
                 "toLocation": "Asia/Shanghai",
             }
         ],
-    ).finish()
+    )
     assert out.collect()[0].t == "2021-01-16 01:00:00"
 
 
@@ -137,7 +139,7 @@ def test_addmeta_includes_all_meta(spark):
     )
     out = apply_processors(
         df, [{"addMeta": {"target": "meta", "pipelineName": "p9"}}]
-    ).finish()
+    )
     r = out.collect()[0]
     assert r.meta.systemSourceName == "app"
     assert r.meta.systemPipelineName == "p9"
@@ -167,7 +169,7 @@ def test_grok_pattern_files(spark, tmp_path):
                 "patternPaths": [str(pdir)],
             }
         ],
-    ).finish()
+    )
     r = out.collect()[0]
     assert r.ticket == "JIRA-421" and r.level == "ERROR"
 
@@ -261,6 +263,158 @@ def test_body_and_timestamp_key_remap(spark):
     assert r.log == "the line"
     assert r.body == ""  # bodyKey blanks the body (pipeline.go:1092-1095)
     assert r.ts == "2024-03-01T08:00:00.000Z"
+
+
+# -- interceptor boundaries (transformer.go:85-95) ----------------------------
+
+
+def test_return_and_errors_end_only_their_interceptor(spark):
+    """return() and a failed action stop the rest of their own program
+    only; the next interceptor still runs on the event (Intercept
+    invokes the next one, transformer.go:85-95), so a later transformer
+    and maxbytes apply to every row that was not dropped."""
+    from loggie_spark.pipeline import Pipeline, PipelineConfig, SourceSpec
+    from loggie_spark.sinks.router import SinkSpec
+
+    bodies = {
+        "d1": "404 not found here",  # return()
+        "d2": "no digits at all",  # regex fails: default policy
+        "d3": "200 ok fine body",
+        "d4": "500 drop me now",  # dropEvent()
+    }
+    program = [
+        {"action": "regex(body)", "pattern": r"(?<code>\d+) (?<msg>.*)"},
+        {"if": "equal(code, 404)", "then": [{"action": "return()"}]},
+        {"if": "equal(code, 500)", "then": [{"action": "dropEvent()"}]},
+        {"action": "add(kind, parsed)"},
+    ]
+    cfg = PipelineConfig(
+        name="p",
+        sources=[SourceSpec("s", program)],
+        sinks=[SinkSpec("out", "fixed")],
+        interceptors=[
+            {"type": "transformer", "actions": [{"action": "add(seen, yes)"}]},
+            {"type": "maxbytes", "maxBytes": 5},
+        ],
+    )
+    df = spark.createDataFrame(
+        [(k, v, "s") for k, v in bodies.items()], "doc_id string, body string, source string"
+    )
+    got = {
+        r.doc_id: (r.body, r.code, r.kind, r.seen)
+        for r in Pipeline(cfg).transform(df).collect()
+    }
+
+    def model(body: str) -> tuple | None:
+        ev = {"body": body, "code": None, "kind": None}
+        m = re.search(r"(\d+) (.*)", body)
+        if m:  # a failed action would skip the rest of this program
+            ev["code"] = m[1]
+            if ev["code"] == "500":
+                return None
+            if ev["code"] != "404":  # return() ends the program here
+                ev["kind"] = "parsed"
+        ev["seen"] = "yes"  # the next interceptors run on every event
+        ev["body"] = ev["body"].encode()[:5].decode()
+        return (ev["body"], ev["code"], ev["kind"], ev["seen"])
+
+    want = {k: model(v) for k, v in bodies.items() if model(v) is not None}
+    assert got == want
+
+
+# -- belongTo dispatch: hostile source values --------------------------------
+
+
+def test_dispatch_hostile_sources_match_belongto_model(spark):
+    """Each source's program runs only on its own rows (belongTo); a
+    NULL source or one no SourceSpec names passes through unparsed with
+    NULL fields; fields apply per source; two sources writing one column
+    with different types meet in the last writer's type; bodyKey and
+    timestampKey remap one source only. Checked against a pure-Python
+    model of the reference's per-event chain."""
+    from loggie_spark.pipeline import Pipeline, PipelineConfig, SourceSpec
+    from loggie_spark.sinks.router import SinkSpec
+
+    a_program = [
+        {"action": "regex(body)", "pattern": r"(?<code>\d+) (?<msg>.*)"},
+        {"if": "equal(code, 404)", "then": [{"action": "add(kind, nf)"}, {"action": "return()"}]},
+        {"action": "add(kind, ok)"},
+        {"action": "strconv(code, int)"},
+    ]
+    c_program = [
+        {"if": "equal(body, drop me)", "then": [{"action": "dropEvent()"}]},
+        {"action": "add(code, c-code)"},
+    ]
+    sources = [
+        SourceSpec("a", a_program),
+        SourceSpec("b", fields={"zone": "eu", "tier": 2}, body_key="raw"),
+        SourceSpec("c", c_program, fields={"zone": "us"}, timestamp_key="ts"),
+    ]
+    rows = [
+        ("1", "404 gone", "a"),
+        ("2", "200 fine", "a"),
+        ("3", "garbage", "a"),
+        ("4", "b line", "b"),
+        ("5", "c line", "c"),
+        ("6", "drop me", "c"),
+        ("7", "404 null source", None),
+        ("8", "404 unknown", "zzz"),
+        ("9", "404 empty", ""),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, body string, source string").withColumn(
+        "_pt", F.lit("2024-03-01 08:00:00").cast("timestamp")
+    )
+    cfg = PipelineConfig(
+        name="p", sources=sources, sinks=[SinkSpec("out", "fixed")], time_col_name="_pt"
+    )
+    out = Pipeline(cfg).transform(df)
+    cols = ["body", "code", "msg", "kind", "raw", "ts", "tier", "zone"]
+    assert dict(out.dtypes)["code"] == "string"
+    got = {r.doc_id: tuple(r[c] for c in cols) for r in out.collect()}
+
+    def model(body: str, source: str | None) -> dict | None:
+        ev = {"body": body}
+        if source == "a":
+            m = re.search(r"(\d+) (.*)", body)
+            if m:
+                ev.update(code=m[1], msg=m[2])
+                if m[1] == "404":
+                    ev["kind"] = "nf"
+                else:
+                    ev["kind"] = "ok"
+                    ev["code"] = str(int(m[1]))  # long, read back as the string type
+        elif source == "b":
+            ev.update(raw=body, body="")
+        elif source == "c":
+            if body == "drop me":
+                return None
+            ev.update(code="c-code", ts="2024-03-01T08:00:00.000Z")
+        fields = {s.name: s.fields for s in sources}.get(source)
+        if fields:  # sources declaring some fields carry "" for the rest
+            ev.update({k: str(fields.get(k, "")) for k in ("tier", "zone")})
+        return ev
+
+    want = {}
+    for doc_id, body, source in rows:
+        ev = model(body, source)
+        if ev is not None:
+            want[doc_id] = tuple(ev.get(c) for c in cols)
+    assert got == want
+
+    # fields_under_key across sources: one struct, NULL members for rows
+    # no source names; sources naming different keys conflict.
+    for s in sources:
+        s.fields_under_key = "fields" if s.fields else None
+    nested = Pipeline(cfg).transform(df)
+    assert "zone" not in nested.columns
+    got = {r.doc_id: r.fields for r in nested.collect()}
+    assert got["4"].asDict() == {"tier": "2", "zone": "eu"}
+    assert got["5"].asDict() == {"tier": "", "zone": "us"}
+    for doc_id in ("1", "7", "8", "9"):
+        assert got[doc_id].asDict() == {"tier": None, "zone": None}
+    sources[2].fields_under_key = "other"
+    with pytest.raises(ValueError, match="conflicting fields_under_key"):
+        Pipeline(cfg).transform(df)
 
 
 # -- file-source scan options (glob / exclude / ignoreOlder) -----------------

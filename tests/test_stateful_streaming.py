@@ -8,6 +8,25 @@ import time
 import pyspark.sql.functions as F
 
 
+def _drain(q, n_rows: int, timeout: float = 120.0) -> None:
+    """Wait until ``q`` has committed ``n_rows`` input rows, then stop it.
+
+    Under ``ProcessingTimeTimeout`` an ``availableNow`` query runs empty
+    batches forever and ``processAllAvailable()`` does not return, so
+    the committed batches are read from the query's progress instead.
+    A batch's progress is reported after its sink commit."""
+    deadline = time.monotonic() + timeout
+    rows: dict[int, int] = {}
+    try:
+        while sum(rows.values()) < n_rows:
+            rows.update((p.batchId, p.numInputRows) for p in q.recentProgress)
+            assert q.isActive or sum(rows.values()) >= n_rows, q.exception()
+            assert time.monotonic() < deadline, f"{q.name}: {rows} of {n_rows} rows"
+            time.sleep(0.2)
+    finally:
+        q.stop()
+
+
 def test_no_data_monitor_active_counts(spark, tmp_path):
     from loggie_spark.streaming.stateful import no_data_monitor
 
@@ -24,7 +43,7 @@ def test_no_data_monitor_active_counts(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q, 3)
     rows = spark.sql("SELECT * FROM live1").collect()
     # availableNow may run extra empty batches after the data batch, so
     # timeout (no_data) rows can legitimately follow the active ones.
@@ -57,6 +76,7 @@ def test_session_stats_emits_on_expiry(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
+    q.stop()
     got = {r.key: r.n_events for r in spark.sql("SELECT * FROM sess1").collect()}
     # u1/u2 sessions expire once the watermark (driven by u3's 11:00
     # event) passes their last-event + gap.
@@ -91,7 +111,7 @@ def test_rate_limit_decisions_match_batch_report(spark, tmp_path):
         out.writeStream.format("memory").queryName("rl")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _drain(q, 300)
     got = {
         r.event_id: (r.allowed, r.rank)
         for r in spark.sql("SELECT * FROM rl").collect()
@@ -150,7 +170,7 @@ def test_rate_limit_decisions_match_batch_report(spark, tmp_path):
         out2.writeStream.format("memory").queryName("rl2")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q2.awaitTermination(120)
+    _drain(q2, 305)
     rows2 = {
         r.event_id: r
         for r in spark.sql("SELECT * FROM rl2").collect()
