@@ -159,7 +159,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     # through the Hadoop FS API so the report lands next to the data on
     # object stores too (--output s3a://... is the advertised contract)
-    from loggie_spark.layout import write_json_marker
+    from loggie_spark.checkpoint import write_json_marker
 
     write_json_marker(spark, args.output, "_curation_report.json", report)
     print(json.dumps(report))

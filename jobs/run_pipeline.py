@@ -12,6 +12,10 @@ skipped via the manifest; partially-written buckets are atomically
 re-written (dynamic partition overwrite). Per-sink metric counts land
 under <output>/_metrics and are exactly-once across resumes.
 
+The manifest (default <output>/_manifest, or --manifest) goes through
+the same Hadoop filesystem as the write, for URIs and plain paths alike:
+a plain path resolves against fs.defaultFS, as the output does.
+
 Build the zip with:  python -m zipfile -c loggie_spark.zip loggie_spark
 """
 

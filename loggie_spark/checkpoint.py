@@ -13,31 +13,37 @@ Batch mapping:
   bucket across runs regardless of input split planning.
 * Output is written ``partitionBy(bucket, ...)`` with **dynamic
   partition overwrite**: re-processing a bucket atomically replaces its
-  directory, so a crash mid-write (partial files, no manifest row)
-  heals on resume instead of duplicating.
-* The manifest is TWO tiny tables under ``path/``:
-  - ``lineage/``  — one row per completed bucket with rows_in/rows_out
-    counters (the per-partition lineage of the north-rule). A bucket is
-    *done* iff a lineage row exists; resume processes only the rest.
-  - ``metrics/``  — per-(bucket, source, sink) success/fail deltas for
-    the buckets written by one run() invocation.
-  Both carry a monotonically increasing ``seq`` stamped per run()
-  invocation. Metrics are appended BEFORE lineage: a crash between the
-  two leaves stale metric rows whose (bucket, seq) never appears in
-  lineage — the rollup joins metrics to the winning lineage seq per
-  bucket, so stale deltas are ignored and re-processed buckets count
-  exactly once.
-* Final metrics = a rollup of the deltas table (tiny: buckets × sources
-  × sinks rows) — the 100 TB output table is NEVER re-read for
+  directory, so a crash mid-write (partial files, no commit) heals on
+  resume instead of duplicating.
+* The manifest is ONE JSON object per run() invocation,
+  ``path/commits/<seq:012d>.json``: its run_id, one lineage row per
+  bucket it wrote (rows_in/rows_out, the per-partition lineage of the
+  north-rule) and its per-(bucket, source, sink) success/fail deltas.
+  The object is written under a ``.tmp`` name and renamed, so it is
+  committed whole or not at all: **presence = committed**. A crash
+  before the rename leaves only the ``.tmp``, which no reader matches,
+  so a torn commit is never read — not for the next seq (the resume
+  reuses it), not for done buckets, not for counts.
+* A bucket is *done* for a run_id iff a commit of that run_id lists it;
+  resume processes only the rest. Its winning write is the highest seq
+  listing it (dynamic partition overwrite means later writes replaced
+  earlier ones). Final metrics sum each bucket's deltas from its
+  winning commit only — the output table is NEVER re-read for
   accounting.
+* Every read and write goes through the Hadoop FileSystem API, the
+  same resolution Spark's writers use: URIs (file://, hdfs://, s3a://)
+  and plain paths (against fs.defaultFS) land wherever the data does.
+  No Spark job runs; final_metrics is a local relation.
 
-At 100 TB scale B is sized so one bucket ≈ a few GB (e.g. B=4096), and
-both manifest tables stay driver-readable (≤ B × sinks × sources rows).
+At 100 TB scale B is sized so one bucket ≈ a few GB (e.g. B=4096); a
+commit holds at most B lineage rows and B × sources × sinks metric
+rows, so the manifest stays driver-readable.
 """
 
 from __future__ import annotations
 
-import os
+import json
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,17 +51,11 @@ from pyspark.sql import functions as F
 
 BUCKET_COL = "_bucket"
 
-LINEAGE_SCHEMA = (
-    "run_id string, seq long, bucket int, source string, "
-    "rows_in long, rows_out long, status string"
-)
-METRICS_SCHEMA = (
-    "run_id string, seq long, bucket int, pipeline string, source string, "
-    "sink string, success_count long, fail_count long"
-)
 FINAL_METRICS_SCHEMA = (
     "pipeline string, source string, sink string, success_count long, fail_count long"
 )
+
+_COMMIT_NAME = re.compile(r"\d{12}\.json")
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame:
@@ -64,16 +64,60 @@ def with_bucket(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame
     return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
 
 
-def _has_parquet(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in _walk_files(path)
-    )
+def _hadoop_path(spark, uri: str):
+    """(FileSystem, Path) for ``uri`` through the Hadoop FS API — the
+    same resolution the writers use, so commit markers land wherever
+    the data does (local file://, hdfs://, s3a://...), instead of a
+    local open() that would write a bogus './s3:/...' directory after
+    an object-store export."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(uri)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, path
 
 
-def _walk_files(root: str):
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            yield os.path.join(dirpath, f)
+def list_names(spark, dir_uri: str):
+    """Names of the entries directly under ``dir_uri``, listed through
+    the Hadoop FS API; none when it does not exist."""
+    fs, path = _hadoop_path(spark, dir_uri)
+    if fs.exists(path):
+        yield from (s.getPath().getName() for s in fs.listStatus(path))
+
+
+def write_json_marker(spark, dir_uri: str, name: str, payload: dict) -> None:
+    """Write ``payload`` as ``dir_uri/name`` through the Hadoop
+    FileSystem API: tmp file first, then delete+rename — atomic on
+    posix/HDFS, last-writer-wins on object stores (where the marker's
+    EXISTENCE is still the commit signal, because the tmp name never
+    matches a reader's probe)."""
+    data = json.dumps(payload, indent=2, sort_keys=True).encode()
+    base = dir_uri.rstrip("/")
+    fs, tmp = _hadoop_path(spark, f"{base}/{name}.tmp")
+    _, dest = _hadoop_path(spark, f"{base}/{name}")
+    out = fs.create(tmp, True)
+    try:
+        out.write(data)
+    finally:
+        out.close()
+    fs.delete(dest, False)
+    if not fs.rename(tmp, dest):
+        raise IOError(f"could not commit {dest}")
+
+
+def read_json_marker(spark, dir_uri: str, name: str) -> dict | None:
+    """Read ``dir_uri/name`` back through the Hadoop FS API; None when
+    absent (= aborted export for a commit marker)."""
+    fs, dest = _hadoop_path(spark, f"{dir_uri.rstrip('/')}/{name}")
+    if not fs.exists(dest):
+        return None
+    stream = fs.open(dest)
+    try:
+        raw = bytes(
+            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        )
+    finally:
+        stream.close()
+    return json.loads(raw.decode())
 
 
 @dataclass
@@ -81,74 +125,54 @@ class Manifest:
     path: str
 
     @property
-    def lineage_path(self) -> str:
-        return f"{self.path}/lineage"
+    def commits_path(self) -> str:
+        return f"{self.path.rstrip('/')}/commits"
 
-    @property
-    def metrics_path(self) -> str:
-        return f"{self.path}/metrics"
+    def _names(self, spark: SparkSession) -> list[str]:
+        """Committed object names in seq order; a torn commit's ``.tmp``
+        never matches."""
+        return sorted(n for n in list_names(spark, self.commits_path) if _COMMIT_NAME.fullmatch(n))
 
-    def read_lineage(self, spark: SparkSession) -> DataFrame:
-        if not _has_parquet(self.lineage_path):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
-        return spark.read.parquet(self.lineage_path)
-
-    def read_metrics(self, spark: SparkSession) -> DataFrame:
-        if not _has_parquet(self.metrics_path):
-            return spark.createDataFrame([], METRICS_SCHEMA)
-        return spark.read.parquet(self.metrics_path)
+    def _commits(self, spark: SparkSession) -> list[dict]:
+        return [read_json_marker(spark, self.commits_path, n) for n in self._names(spark)]
 
     def completed_buckets(self, spark: SparkSession, run_id: str) -> list[int]:
-        m = self.read_lineage(spark)
-        rows = (
-            m.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
-        return sorted(r.bucket for r in rows)
+        commits = [c for c in self._commits(spark) if c["run_id"] == run_id]
+        return sorted({row["bucket"] for c in commits for row in c["lineage"]})
 
     def next_seq(self, spark: SparkSession) -> int:
-        """Monotonic invocation stamp: max existing seq + 1. The manifest
-        is tiny; this is a driver-side footer read."""
-        m = self.read_lineage(spark)
-        row = m.agg(F.max("seq").alias("s")).collect()[0]
-        return int(row.s) + 1 if row.s is not None else 0
+        """Monotonic invocation stamp: the highest committed seq + 1,
+        from the commit names alone."""
+        names = self._names(spark)
+        return int(names[-1].removesuffix(".json")) + 1 if names else 0
 
     def record_run(
-        self, spark: SparkSession, lineage_rows: list[tuple], metrics_rows: list[tuple]
+        self, spark: SparkSession, seq: int, run_id: str, lineage: list[dict], metrics: list[dict]
     ) -> None:
-        """Commit one run() invocation's accounting. Metrics FIRST, then
-        lineage: lineage marks buckets done, so a crash in between
-        leaves only ignorable stale metric rows (see module docstring),
-        never a done bucket without its deltas."""
-        if metrics_rows:
-            spark.createDataFrame(metrics_rows, METRICS_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.metrics_path)
-        if lineage_rows:
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.lineage_path)
+        """Commit one run() invocation's lineage and metric deltas as
+        one object (see module docstring)."""
+        write_json_marker(
+            spark,
+            self.commits_path,
+            f"{seq:012d}.json",
+            {"seq": seq, "run_id": run_id, "lineage": lineage, "metrics": metrics},
+        )
 
     def final_metrics(self, spark: SparkSession) -> DataFrame:
         """Exact per-(pipeline, source, sink) counts of the CURRENT
-        output table, from manifest deltas alone — no output re-read.
+        output table, from the commits alone — no output re-read.
 
-        Per bucket, the winning write is the one with the highest done
-        lineage seq (dynamic partition overwrite means later writes
-        replaced earlier ones); its metric deltas are summed, everything
-        else (overwritten or stale) is discarded.
+        Per bucket, the winning write is the highest seq whose lineage
+        lists it; its metric deltas are summed, every other delta for
+        that bucket (overwritten, or with no lineage row) is discarded.
         """
-        lin = self.read_lineage(spark).filter(F.col("status") == "done")
-        winner = lin.groupBy("bucket").agg(F.max("seq").alias("seq"))
-        mets = self.read_metrics(spark)
-        return (
-            mets.join(winner, ["bucket", "seq"])
-            .groupBy("pipeline", "source", "sink")
-            .agg(
-                F.sum("success_count").alias("success_count"),
-                F.sum("fail_count").alias("fail_count"),
-            )
-        )
-
+        commits = self._commits(spark)
+        winner = {row["bucket"]: c["seq"] for c in commits for row in c["lineage"]}
+        totals: dict[tuple, list[int]] = {}
+        for c in commits:
+            for m in c["metrics"]:
+                if winner.get(m["bucket"]) == c["seq"]:
+                    t = totals.setdefault((m["pipeline"], m["source"], m["sink"]), [0, 0])
+                    t[0] += m["success_count"]
+                    t[1] += m["fail_count"]
+        return spark.createDataFrame([(*k, *v) for k, v in totals.items()], FINAL_METRICS_SCHEMA)

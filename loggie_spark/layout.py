@@ -14,57 +14,9 @@ layout is the table's bucket partition transform (``bucket(N, key)``).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 
-
-def _hadoop_path(spark, uri: str):
-    """(FileSystem, Path) for ``uri`` through the Hadoop FS API — the
-    same resolution the writers use, so commit markers land wherever
-    the data does (local file://, hdfs://, s3a://...), instead of a
-    local open() that would write a bogus './s3:/...' directory after
-    an object-store export."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
-
-
-def write_json_marker(spark, dir_uri: str, name: str, payload: dict) -> None:
-    """Write ``payload`` as ``dir_uri/name`` through the Hadoop
-    FileSystem API: tmp file first, then delete+rename — atomic on
-    posix/HDFS, last-writer-wins on object stores (where the marker's
-    EXISTENCE is still the commit signal, because the tmp name never
-    matches a reader's probe)."""
-    data = json.dumps(payload, indent=2, sort_keys=True).encode()
-    base = dir_uri.rstrip("/")
-    fs, tmp = _hadoop_path(spark, f"{base}/{name}.tmp")
-    _, dest = _hadoop_path(spark, f"{base}/{name}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(data)
-    finally:
-        out.close()
-    fs.delete(dest, False)
-    if not fs.rename(tmp, dest):
-        raise IOError(f"could not commit {dest}")
-
-
-def read_json_marker(spark, dir_uri: str, name: str) -> dict | None:
-    """Read ``dir_uri/name`` back through the Hadoop FS API; None when
-    absent (= aborted export for a commit marker)."""
-    fs, dest = _hadoop_path(spark, f"{dir_uri.rstrip('/')}/{name}")
-    if not fs.exists(dest):
-        return None
-    stream = fs.open(dest)
-    try:
-        raw = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    return json.loads(raw.decode())
+from loggie_spark.checkpoint import read_json_marker, write_json_marker
 
 
 def save_bucketed(

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Observation
 
 from loggie_spark.actions import Plan, _Ctx, dispatch
-from loggie_spark.checkpoint import BUCKET_COL, Manifest, with_bucket
+from loggie_spark.checkpoint import BUCKET_COL, Manifest, list_names, with_bucket
 from loggie_spark.enrich import broadcast_enrich
 from loggie_spark.sinks.router import (
     FAILED_COL,
@@ -324,13 +324,15 @@ class Pipeline:
           from ONE column-pruned aggregation over the buckets this run
           just wrote (partition-pruned; reads two thin columns of the
           run's own output, never the input and never prior output);
-        * final metrics are a rollup of the manifest's delta table —
-          the output table is never re-read for accounting.
+        * this run's lineage and deltas are committed as ONE manifest
+          object, and final metrics are a driver-side rollup of the
+          commits — the output table is never re-read for accounting.
 
         Crash-safe: buckets are re-written with dynamic partition
-        overwrite, so partially-written buckets heal on resume and
-        per-sink counts stay exactly-once (FIXTURES §F4 invariant;
-        see checkpoint.Manifest for the stale-delta proof).
+        overwrite, so partially-written buckets heal on resume, and a
+        commit is read whole or not at all, so per-sink counts stay
+        exactly-once (FIXTURES §F4 invariant; see checkpoint.py). The
+        manifest goes through the same filesystem as the write.
         """
         cfg = self.cfg
         manifest = Manifest(manifest_dir or f"{out_dir}/_manifest")
@@ -384,7 +386,7 @@ class Pipeline:
         # partition-pruned to todo_buckets, reads only (source, failed).
         # Result size is bounded by buckets × sources × sinks — driver-safe.
         agg_rows = []
-        if _has_bucket_dirs(out_dir):
+        if any(n.startswith(BUCKET_COL + "=") for n in list_names(spark, out_dir)):
             written = spark.read.parquet(out_dir).filter(
                 F.col(BUCKET_COL).isin(todo_buckets)
             )
@@ -399,32 +401,20 @@ class Pipeline:
 
         seq = manifest.next_seq(spark)
         rows_out_by_bucket: dict[int, int] = {}
-        metrics_rows: list[tuple] = []
+        metrics: list[dict] = []
         for r in agg_rows:
             b = r[BUCKET_COL]
             rows_out_by_bucket[b] = rows_out_by_bucket.get(b, 0) + r.ok + r.bad
-            metrics_rows.append(
-                (run_id, seq, b, cfg.name, r[cfg.source_col], r[SINK_COL], r.ok, r.bad)
-            )
-        lineage_rows = [
-            (
-                run_id,
-                seq,
-                b,
-                cfg.name,
-                rows_in_by_bucket.get(b) if per_bucket_in else None,
-                rows_out_by_bucket.get(b, 0),
-                "done",
-            )
+            metrics.append({
+                "bucket": b, "pipeline": cfg.name, "source": r[cfg.source_col],
+                "sink": r[SINK_COL], "success_count": r.ok, "fail_count": r.bad,
+            })
+        lineage = [
+            {
+                "bucket": b, "pipeline": cfg.name, "rows_in": rows_in_by_bucket.get(b),
+                "rows_out": rows_out_by_bucket.get(b, 0),
+            }
             for b in todo_buckets
         ]
-        manifest.record_run(spark, lineage_rows, metrics_rows)
+        manifest.record_run(spark, seq, run_id, lineage, metrics)
         return manifest.final_metrics(spark)
-
-
-def _has_bucket_dirs(out_dir: str) -> bool:
-    import os
-
-    return os.path.isdir(out_dir) and any(
-        name.startswith(BUCKET_COL + "=") for name in os.listdir(out_dir)
-    )

@@ -4,12 +4,13 @@ oracle, routed-row token equality, and crash/resume exactly-once
 
 from __future__ import annotations
 
+import os
 import re
-import shutil
 
 import pyspark.sql.functions as F
 import pytest
 
+from loggie_spark.checkpoint import Manifest, read_json_marker, write_json_marker
 from loggie_spark.datagen import generate_sequences
 from loggie_spark.examples import reference_pipeline
 from loggie_spark.pipeline import Pipeline
@@ -123,20 +124,15 @@ def test_resume_exactly_once(spark, run_dirs):
         .collect()
     )
 
-    # Crash simulation: the lineage table loses half its buckets (their
-    # output remains), while the METRICS delta table keeps its now-stale
-    # rows — the rollup must ignore deltas whose (bucket, seq) no longer
-    # wins in lineage, or resumed buckets double-count.
-    from loggie_spark.checkpoint import LINEAGE_SCHEMA
-
-    lineage_dir = f"{manifest_dir}/lineage"
-    manifest = spark.read.parquet(lineage_dir)
-    kept = manifest.filter(F.col("bucket") % 2 == 0)
-    kept_pd = kept.toPandas()
-    shutil.rmtree(lineage_dir)
-    spark.createDataFrame(kept_pd, LINEAGE_SCHEMA).write.mode("overwrite").parquet(
-        lineage_dir
-    )
+    # Crash simulation: the commit's lineage loses half its buckets
+    # (their output remains), while its metric deltas keep their
+    # now-stale rows — the rollup must ignore deltas of a bucket whose
+    # lineage row is not in that commit, or resumed buckets double-count.
+    commits = Manifest(manifest_dir).commits_path
+    for name in sorted(n for n in os.listdir(commits) if n.endswith(".json")):
+        commit = read_json_marker(spark, commits, name)
+        commit["lineage"] = [row for row in commit["lineage"] if row["bucket"] % 2 == 0]
+        write_json_marker(spark, commits, name, commit)
 
     _, metrics2 = _run(spark, out_dir, manifest_dir)
 
@@ -161,6 +157,63 @@ def test_resume_exactly_once(spark, run_dirs):
     # Second resume with complete manifest = pure no-op.
     _, metrics3 = _run(spark, out_dir, manifest_dir)
     assert spark.read.parquet(out_dir).count() == count_before
+
+
+def _assert_oracle_counts(metrics):
+    _, survivors = python_oracle(N)
+    m = {(r.source, r.sink): (r.success_count, r.fail_count) for r in metrics.collect()}
+    assert len(m) == len(survivors) * 3, m
+    for src, cnt in survivors.items():
+        for sink in ("kafka", "es", "file"):
+            assert m[(src, sink)] == (cnt, 0), (src, sink, m[(src, sink)])
+
+
+def test_torn_commit_is_never_read(spark, tmp_path):
+    """A crash between writing a commit object and renaming it into
+    place leaves only ``<seq>.json.tmp``. The resume must neither take
+    its seq as used nor count its deltas: it redoes the uncommitted
+    buckets under that seq, and per-sink counts stay exact."""
+    out_dir, manifest_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    _run(spark, out_dir, manifest_dir)
+    count_before = spark.read.parquet(out_dir).count()
+
+    commits = Manifest(manifest_dir).commits_path
+    newest = max(n for n in os.listdir(commits) if n.endswith(".json"))
+    for name in (newest, f".{newest}.crc"):  # the object and its Hadoop checksum
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    with open(os.path.join(commits, newest + ".tmp"), "wb") as fh:
+        fh.write(b'{"seq": 0, "run_id": "r1", "lineage": [{"bu')
+
+    _, metrics = _run(spark, out_dir, manifest_dir)
+    _assert_oracle_counts(metrics)
+    assert spark.read.parquet(out_dir).count() == count_before
+    assert sorted(n for n in os.listdir(commits) if n.endswith(".json")) == [newest]
+
+
+def _snapshot(root: str) -> dict[str, tuple[int, int]]:
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.relpath(os.path.join(d, f), root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_uri_paths(spark, tmp_path):
+    """``file://`` URIs for the output and the manifest: the manifest
+    and the written-bucket listing go through the same Hadoop filesystem
+    as the write, so counts are exact and a rerun with the same run_id
+    skips every bucket and writes nothing."""
+    out_dir, manifest_dir = tmp_path / "out", tmp_path / "manifest"
+    _, metrics = _run(spark, out_dir.as_uri(), manifest_dir.as_uri())
+    _assert_oracle_counts(metrics)
+
+    before = (_snapshot(str(out_dir)), _snapshot(str(manifest_dir)))
+    assert before[1], "no commit written under the manifest URI"
+    _, again = _run(spark, out_dir.as_uri(), manifest_dir.as_uri())
+    _assert_oracle_counts(again)
+    assert (_snapshot(str(out_dir)), _snapshot(str(manifest_dir))) == before
 
 
 def test_render_fail_policies(spark, tmp_path):
