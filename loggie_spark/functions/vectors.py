@@ -24,7 +24,3 @@ def dot(a: Column | str, b: Column | str) -> Column:
 def norm(a: Column | str) -> Column:
     sq = F.transform(_c(a), lambda x: x.cast("double") * x.cast("double"))
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

@@ -135,22 +135,6 @@ def dedup_exact(
 MINHASH_MOD = 1 << 40
 
 
-def minhash_signature(
-    text: Column, n_hashes: int = 16, shingle: int = 3
-) -> Column:
-    """array<long> of per-seed minima over word-shingle hashes.
-
-    ONE md5 per gram, split into two 40-bit halves (a, b); the seeded
-    family is Carter-Wegman h_i = (a + i·b) mod 2^40 — an 8-16× md5
-    saving over hashing per seed, still engine-agnostic (the DuckDB
-    oracle reproduces it bit-for-bit). signature[i] = min over grams.
-    Pure Catalyst (transform + array_min), vectorized JVM.
-    """
-    pairs = minhash_pair_terms(text, shingle)
-    sigs = [F.array_min(F.transform(pairs, _seed_hash(i))) for i in range(n_hashes)]
-    return F.array(*sigs)
-
-
 def minhash_pair_terms(text: Column, shingle: int = 3) -> Column:
     """Per-shingle (a, b) hash halves: ONE md5 per gram split into two
     40-bit integers; the whole seed family derives as
@@ -169,13 +153,6 @@ def minhash_pair_terms(text: Column, shingle: int = 3) -> Column:
             .alias("b"),
         ),
     )
-
-
-def _seed_hash(i: int):
-    # Closure (NOT a defaulted 2nd lambda param: F.transform passes the
-    # ELEMENT INDEX to any second parameter, silently replacing the
-    # intended seed).
-    return lambda p: F.pmod(p["a"] + F.lit(i) * p["b"], F.lit(MINHASH_MOD))
 
 
 def minhash_bands(
@@ -472,7 +449,7 @@ def embedding_cosine_pairs(
         ).select("id_a", "id_b", "cos")
 
     # Norms once per VECTOR (n evals), not per pair (n² evals); the
-    # division grouping dot/(na*nb) is bit-identical to cosine()'s.
+    # division grouping dot/(na*nb) is bit-identical to the oracles'.
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
@@ -561,7 +538,7 @@ def embedding_lsh_pairs(
         df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
     )
     # Norms once per VECTOR joined alongside, not recomputed per
-    # candidate pair; dot/(na*nb) is bit-identical to cosine()'s
+    # candidate pair; dot/(na*nb) is bit-identical to the
     # dot/(norm(a)*norm(b)) grouping, so oracle parity is unchanged.
     vecs = base.withColumn("_nrm", norm(F.col("_v")))
     cand = cand.join(

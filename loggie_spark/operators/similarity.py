@@ -37,8 +37,8 @@ def brute_force_topk(
     ties broken by neighbor id for determinism.
     """
     # Norms once per ROW on each side before the join (not per pair);
-    # dot/(qn*cn) keeps cosine()'s exact grouping so results are
-    # bit-identical.
+    # dot/(qn*cn) keeps the dot/(norm(a)*norm(b)) grouping so results
+    # are bit-identical.
     q = queries.select(
         F.col(q_id).alias("query_id"),
         F.col(q_vec).alias("_qv"),
@@ -205,9 +205,9 @@ def _cell_scores(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
     lambda — n_cells separate struct expressions (each with a dim-wide
     literal array) made janino compile seconds of generated code per
     plan (the r5 driver's slowest rows were all IVF-family compile
-    time). dot/(n*norm(c)) keeps cosine()'s exact grouping and norm(c)
-    evaluates the same expression ConstantFolding used to fold, so
-    scores are bit-identical and no oracle changes."""
+    time). dot/(n*norm(c)) keeps the dot/(norm(a)*norm(b)) grouping
+    and norm(c) evaluates the same expression ConstantFolding used to
+    fold, so scores are bit-identical and no oracle changes."""
     from loggie_spark.functions.gofmt import let_bind
 
     slab = F.lit([[float(x) for x in cv] for _, cv in cents])

@@ -27,11 +27,10 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str):
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
@@ -605,7 +604,7 @@ def _minhash_sig_band_sql(n_hashes: int, bands: int) -> tuple[str, str, str]:
 
 def _minhash_oracle(n_hashes=8, shingle=3, bands=4, threshold=0.12) -> str:
     gram = "array_to_string(words[i:i+{}], ' ')".format(shingle - 1)
-    # Carter-Wegman family from one md5 per gram (dedup.minhash_signature)
+    # Carter-Wegman family from one md5 per gram (dedup.minhash_pair_terms)
     sig_cols, band_cols, band_match = _minhash_sig_band_sql(n_hashes, bands)
     return f"""
     WITH toks AS (
@@ -7555,233 +7554,3 @@ def td_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loggie_spark.operators.similarity import label_cohesion_report
 
     return label_cohesion_report(_t(spark, sf_dir, "embeddings"))
-
-
-# ===========================================================================
-# Driver-window ordering
-# ===========================================================================
-# The driver's correctness gate runs the FIRST 50 entries of
-# ``__spark_entry__.queries()`` in registration order.  The registry is
-# larger than 50, so ordering decides which queries get a hard driver
-# CORRECTNESS row each round.  Queries listed in ``_DRIVER_PRIORITY`` are
-# moved to the front (in list order); everything else follows in original
-# registration order.  Rotation policy (stated in CLAUDE.md): every
-# round, the window = (a) every query whose last driver row is one round
-# old — so no query's driver row is ever more than TWO rounds stale —
-# then (b) queries whose operator code changed this round, then (c) new
-# queries, then (d) flagship anchors with any remaining slots.  ADD NEW
-# QUERIES TO THIS LIST or they will sit past the cap with no driver row;
-# tests/test_oracle_parity.py::test_driver_cap_coverage enforces the
-# union invariant mechanically.
-
-_DRIVER_PRIORITY: list[str] = [
-    # r06 WINDOW = the FIFTY new r06 queries — 7 wrap-up-session
-    # (observability face + embedding QA + host quota, listed first)
-    # + the 43 earlier-session ones (14 mid-round +
-    # pq/pq-rerank/ivfpq + langid-auc/calibration late-round +
-    # compaction/zorder/pmi/zipf/waterfill/pagerank/manifest-diff
-    # final-round + log-templates/latency-quantiles/bm25/source-js/
-    # bitext/template-novelty/hard-negatives closing-round +
-    # triangles/weighted-sample/source-kmv/skipgram/token-entropy/
-    # rrf-hybrid/oov-rate/hll-sliding/path-trigrams/cdc-dedup
-    # end-of-round) — 7 + 43 = 50 exactly.  Never-checked new queries
-    # are window-MANDATORY (the cap-coverage invariant), which this
-    # round squeezes out the changed-op tier entirely and ALL NINE of
-    # the r03-stale sit-backs (see the inline notes below).  Registry
-    # is 159 > 3×cap, so the r04-green tier sits out a third round
-    # under the documented over-capacity policy (marked below; each
-    # sf0.01-oracle-parity-checked on every pytest run); all sit-outs
-    # MUST front the r07 window — order: the seven 4-round-stale
-    # r03-row queries named in the wrap-up note, then the two 4-round
-    # pl_* staleness exceptions, then everything else.
-    # Category (b) note: queries whose
-    # operator code changed THIS round but which hold an r05 row
-    # (td_bpe_train/encode, td_tokenizer_fertility, th_hll_users,
-    # td_line_dedup, td_dedup_minhash_lsh, td_source_overlap,
-    # td_source_drift) yield their slots — r05 precedent: their rows
-    # are 1 round fresh and the IDENTICAL oracle check runs locally at
-    # the driver's own SF in the full gate, plus the new plan guards.
-    # -- (c) new r06 queries, wrap-up session: the SRE/observability
-    # face + embedding QA + host quotas.  These SEVEN displaced the
-    # seven (a)-tier r03-row sit-backs that briefly held these slots
-    # mid-round (td_fingerprint, td_boilerplate, td_repetition,
-    # td_dedup_ngram_jaccard, td_dedup_exact, td_decontaminate,
-    # td_langid) — never-checked new queries are window-MANDATORY
-    # under the cap-coverage invariant while those seven hold r03
-    # driver rows and are sf0.01-oracle-parity-checked on every pytest
-    # run.  They are now FOUR rounds stale by r07 and go ABSOLUTELY
-    # FIRST in the r07 window, before even the two pl_* staleness
-    # exceptions noted below. --
-    "th_burn_rate",
-    "th_rate_limit",
-    "th_seasonal_baseline",
-    "th_cusum_change",
-    "th_cooccur_lift",
-    "td_domain_quota",
-    "td_label_cohesion",
-    # -- (c) new r06 queries --
-    "td_substring_dedup",
-    "td_url_canonical",
-    "td_host_dedup",
-    "td_sim_topk_ivf_standing",
-    "td_semdedup_standing",
-    "td_substring_decontaminate",
-    "td_unicode_nfc",
-    "td_minhash_recall",
-    "td_ann_recall_ivf",
-    "td_curation_v4",
-    "td_c4_filter",
-    "td_quality_signals",
-    "td_script_mix",
-    "td_length_buckets",
-    "td_pq_topk",
-    "td_pq_rerank",
-    "td_ivfpq_topk",
-    "td_langid_auc",
-    "td_score_calibration",
-    "td_compaction_plan",
-    "td_zorder_layout",
-    "td_pmi_collocations",
-    "td_zipf_fit",
-    "td_mixture_waterfill",
-    "td_host_pagerank",
-    "td_manifest_diff",
-    "th_log_templates",
-    "th_latency_quantiles",
-    "td_bm25_topk",
-    "td_source_js",
-    "td_bitext_mine",
-    "td_template_novelty",
-    "td_hard_negatives",
-    "td_graph_triangles",
-    "td_weighted_sample",
-    "td_source_kmv",
-    "td_skipgram_cooc",
-    "td_token_entropy",
-    "td_rrf_hybrid",
-    "td_oov_rate",
-    "th_hll_sliding",
-    "th_path_trigrams",
-    "td_cdc_dedup",
-    # NOTE staleness exceptions forced by the hard cap-coverage
-    # invariant (43 never-checked new queries are window-mandatory,
-    # leaving 7 slots for the nine r03-row sit-backs): pl_addmeta and
-    # pl_normalize_chain yield — both are thin action-engine wrappers
-    # whose 12 processors / meta fields are individually unit-tested
-    # (test_actions.py, test_reference_semantics.py) and
-    # sf0.01-oracle-parity-checked every gate run; they go FIRST in
-    # the r07 window, ahead of everything else.
-    # NOTE changed-op sit-outs (no slots left for the changed-op
-    # tier): td_sim_topk_ivf / td_semdedup (late-r06 _cell_scores
-    # rewrite, r05 rows 1 round fresh, the IDENTICAL oracle check runs
-    # at the driver's SF in every gate + the effective-scan/BNLJ plan
-    # guards), td_ccnet_buckets / th_funnel (r04 rows; changed this
-    # round but ccnet's scan-sharing is pinned by its dedicated plan
-    # guard and funnel's session-window machinery holds r05 rows via
-    # th_retention/th_burst_detect). All front the r07 window right
-    # after the two pl_* staleness exceptions.
-    # -- r06 sit-outs (r04-green, third-round sit under the
-    # over-capacity policy; ALL untouched since r4, unit + sf0.01
-    # oracle-parity covered every pytest run; front of the r07 window):
-    # pl_json_decode, pl_split, pl_timestamp_loc, pl_maxbytes (displaced
-    # late-r06 for the four new signal/filter queries — each is a thin
-    # actions.py wrapper with dedicated Go-table unit tests),
-    # pl_logalert (displaced for td_pq_topk — untouched pipeline
-    # composite whose pieces are all separately in-window),
-    # pl_route_render (displaced for td_pq_rerank — untouched render
-    # query; the routing + codec pieces stay in-window via
-    # pl_sink_fanout and pl_source_codec),
-    # pl_metrics_contract (displaced for td_ivfpq_topk — its
-    # success/fail counting contract is pinned by dedicated unit tests
-    # and the sf0.01 oracle parity every gate run),
-    # pl_grok_parse, pl_timestamp (displaced for the changed-op
-    # td_sim_topk_ivf/td_semdedup — both are thin actions.py wrappers
-    # with dedicated Go-table unit tests in test_actions.py, untouched
-    # since r4),
-    # pl_arrow_ingest, pl_default_injection (displaced for
-    # td_langid_auc/td_score_calibration — the arrow reader has its own
-    # suite in test_arrow_reader.py and default injection is pinned in
-    # test_pipeline.py; both untouched since r4),
-    # td_sample_mix, td_token_window_dedup, th_heavy_hitters,
-    # td_curation_v2 (the v3/pipeline/v4 composites stay in-window),
-    # td_kmeans_refine (its Lloyd machinery is exercised in-window by
-    # td_semdedup_standing/td_sim_topk_ivf_standing), td_token_chunk, td_seq_pack,
-    # td_epoch_order, td_group_sample,
-    # td_embed_quantize, td_tokenize_ids, td_vocab_topk,
-    # td_corpus_report, td_url_filter, td_containment,
-    # td_ngram_novelty, th_range_join, td_countmin, td_span_dedup,
-    # pl_parse_dlq, pl_sink_fanout, pl_enrich_broadcast, pl_aggregator
-    # (displaced final-r06 for td_compaction_plan/td_zorder_layout/
-    # td_pmi_collocations/td_zipf_fit — all four are untouched-since-r4
-    # pipeline staples with dedicated suites: error-policy DLQ routing
-    # is pinned in test_actions.py and rides pl_error_policy's r04 row,
-    # fanout/enrich/aggregator are pinned
-    # in test_pipeline.py / test_reference_semantics.py),
-    # td_bigram_lm (displaced for td_mixture_waterfill — untouched
-    # since r4, unit-tested in the corpusstats suite, and its bigram-LM
-    # machinery is re-proven every round by the r5-checked td_target_lm
-    # and the in-window td_ccnet_buckets which embed it),
-    # td_curation_pipeline, td_idf_keywords (displaced for
-    # td_host_pagerank/td_manifest_diff — the curation composite's
-    # pieces all sit in-window via td_curation_v4 and the dedup
-    # family; idf's capped variant was r5-checked and the tf-idf
-    # machinery is unit-tested in the corpusstats suite),
-    # td_bloom_decontaminate, td_split_leakage_safe (displaced
-    # closing-r06 for th_log_templates/th_latency_quantiles — the
-    # bloom machinery is property-tested in the sketches suite and the
-    # decontamination face stays in-window via td_decontaminate +
-    # td_substring_decontaminate; the leakage-safe split's
-    # cluster-atomicity invariant is unit-tested in test_sampling and
-    # its dup-cluster input op holds an r5 row via td_dup_clusters),
-    # th_asof_join (displaced closing-r06 for td_bm25_topk — the as-of
-    # machinery holds a 1-round-fresh r05 row via
-    # th_asof_join_bucketed, which exercises the same union +
-    # carry-forward window plus the hot-key mode on top),
-    # td_dsir_weights (displaced closing-r06 for td_source_js — the
-    # weights derivation is embedded in the r05-checked
-    # td_dsir_resample and its single-scan-totals shape stays pinned by
-    # the dedicated plan guard),
-    # th_sessionize (displaced closing-r06 for td_bitext_mine — the
-    # session-window machinery holds r05 rows via th_retention and
-    # th_burst_detect, and th_funnel stays in-window),
-    # td_dedup_incremental, td_cluster_survivors (displaced closing-r06
-    # for td_template_novelty/td_hard_negatives — both untouched since
-    # r4 with dedicated unit tests; the incremental anti-join pieces
-    # hold r05 rows via td_dedup_minhash_lsh and the survivor window is
-    # embedded in the in-window td_semdedup),
-    # pl_multiline, pl_error_policy, td_curation_v3,
-    # pl_regex_route_metrics (displaced end-of-r06 for the four new
-    # td_graph_triangles/td_weighted_sample/td_source_kmv/
-    # td_skipgram_cooc queries — all four anchors untouched since r4:
-    # multiline's fold is pinned in test_reference_semantics.py,
-    # error-policy + regex-route in test_actions.py/test_pipeline.py
-    # with their action pieces exercised in-window via pl_conditions/
-    # pl_convert_keep/pl_replace/pl_tostr, and td_curation_v3's stages
-    # all hold fresher rows individually — the in-window td_curation_v4
-    # supersets its composition) --
-    # NOTE r07 registration debt: quality_rules_report
-    # (observability.py — the condition-grammar batch QA audit) and
-    # k_anonymity_report (curation.py — QI class-size privacy bands)
-    # landed post-certification as unit-tested operators WITHOUT
-    # registry entries, because all 50 r06 slots already held
-    # never-checked queries (the cap-coverage invariant forbids
-    # registering a query it cannot window). Register both with DuckDB
-    # oracles in r07 and window them as (c)-tier new queries after the
-    # staleness tiers.
-]
-
-
-def _apply_driver_order() -> None:
-    prio = [q for q in _DRIVER_PRIORITY if q in QUERIES]
-    missing = [q for q in _DRIVER_PRIORITY if q not in QUERIES]
-    if missing:  # a typo here would silently waste a driver slot
-        raise RuntimeError(f"_DRIVER_PRIORITY names unknown queries: {missing}")
-    seen = set(prio)
-    order = prio + [q for q in QUERIES if q not in seen]
-    for d in (QUERIES, ORACLES):
-        snap = {k: d[k] for k in order if k in d}
-        d.clear()
-        d.update(snap)
-
-
-_apply_driver_order()

@@ -83,28 +83,6 @@ def rendezvous_dir(key: Column, dirs: list[str]) -> Column:
     return F.array_max(candidates)["d"]
 
 
-def attach_routes(
-    df: DataFrame, sink: SinkSpec, time_col: Column | None = None
-) -> DataFrame:
-    """Single-sink routing: add ``route_key`` + ``_route_failed``
-    columns applying the render-failure policy."""
-    route = compile_pattern(sink.route_pattern, time_col=time_col)
-    ok = pattern_is_strict_ok(sink.route_pattern)
-    if sink.on_render_fail == "default":
-        route = F.when(ok, route).otherwise(F.lit(sink.default_route))
-        failed = F.lit(False)
-    elif sink.on_render_fail == "drop":
-        failed = ~ok
-    elif sink.on_render_fail == "ignore":
-        failed = F.lit(False)
-        route = F.when(ok, route).otherwise(F.lit(""))
-    else:  # 'fail' — surfaced as failed rows; the caller raises/counts
-        failed = ~ok
-    return df.withColumn(SINK_COL, F.lit(sink.name)).withColumn(
-        ROUTE_COL, route
-    ).withColumn(FAILED_COL, failed)
-
-
 def explode_to_sinks(
     df: DataFrame, sinks: list[SinkSpec], time_col: Column | None = None
 ) -> DataFrame:

@@ -1,7 +1,6 @@
 from loggie_spark.sources.readers import (
     read_table,
     with_addon_meta,
-    dev_source,
     decode_json_codec,
     decode_regex_codec,
 )
@@ -9,7 +8,6 @@ from loggie_spark.sources.readers import (
 __all__ = [
     "read_table",
     "with_addon_meta",
-    "dev_source",
     "decode_json_codec",
     "decode_regex_codec",
 ]

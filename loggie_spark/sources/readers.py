@@ -75,14 +75,6 @@ def with_addon_meta(df: DataFrame, add_hostname: bool = True) -> DataFrame:
     return out
 
 
-def dev_source(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """The dev synthetic source: deterministic generated events
-    (qps/byteSize/eventsTotal ≙ row count + line shapes)."""
-    from loggie_spark.datagen import generate_sequences
-
-    return generate_sequences(spark, n, partitions=partitions)
-
-
 def decode_json_codec(
     df: DataFrame,
     body_col: str = "body",
