@@ -59,6 +59,7 @@ from loggie_spark.patterns import (
     go_layout_to_jvm,
     named_groups,
     normalize_named_groups,
+    split_groups,
 )
 
 # A value heavier than this (expression size in column reads) is
@@ -463,13 +464,6 @@ def _add_meta(ctx: _Ctx, args: list[str], extra: dict) -> None:
 # --------------------------------------------------------------------------
 
 
-# Multi-byte sentinel for the single-pass extraction (see _apply_regex);
-# collision with real log content is negligible and only degrades to a
-# non-match for that row.
-_XSEP = "\x01\x00\x02"
-_XMARK = "\x02\x06\x03"
-
-
 def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict) -> None:
     """Named-group extraction in ONE regex pass.
 
@@ -490,24 +484,15 @@ def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict)
         wrapped = "^(?s).*?" + wrapped
     if not wrapped.endswith("$"):
         wrapped = wrapped + "(?s).*$"
-    # Leading marker disambiguates a real match from a line that merely
-    # splits into n parts (critical for single-group patterns, where a
-    # non-matching line is itself a 1-element split).
-    repl = _XMARK + _XSEP + _XSEP.join(f"${i}" for i in range(1, n + 1))
-
-    parts = F.split(F.regexp_replace(src, wrapped, repl), _XSEP)
 
     # The split ARRAY is the kernel: inlined, the regex re-ran for every
     # reference (8-50× per row on the flagship), and one struct field per
     # group would still run it n+1 times (no subexpression elimination
     # inside a Generate; 4.9 s → 0.9 s on pl_grok_parse at sf0.1).
-    parr = ctx.kernel(parts)
-    # coalesce: a NULL body (or a row the kernel skipped) yields
-    # NULL size/get (Spark 4 ANSI), but the reference's GetString("")
-    # → no-match → action error semantics need a definite False here.
-    matched = F.coalesce(
-        (F.size(parr) == n + 1) & (F.get(parr, 0) == _XMARK), F.lit(False)
-    )
+    # matched is a definite boolean: a NULL body (or a row the kernel
+    # skipped) is the reference's GetString("") → no-match → action
+    # error semantics.
+    parr, matched = split_groups(src, wrapped, n, kernel=ctx.kernel)
 
     ignore_blank = extra.get("ignoreBlank", False)
     out_cols: dict[str, Column] = {}

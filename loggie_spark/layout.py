@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 
 from loggie_spark.checkpoint import read_json_marker, write_json_marker
 
+SHARD_COL = "shard"
+
 
 def save_bucketed(
     df: DataFrame,
@@ -42,10 +44,34 @@ def save_bucketed(
     )
 
 
+def _shard_stats(shards: DataFrame, shard_col: str, id_col: str, len_col: str) -> dict:
+    """Per-shard ``rows``, ``tokens`` and ``fingerprint`` (bit-XOR of
+    the ids' 60-bit hashes) — the manifest entry the export writes and
+    the check the verifier re-derives, from one aggregate."""
+    from pyspark.sql import functions as F
+
+    from loggie_spark.functions.hashing import md5_60bit
+
+    rows = (
+        shards.groupBy(shard_col)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("rows"),
+            F.sum(len_col).cast("long").alias("tokens"),
+            F.bit_xor(md5_60bit(F.col(id_col).cast("string"))).cast("long").alias("fingerprint"),
+        )
+        .orderBy(shard_col)
+        .collect()
+    )
+    return {
+        str(r[shard_col]): {"rows": r.rows, "tokens": r.tokens, "fingerprint": r.fingerprint}
+        for r in rows
+    }
+
+
 def write_training_shards(
     df: DataFrame,
     out_dir: str,
-    shard_col: str = "shard",
+    shard_col: str = SHARD_COL,
     id_col: str = "doc_id",
     len_col: str = "n_tok",
     max_records_per_file: int = 1_000_000,
@@ -79,38 +105,17 @@ def write_training_shards(
     """
     from pyspark.sql import functions as F
 
-    from loggie_spark.functions.hashing import md5_60bit
-
     spark = df.sparkSession
     staged = df.repartition(F.col(shard_col))
     staged.write.mode("overwrite").option(
         "maxRecordsPerFile", max_records_per_file
     ).partitionBy(shard_col).parquet(out_dir)
 
-    per_shard = (
-        spark.read.parquet(out_dir)
-        .groupBy(shard_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("rows"),
-            F.sum(len_col).cast("long").alias("tokens"),
-            F.bit_xor(md5_60bit(F.col(id_col).cast("string")))
-            .cast("long")
-            .alias("fingerprint"),
-        )
-        .orderBy(shard_col)
-        .collect()
-    )
+    shards = _shard_stats(spark.read.parquet(out_dir), shard_col, id_col, len_col)
     manifest = {
-        "shards": {
-            str(r[shard_col]): {
-                "rows": r.rows,
-                "tokens": r.tokens,
-                "fingerprint": r.fingerprint,
-            }
-            for r in per_shard
-        },
-        "total_rows": int(sum(r.rows for r in per_shard)),
-        "total_tokens": int(sum(r.tokens for r in per_shard)),
+        "shards": shards,
+        "total_rows": int(sum(v["rows"] for v in shards.values())),
+        "total_tokens": int(sum(v["tokens"] for v in shards.values())),
     }
     # manifest LAST: its presence is the commit marker
     write_json_marker(spark, out_dir, "_manifest.json", manifest)
@@ -120,31 +125,13 @@ def write_training_shards(
 def verify_training_shards(spark, out_dir: str, id_col: str = "doc_id", len_col: str = "n_tok") -> None:
     """Re-derive every manifest entry from the shard data and raise
     ``RuntimeError`` on any mismatch (missing manifest = aborted
-    export; count/token/fingerprint drift = torn or corrupted shard).
-    The consuming trainer runs this before touching payloads."""
-    from pyspark.sql import functions as F
-
-    from loggie_spark.functions.hashing import md5_60bit
-
+    export; count/token/fingerprint drift = torn or corrupted shard)
+    of an export partitioned by the default ``SHARD_COL``. The
+    consuming trainer runs this before touching payloads."""
     manifest = read_json_marker(spark, out_dir, "_manifest.json")
     if manifest is None:
         raise RuntimeError(f"no _manifest.json in {out_dir}: aborted export")
-    got = {
-        str(r["shard"]): r
-        for r in (
-            spark.read.parquet(out_dir)
-            .groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("rows"),
-                F.sum(len_col).cast("long").alias("tokens"),
-                F.bit_xor(md5_60bit(F.col(id_col).cast("string")))
-                .cast("long")
-                .alias("fingerprint"),
-            )
-            .collect()
-        )
-    }
-    got = {k: {"rows": v["rows"], "tokens": v["tokens"], "fingerprint": v["fingerprint"]} for k, v in got.items()}
+    got = _shard_stats(spark.read.parquet(out_dir), SHARD_COL, id_col, len_col)
     want = manifest["shards"]
     if got != want:
         missing = sorted(set(want) - set(got))

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -303,8 +304,8 @@ def extract_pattern(
     pull e.g. a pod uid out of a log path shaped like
     ``/var/log/pods/${namespace}_${podname}_${poduid}/...``.
 
-    Compiles to ONE regexp pass (same replace+split trick as the regex
-    action — the literal segments become the regex skeleton, each
+    Compiles to ONE regexp pass (:func:`split_groups`, shared with the
+    regex action — the literal segments become the regex skeleton, each
     ``${field}`` a lazy capture).
     """
     col = F.col(value) if isinstance(value, str) else value
@@ -326,16 +327,36 @@ def extract_pattern(
     regex_parts.append("$")
     rx = "".join(regex_parts)
 
-    sep = "\x01\x00\x02"
-    mark = "\x02\x06\x03"
-    # Leading marker: without it a non-matching single-field pattern
-    # would look matched (1-element split == 1 field).
-    repl = mark + sep + sep.join(f"${i}" for i in range(1, len(fields) + 1))
-    parts = F.split(F.regexp_replace(col, rx, repl), sep)
-    ok = (F.size(parts) == len(fields) + 1) & (F.get(parts, 0) == mark)
-    return {
-        f: F.when(ok, F.get(parts, i + 1)) for i, f in enumerate(fields)
-    }
+    parts, ok = split_groups(col, rx, len(fields))
+    return {f: F.when(ok, F.get(parts, i + 1)) for i, f in enumerate(fields)}
+
+
+# Multi-byte sentinels of the one-pass extraction; a collision with
+# real log content is negligible and only degrades that row to a
+# non-match.
+_XSEP = "\x01\x00\x02"
+_XMARK = "\x02\x06\x03"
+
+
+def split_groups(
+    col: Column, regex: str, n: int, kernel: Callable[[Column], Column] | None = None
+) -> tuple[Column, Column]:
+    """All ``n`` capture groups of a whole-string ``regex`` in ONE pass:
+    regexp_replace the value with ``MARK SEP $1 SEP $2 ...`` and split
+    on SEP. Returns ``(parts, matched)``: ``parts[i]`` (1-based) is
+    group i, and ``matched`` is a definite boolean (False for a NULL
+    value or a non-match). ``kernel`` maps the split array before it is
+    read (the regex action computes it once in the parse Generate).
+
+    The leading marker tells a real match from a value that merely
+    splits into n+1 parts (a non-matching line is itself a 1-element
+    split)."""
+    repl = _XMARK + _XSEP + _XSEP.join(f"${i}" for i in range(1, n + 1))
+    parts = F.split(F.regexp_replace(col, regex, repl), _XSEP)
+    if kernel is not None:
+        parts = kernel(parts)
+    matched = F.coalesce((F.size(parts) == n + 1) & (F.get(parts, 0) == _XMARK), F.lit(False))
+    return parts, matched
 
 
 def pattern_fields(pattern: str) -> list[str]:

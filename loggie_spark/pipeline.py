@@ -41,8 +41,8 @@ from pyspark.sql import Observation
 from loggie_spark.actions import Plan, _Ctx, dispatch
 from loggie_spark.checkpoint import BUCKET_COL, Manifest, list_names, with_bucket
 from loggie_spark.enrich import broadcast_enrich
+from loggie_spark.sinks.metrics import ok_fail_counts
 from loggie_spark.sinks.router import (
-    FAILED_COL,
     PKEY_COL,
     ROUTE_COL,
     SINK_COL,
@@ -220,15 +220,9 @@ class Pipeline:
         if cfg.lookup is not None:
             out = broadcast_enrich(out, cfg.lookup, cfg.lookup_keys)
 
-        # Routed fan-out.
-        out = explode_to_sinks(out, cfg.sinks, time_col=time_col)
-        # 'fail'-policy render failures are quarantined, not lost —
-        # they land under route_key=__failed__ and count as fail_count.
-        out = out.withColumn(
-            ROUTE_COL,
-            F.when(F.col(FAILED_COL), F.lit("__failed__")).otherwise(F.col(ROUTE_COL)),
-        )
-        return out
+        # Routed fan-out; 'fail'-policy render failures are quarantined
+        # under route_key=__failed__ and count as fail_count.
+        return explode_to_sinks(out, cfg.sinks, time_col=time_col)
 
     def _dispatch(self, ctx: _Ctx, fields: dict[str, dict], under_key: str | None) -> _Ctx:
         """belongTo: each source's stage compiles, without gates, on a
@@ -392,10 +386,7 @@ class Pipeline:
             )
             agg_rows = (
                 written.groupBy(BUCKET_COL, cfg.source_col, SINK_COL)
-                .agg(
-                    F.count_if(~F.col(FAILED_COL)).alias("ok"),
-                    F.count_if(F.col(FAILED_COL)).alias("bad"),
-                )
+                .agg(*ok_fail_counts())
                 .collect()
             )
 
@@ -404,10 +395,10 @@ class Pipeline:
         metrics: list[dict] = []
         for r in agg_rows:
             b = r[BUCKET_COL]
-            rows_out_by_bucket[b] = rows_out_by_bucket.get(b, 0) + r.ok + r.bad
+            rows_out_by_bucket[b] = rows_out_by_bucket.get(b, 0) + r.success_count + r.fail_count
             metrics.append({
                 "bucket": b, "pipeline": cfg.name, "source": r[cfg.source_col],
-                "sink": r[SINK_COL], "success_count": r.ok, "fail_count": r.bad,
+                "sink": r[SINK_COL], "success_count": r.success_count, "fail_count": r.fail_count,
             })
         lineage = [
             {

@@ -5,8 +5,8 @@ loop computes per event: ``route_key`` is the strict-rendered topic
 with the ifRenderTopicFailed policy applied (router.py), and ``_pkey``
 is the non-strict-rendered partitionKey (sink.go:197-199).
 :func:`encode_kafka_records` projects that + a codec payload into the
-exact (key, value, topic) shape Spark's kafka writer sends, and
-:func:`write_kafka` performs the send (batch or streaming).
+exact (key, value, topic) shape Spark's kafka writer sends
+(``records.write.format("kafka")``).
 
 Like the source, the kafka client package is external; tests assert
 the encoded frame (schema + key/topic/value contents) and the
@@ -61,25 +61,3 @@ def encode_kafka_records(
         F.col(ROUTE_COL).alias("topic"),
     )
 
-
-def write_kafka(
-    records: DataFrame,
-    brokers: list[str],
-    streaming: bool = False,
-    checkpoint_path: str | None = None,
-    **producer_opts: str,
-):
-    """Send encoded records. Per-row ``topic`` column routes each record
-    (AllowAutoTopicCreation analog: the broker decides). Extra producer
-    options pass through as ``kafka.*`` (acks, compression.type,
-    batch.size — config.go BatchSize/RequiredAcks/Compression)."""
-    if streaming:
-        writer = records.writeStream.format("kafka").option(
-            "checkpointLocation", checkpoint_path
-        )
-    else:
-        writer = records.write.format("kafka")
-    writer = writer.option("kafka.bootstrap.servers", ",".join(brokers))
-    for k, v in producer_opts.items():
-        writer = writer.option(f"kafka.{k}", v)
-    return writer.start() if streaming else writer.save()

@@ -13,33 +13,28 @@ the tiny (pipeline, source, sink) key space moves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loggie_spark.sinks.router import FAILED_COL, SINK_COL
 
 
-def sink_metrics(
-    routed: DataFrame,
-    pipeline_name: str,
-    source_col: str = "source",
-    failed_col: str | None = FAILED_COL,
-) -> DataFrame:
+def ok_fail_counts() -> list[Column]:
+    """``success_count`` / ``fail_count`` aggregates over routed rows: a
+    row is a failure iff the router flagged its route render
+    (``_route_failed``, the 'fail' policy's quarantine)."""
+    failed = F.col(FAILED_COL)
+    return [
+        F.count_if(~failed).alias("success_count"),
+        F.count_if(failed).alias("fail_count"),
+    ]
+
+
+def sink_metrics(routed: DataFrame, pipeline_name: str, source_col: str = "source") -> DataFrame:
     """(pipeline, source, sink, success_count, fail_count) —
     FIXTURES.md §F4 metrics contract, exact counts."""
-    failed = (
-        F.col(failed_col).cast("boolean")
-        if failed_col and failed_col in routed.columns
-        else F.lit(False)
-    )
-    return (
-        routed.groupBy(
-            F.lit(pipeline_name).alias("pipeline"),
-            F.col(source_col).alias("source"),
-            F.col(SINK_COL).alias(SINK_COL),
-        )
-        .agg(
-            F.sum(F.when(~failed, 1).otherwise(0)).alias("success_count"),
-            F.sum(F.when(failed, 1).otherwise(0)).alias("fail_count"),
-        )
-    )
+    return routed.groupBy(
+        F.lit(pipeline_name).alias("pipeline"),
+        F.col(source_col).alias("source"),
+        F.col(SINK_COL),
+    ).agg(*ok_fail_counts())

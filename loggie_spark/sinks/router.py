@@ -87,36 +87,38 @@ def explode_to_sinks(
     df: DataFrame, sinks: list[SinkSpec], time_col: Column | None = None
 ) -> DataFrame:
     """Fan one row out to every sink whose selector matches, in ONE
-    narrow pass (array-of-structs + explode; no shuffle, no N jobs).
+    narrow pass: one ``explode`` of an array with one
+    ``CASE WHEN <emit> THEN struct(...) END`` entry per sink, then one
+    projection that drops the NULL entries and expands the struct. The
+    same plan for any number of sinks — one sink is the reference's
+    own shape (an event has exactly one sink per pipeline); more
+    generalize the Selector interface.
 
-    Adds ``sink``, ``route_key``, ``_route_failed`` and ``_pkey`` (the
+    Adds ``sink``, ``route_key``, ``_route_failed``, ``_pkey`` (the
     sink's rendered ``partition_key``, null when unset — the kafka
     partitionKey analog used to co-locate equal keys in one writer
-    task, sink.go:197-199). Rows matching no sink disappear (reference:
-    an event always has exactly one sink per pipeline; multi-sink here
-    generalizes the Selector interface).
+    task, sink.go:197-199) and ``_doc_id``, replacing input columns of
+    those names. Rows matching no sink disappear.
 
     ``on_render_fail='drop'`` silently omits the event from that sink —
     the entry never enters the array, matching the reference's
-    DropEvent (kafka/sink.go:139-141: no failure accounting, no output).
+    DropEvent (kafka/sink.go:139-141: no failure accounting, no
+    output). ``'fail'`` quarantines it: the whole route (base dir
+    included) becomes ``__failed__`` and ``_route_failed`` is true, so
+    the metrics contract counts it as a failure.
     """
     entries = []
     for s in sinks:
         route = compile_pattern(s.route_pattern, time_col=time_col)
         ok = pattern_is_strict_ok(s.route_pattern)
         emit = s.selector_col()
-        if s.on_render_fail == "default":
+        policy = s.on_render_fail
+        if policy == "default":
             route = F.when(ok, route).otherwise(F.lit(s.default_route))
-            failed = F.lit(False)
-        elif s.on_render_fail == "drop":
-            emit = emit & F.coalesce(ok, F.lit(False))
-            failed = F.lit(False)
-        elif s.on_render_fail == "ignore":
-            failed = F.lit(False)
+        elif policy == "ignore":
             route = F.when(ok, route).otherwise(F.lit(""))
-        else:  # 'fail' — quarantined + counted by the metrics contract
-            failed = ~ok
-            route = F.when(ok, route).otherwise(F.lit(""))
+        elif policy == "drop":
+            emit = emit & ok
         pkey = (
             compile_pattern(s.partition_key, time_col=time_col).cast("string")
             if s.partition_key
@@ -137,43 +139,25 @@ def explode_to_sinks(
                 else F.lit("")
             )
             route = F.concat(rendezvous_dir(hash_key, s.base_dirs), route)
-        if len(sinks) == 1:
-            # Fast path — one sink is the reference's own shape (an
-            # event has exactly one sink per pipeline): plain column
-            # projection, no Generate in the plan. A 'drop'-policy or
-            # selector miss is a filter instead of an empty array.
-            out = df
-            if s.selector is not None or s.on_render_fail == "drop":
-                out = out.filter(emit)
-            return (
-                out.withColumn(SINK_COL, F.lit(s.name))
-                .withColumn(ROUTE_COL, route)
-                .withColumn(FAILED_COL, failed)
-                .withColumn(PKEY_COL, pkey)
-                .withColumn(DOCID_COL, doc_id)
-            )
-        entry = F.when(
-            emit,
-            F.struct(
-                F.lit(s.name).alias(SINK_COL),
-                route.alias(ROUTE_COL),
-                failed.alias(FAILED_COL),
-                pkey.alias(PKEY_COL),
-                doc_id.alias(DOCID_COL),
-            ),
+        failed = F.lit(False)
+        if policy not in ("default", "ignore", "drop"):  # 'fail'
+            failed = ~ok
+            route = F.when(ok, route).otherwise(F.lit("__failed__"))
+        entry = F.struct(
+            F.lit(s.name).alias(SINK_COL),
+            route.alias(ROUTE_COL),
+            failed.alias(FAILED_COL),
+            pkey.alias(PKEY_COL),
+            doc_id.alias(DOCID_COL),
         )
-        entries.append(entry)
+        entries.append(F.when(emit, entry))
 
-    routed = df.withColumn("_sinks", F.filter(F.array(*entries), lambda x: x.isNotNull()))
-    routed = routed.withColumn("_s", F.explode("_sinks")).drop("_sinks")
-    return (
-        routed.withColumn(SINK_COL, F.col("_s")[SINK_COL])
-        .withColumn(ROUTE_COL, F.col("_s")[ROUTE_COL])
-        .withColumn(FAILED_COL, F.col("_s")[FAILED_COL])
-        .withColumn(PKEY_COL, F.col("_s")[PKEY_COL])
-        .withColumn(DOCID_COL, F.col("_s")[DOCID_COL])
-        .drop("_s")
-    )
+    added = {SINK_COL, ROUTE_COL, FAILED_COL, PKEY_COL, DOCID_COL}
+    keep = ["`" + c.replace("`", "``") + "`" for c in df.columns if c.lower() not in added]
+    # The entry struct travels under the name of its first field and is
+    # expanded in place, so no staging column is left behind.
+    routed = df.select(*keep, F.explode(F.array(*entries)).alias(SINK_COL))
+    return routed.filter(F.col(SINK_COL).isNotNull()).select(*keep, f"{SINK_COL}.*")
 
 
 def iceberg_available(spark) -> bool:

@@ -36,7 +36,7 @@ def read_table(
     excludeFiles / ignoreOlder) map onto scan-level features:
 
     * ``glob``         → ``pathGlobFilter`` (include glob, applied at
-      file listing — a driver-side prune, no data touched)
+      file listing — decided on the driver, no data touched)
     * ``exclude``      → regex on the file path, filtered via
       ``input_file_name()`` (excludeFiles semantics; listing-level
       excludes beyond one glob need an external catalog)
@@ -81,12 +81,11 @@ def decode_json_codec(
     fields: list[str] | None = None,
     schema: str | None = None,
     body_field: str | None = None,
-    prune: bool = True,
 ) -> DataFrame:
     """Source codec ``json`` (codec/json/json.go:28-37,61): decode the
-    body as JSON, lift ``fields`` (or a typed ``schema``); with
-    ``body_field`` the named field REPLACES the body (bodyFields), and
-    ``prune`` drops the original JSON."""
+    body as JSON and lift ``fields`` (or a typed ``schema``) to
+    columns; with ``body_field`` the named field REPLACES the body
+    (bodyFields), otherwise the body keeps the original JSON."""
     src = F.col(body_col).cast("string")
     if schema:
         parsed = F.from_json(src, schema)
@@ -101,8 +100,6 @@ def decode_json_codec(
             df = df.withColumn(n, parsed.getItem(n))
     if body_field:
         df = df.withColumn(body_col, F.col(body_field))
-    elif not prune:
-        pass
     return df
 
 

@@ -26,7 +26,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from loggie_spark.pipeline import Pipeline, PipelineConfig
-from loggie_spark.sinks.router import FAILED_COL, ROUTE_COL, SINK_COL
+from loggie_spark.sinks.metrics import ok_fail_counts
+from loggie_spark.sinks.router import ROUTE_COL, SINK_COL
 
 
 def stream_pipeline(
@@ -120,11 +121,6 @@ def stream_metrics(
     """Windowed per-sink success/fail counts — the streaming version of
     the metric-interceptor contract: one row per (window, pipeline,
     source, sink) per period, exactly like the eventbus export cycle."""
-    failed = (
-        F.col(FAILED_COL).cast("boolean")
-        if FAILED_COL in routed.columns
-        else F.lit(False)
-    )
     return (
         routed.withWatermark(time_col, watermark)
         .groupBy(
@@ -133,10 +129,7 @@ def stream_metrics(
             F.col(source_col).alias("source"),
             F.col(SINK_COL),
         )
-        .agg(
-            F.sum(F.when(~failed, 1).otherwise(0)).alias("success_count"),
-            F.sum(F.when(failed, 1).otherwise(0)).alias("fail_count"),
-        )
+        .agg(*ok_fail_counts())
     )
 
 

@@ -237,6 +237,60 @@ def test_render_fail_policies(spark, tmp_path):
     assert {r.doc_id: r._route_failed for r in rows} == {"a": False}
 
 
+def test_route_one_path_for_any_sink_count(spark):
+    """One route path: for every render-fail policy and for a selector
+    miss, a sink routed alone yields the same rows as the same sink
+    routed beside a second sink."""
+    from loggie_spark.sinks.router import SinkSpec, explode_to_sinks
+
+    df = spark.createDataFrame(
+        [("a", "t1", 1), ("b", None, 2), ("c", "", 3)], "doc_id string, topic string, n int"
+    )
+    want = {
+        "default": {"a": ("t1", False), "b": ("dflt", False), "c": ("dflt", False)},
+        "drop": {"a": ("t1", False)},
+        "ignore": {"a": ("t1", False), "b": ("", False), "c": ("", False)},
+        "fail": {"a": ("t1", False), "b": ("__failed__", True), "c": ("__failed__", True)},
+    }
+    cases = [
+        (SinkSpec("k", "${topic}", on_render_fail=p, default_route="dflt"), w)
+        for p, w in want.items()
+    ]
+    # selector miss: row a never reaches the sink
+    cases.append(
+        (SinkSpec("k", "r-${doc_id}", selector="greater(n, 1)"), {"b": ("r-b", False), "c": ("r-c", False)})
+    )
+    for sink, expected in cases:
+        alone = explode_to_sinks(df, [sink])
+        beside = explode_to_sinks(df, [sink, SinkSpec("other", "o")])
+        assert alone.columns == beside.columns
+        rows = alone.collect()
+        assert {r.doc_id: (r.route_key, r._route_failed) for r in rows} == expected
+        paired = beside.filter(F.col("sink") == "k").collect()
+        assert {r.doc_id: tuple(r) for r in rows} == {r.doc_id: tuple(r) for r in paired}
+        assert beside.filter(F.col("sink") == "other").count() == 3
+
+
+def test_route_fail_quarantine_in_router(spark):
+    """The 'fail' policy's quarantine comes straight from the router:
+    the whole route, base dir included, becomes ``__failed__`` and the
+    row counts as a failure. An input ``route_key`` column is replaced."""
+    from loggie_spark.sinks.metrics import sink_metrics
+    from loggie_spark.sinks.router import SinkSpec, explode_to_sinks
+
+    df = spark.createDataFrame(
+        [("a", "t1", "old"), ("b", None, "old")], "doc_id string, topic string, route_key string"
+    )
+    sink = SinkSpec("f", "${topic}.log", base_dirs=["/d1/", "/d2/"], dir_hash_key="${doc_id}")
+    out = explode_to_sinks(df, [sink])
+    assert out.columns.count("route_key") == 1
+    got = {r.doc_id: (r.route_key, r._route_failed) for r in out.collect()}
+    assert got["b"] == ("__failed__", True)
+    assert got["a"] in {("/d1/t1.log", False), ("/d2/t1.log", False)}
+    m = {r.source: (r.success_count, r.fail_count) for r in sink_metrics(out, "p", "doc_id").collect()}
+    assert m == {"a": (1, 0), "b": (0, 1)}
+
+
 def test_write_routed_rotation_analog(spark, tmp_path):
     """file/config.go:21-53 rotation analog: max_size_mb caps bytes per
     output file via maxRecordsPerFile; compress=True selects gzip."""
