@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32).
+the sf0.1 test data, SF_DIR below) on local[$SPARK_GRAFT_CPUS] (default:
+the CPUs this process may run on).
 
 Prints ONE JSON line:
   {"metric": "sequences_per_sec_e2e", "value": N, "unit": "seq/s",
@@ -24,7 +25,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # Tokenized-table size for the flagship e2e run (rows scale with SF:
 # sf0.1 → 2M sequences ≈ 150 MB of decoded log lines).
 N_SEQ = int(os.environ.get("SPARK_GRAFT_N_SEQ", "2000000"))

@@ -31,7 +31,7 @@ import time
 
 CHILD = r"""
 import json, os, time
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 CPUS = int(os.environ["SPARK_GRAFT_CPUS"])
 import bench
 from loggie_spark.session import get_spark

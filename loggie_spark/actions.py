@@ -7,9 +7,9 @@ short-circuits the rest of the program for that row; ``dropEvent()``
 drops the row; per-action ``ignoreError`` / ``dropIfError`` policies
 (action/action.go:33-38,110-120).
 
-Here a program compiles at plan time into column expressions; no
-per-row Python runs. The compiler keeps a symbolic row — each column's
-current value as an expression over the input columns — and per-row
+Here a program compiles at plan time into SQL text; no per-row Python
+runs. The compiler keeps a symbolic row — each column's current value
+as SQL over the input columns, with its Spark type — and per-row
 control state: ``dropped`` (dropEvent, dropIfError; filtered at the
 end), ``halted`` (return() or an action failing under the default
 policy: the rest of the interceptor is skipped and the event forwards
@@ -29,6 +29,13 @@ Per-source programs (``belongTo``) compile without gates on forks of
 one context; :func:`dispatch` merges them so each column is written
 once: ``CASE source WHEN a THEN value_a ... ELSE old END``.
 
+Spark receives the finished text once per output column, kernel slot
+and drop filter (``selectExpr``/``filter``), so building a plan costs a
+few hundred py4j round trips however long the programs are. Types come
+from the program (regex/grok/split give strings, ``strconv`` its
+target, ``jsonDecode`` its schema, literals their own) and from the
+input schema, read once; nothing is analysed to learn a type.
+
 Program shape (pkg/interceptor/transformer/example/pipeline.yml):
 
     [
@@ -42,24 +49,37 @@ Program shape (pkg/interceptor/transformer/example/pipeline.yml):
 
 from __future__ import annotations
 
-import functools
-import operator
 import re
 from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-from loggie_spark.expr import compile_condition, parse_call
+from loggie_spark.expr import condition_sql, parse_call
 from loggie_spark.fieldpath import flat_name, parse_path
 from loggie_spark.patterns import (
-    compile_pattern,
     expand_grok,
     go_layout_to_jvm,
     named_groups,
     normalize_named_groups,
+    pattern_sql,
     split_groups,
+)
+from loggie_spark.sqltext import (
+    ARRAY_STRING,
+    BOOLEAN,
+    LONG,
+    MAP_STRING,
+    STRING,
+    TIMESTAMP,
+    Sql,
+    ident,
+    item,
+    lit,
+    quote,
+    struct,
+    try_cast,
 )
 
 # A value heavier than this (expression size in column reads) is
@@ -70,6 +90,8 @@ _PIN_WEIGHT = 64
 
 _NAMED_GROUP_ANY = re.compile(r"\(\?P?<([a-zA-Z][a-zA-Z0-9_]*)>")
 
+_NULL = lit(None)
+
 
 def _java_pattern(pattern: str) -> str:
     """Java regex wants ``(?<n>…)``; strip the Python ``P``."""
@@ -77,68 +99,86 @@ def _java_pattern(pattern: str) -> str:
 
 
 class _Val(NamedTuple):
-    """A symbolic value: its expression, the Generate depth it reads
-    (0 = input columns only) and its size in column reads."""
+    """A symbolic value: its SQL, the Generate depth it reads (0 =
+    input columns only) and its size in column reads."""
 
-    expr: Column
+    sql: Sql
     level: int = 0
     weight: int = 1
 
 
-def _and(parts: list[Column]) -> Column | None:
-    return functools.reduce(operator.and_, parts) if parts else None
+def _not(text: str) -> str:
+    return f"(NOT {text})"
+
+
+def _and(parts: list[str]) -> str | None:
+    if not parts:
+        return None
+    return parts[0] if len(parts) == 1 else "(" + " AND ".join(parts) + ")"
+
+
+def _case(arms: list[tuple[str, str]], default: str | None) -> str:
+    whens = " ".join(f"WHEN {cond} THEN {value}" for cond, value in arms)
+    return f"CASE {whens}" + ("" if default is None else f" ELSE {default}") + " END"
+
+
+def _str(v: Sql) -> str:
+    return f"CAST({v.text} AS STRING)"
 
 
 class Plan:
-    """One compile over one input frame: the kernels its Generates
-    compute, and a frame to probe expression types on."""
+    """One compile over one input frame: its schema (read once) and the
+    kernels its Generates compute. ``time_col`` names the processing-time
+    column (default ``current_timestamp()``)."""
 
-    def __init__(self, df: DataFrame, time_col: Column | None = None, env: dict | None = None):
-        self.df = self.probe = df  # probe: df + every kernel as a column
-        self.kernels: list[tuple[str, Column, int]] = []  # (name, slot, depth)
-        self.time_col, self.env = time_col, env
+    def __init__(self, df: DataFrame, time_col: str | None = None, env: dict | None = None):
+        self.df = df
+        self.schema = {f.name: f.dataType for f in df.schema.fields}
+        self.kernels: list[tuple[str, str, int]] = []  # (name, slot SQL, depth)
+        self.env = env
+        self.time = (
+            Sql(ident(time_col), self.schema.get(time_col, TIMESTAMP))
+            if time_col
+            else Sql("current_timestamp()", TIMESTAMP)
+        )
 
     def root(self) -> _Ctx:
         """A context over every row, each column its input value."""
-        quoted = {c: "`" + c.replace("`", "``") + "`" for c in self.df.columns}
-        return _Ctx(self, {c: _Val(F.col(q)) for c, q in quoted.items()})
+        return _Ctx(self, {c: _Val(Sql(ident(c), t)) for c, t in self.schema.items()})
 
-    def kernel(self, expr: Column, gate: Column | None, level: int) -> Column:
+    def kernel(self, value: Sql, gate: str | None, level: int) -> Sql:
         name = f"__k{len(self.kernels)}"
-        self.kernels.append((name, expr if gate is None else F.when(gate, expr), level))
-        self.probe = self.probe.withColumn(name, expr)
-        return F.col(name)
-
-    def dtypes(self, *cols: Column) -> list:
-        probe = self.probe.select(*[c.alias(f"_{i}") for i, c in enumerate(cols)])
-        return [f.dataType for f in probe.schema.fields]
+        slot = value.text if gate is None else f"CASE WHEN {gate} THEN {value.text} END"
+        self.kernels.append((name, slot, level))
+        return Sql(ident(name), value.dtype)
 
     def frame(self, ctx: _Ctx) -> DataFrame:
         """One Generate per kernel depth, then every column once;
         dropped rows removed."""
         df = self.df
         for level in sorted({lv for _, _, lv in self.kernels}):
-            slots = [slot.alias(name) for name, slot, lv in self.kernels if lv == level]
-            df = df.select("*", F.inline(F.array(F.struct(*slots))))
+            slots = ", ".join(f"{quote(n)}, {slot}" for n, slot, lv in self.kernels if lv == level)
+            df = df.selectExpr("*", f"inline(array(named_struct({slots})))")
         if ctx.dropped is not None:
-            df = df.filter(~ctx.dropped.expr)
-        return df.select(*[v.expr.alias(n) for n, v in ctx.cols.items()])
+            df = df.filter(_not(ctx.dropped.sql.text))
+        return df.selectExpr(*[f"{v.sql.text} AS {ident(n)}" for n, v in ctx.cols.items()])
 
 
 class _Ctx:
-    """Compile state of one program over the rows ``selector`` picks
-    (None = every row): the symbolic row and its control state."""
+    """Compile state of one program over the rows ``selector`` (boolean
+    SQL) picks (None = every row): the symbolic row and its control
+    state."""
 
     def __init__(self, plan: Plan, cols: dict[str, _Val], selector=None, dropped=None):
         self.plan = plan
         self.cols = cols  # output order
-        self.selector: Column | None = selector
+        self.selector: str | None = selector
         self.dropped: _Val | None = dropped
         self.halted: _Val | None = None
         self.branch: _Val | None = None
         self.step()
 
-    def fork(self, selector: Column) -> _Ctx:
+    def fork(self, selector: str) -> _Ctx:
         return _Ctx(self.plan, dict(self.cols), selector, self.dropped)
 
     def step(self) -> None:
@@ -156,62 +196,63 @@ class _Ctx:
 
     # -- reads ---------------------------------------------------------------
 
-    def _use(self, v: _Val) -> Column:
+    def _use(self, v: _Val) -> str:
         self._lvl, self._wt = max(self._lvl, v.level), self._wt + v.weight
-        return v.expr
+        return v.sql.text
 
-    def _made(self, expr: Column) -> _Val:
-        return _Val(expr, self._lvl, self._wt + 1)
+    def _made(self, value: Sql) -> _Val:
+        return _Val(value, self._lvl, self._wt + 1)
 
-    def col(self, name: str) -> Column:
+    def col(self, name: str) -> Sql:
         """Current value of column ``name``; a string NULL when the row
         has no such column (eventops reads a missing key as empty)."""
         v = self.cols.get(name)
         if v is None:
-            return F.lit(None).cast("string")
+            return _NULL
         if v.weight > _PIN_WEIGHT:
-            attr = self.plan.kernel(v.expr, self.selector, v.level + 1)
+            attr = self.plan.kernel(v.sql, self.selector, v.level + 1)
             v = self.cols[name] = _Val(attr, v.level + 1)
-        return self._use(v)
+        self._use(v)
+        return v.sql
 
-    def read(self, path: str) -> Column:
+    def read(self, path: str) -> Sql:
         """Resolve a dotted field path (fieldpath DSL) on the current row."""
         segs = parse_path(path)
         if not segs:
             raise ValueError(f"empty field path: {path!r}")
         if segs[0] not in self.cols:
-            return F.lit(None).cast("string")
-        return functools.reduce(Column.getItem, segs[1:], self.col(segs[0]))
+            return _NULL
+        v = self.col(segs[0])
+        for seg in segs[1:]:
+            v = item(v, seg)
+        return v
 
-    def kernel(self, expr: Column) -> Column:
-        """``expr`` computed once per row in the Generate, on the rows
+    def kernel(self, value: Sql) -> Sql:
+        """``value`` computed once per row in the Generate, on the rows
         this step reaches as far as state at its inputs' depth tells."""
         level = self._lvl
         parts = [] if self.selector is None else [self.selector]
         for v, keep in ((self.dropped, False), (self.halted, False), (self.branch, True)):
             if v is not None and v.level <= level:
-                parts.append(v.expr if keep else ~v.expr)
+                parts.append(v.sql.text if keep else _not(v.sql.text))
         self._lvl, self._wt = level + 1, self._wt + 1
-        return self.plan.kernel(expr, _and(parts), level + 1)
+        return self.plan.kernel(value, _and(parts), level + 1)
 
     # -- writes --------------------------------------------------------------
 
-    def _gate(self) -> Column | None:
+    def _gate(self) -> str | None:
         """Rows a write at this point applies to (None = all)."""
-        parts = [] if self.halted is None else [~self._use(self.halted)]
+        parts = [] if self.halted is None else [_not(self._use(self.halted))]
         return _and(parts + ([] if self.branch is None else [self._use(self.branch)]))
 
-    def set_col(self, name: str, value: Column) -> None:
+    def set_col(self, name: str, value: Sql) -> None:
         gate = self._gate()
         if gate is not None:
-            fallback = F.lit(None)
-            if name in self.cols:
-                # Type-changing overwrite (strconv/timestamp): rows the
-                # gate excludes keep the old value through try_cast; the
-                # implicit ANSI cast CASE would insert throws on them.
-                # (Catalyst drops a try_cast to the same type.)
-                fallback = self.col(name).try_cast(self.plan.dtypes(value)[0])
-            value = F.when(gate, value).otherwise(fallback)
+            # Type-changing overwrite (strconv/timestamp): rows the gate
+            # excludes keep the old value through try_cast; the implicit
+            # ANSI cast CASE would insert throws on them.
+            old = try_cast(self.col(name), value.dtype).text if name in self.cols else None
+            value = Sql(_case([(gate, value.text)], old), value.dtype)
         self.cols[name] = self._made(value)
 
     def del_col(self, name: str) -> None:
@@ -221,12 +262,13 @@ class _Ctx:
         if gate is None:
             del self.cols[name]
         else:
-            self.cols[name] = self._made(F.when(gate, F.lit(None)).otherwise(self.col(name)))
+            old = self.col(name)
+            self.cols[name] = self._made(Sql(_case([(gate, "NULL")], old.text), old.dtype))
 
-    def _flag(self, old: _Val | None, hit: Column) -> _Val:
-        return self._made(hit if old is None else self._use(old) | hit)
+    def _flag(self, old: _Val | None, hit: str) -> _Val:
+        return self._made(Sql(hit if old is None else f"({self._use(old)} OR {hit})", BOOLEAN))
 
-    def apply_error_policy(self, failed: Column, extra: dict) -> None:
+    def apply_error_policy(self, failed: str, extra: dict) -> None:
         """Per-action error policy (action.go:110-128): ``dropIfError``
         drops failing rows (ErrorDropEvent); ``ignoreError`` swallows the
         failure; by default the rest of the program is skipped for that
@@ -234,14 +276,14 @@ class _Ctx:
         drop = extra.get("dropIfError")
         if extra.get("ignoreError") and not drop:
             return
-        hit = F.coalesce(failed, F.lit(False))
+        hit = f"coalesce({failed}, false)"
         if self.branch is not None:
-            hit = self._use(self.branch) & hit
+            hit = f"({self._use(self.branch)} AND {hit})"
         if not drop:
             self.halted = self._flag(self.halted, hit)
             return
         if self.halted is not None:
-            hit = ~self._use(self.halted) & hit
+            hit = f"({_not(self._use(self.halted))} AND {hit})"
         self.dropped = self._flag(self.dropped, hit)
 
     # -- programs ------------------------------------------------------------
@@ -256,13 +298,13 @@ class _Ctx:
             # false in the reference's eventops (GetString → ""), so
             # coalesce. Evaluated once, before either branch writes.
             self.step()
-            cond = compile_condition(step["if"], self.read)
-            cond = self._made(F.coalesce(cond, F.lit(False)))
+            cond = condition_sql(step["if"], lambda p: self.read(p).text)
+            cond = self._made(Sql(f"coalesce({cond}, false)", BOOLEAN))
             for sub in step.get("then") or []:
                 self.branch = cond
                 self._one(sub)
             for sub in step.get("else") or []:
-                self.branch = cond._replace(expr=~cond.expr)
+                self.branch = cond._replace(sql=Sql(_not(cond.sql.text), BOOLEAN))
                 self._one(sub)
             self.branch = None
 
@@ -274,15 +316,8 @@ class _Ctx:
         _ACTIONS[name](self, args, {k: v for k, v in step.items() if k != "action"})
 
 
-def _case(arms: list[tuple[Column, Column]], default: Column | None) -> Column:
-    expr = F.when(*arms[0])
-    for selector, value in arms[1:]:
-        expr = expr.when(selector, value)
-    return expr if default is None else expr.otherwise(default)
-
-
-def _merged(expr: Column, vals: list[_Val]) -> _Val:
-    return _Val(expr, max(v.level for v in vals), sum(v.weight for v in vals) + 1)
+def _merged(value: Sql, vals: list[_Val]) -> _Val:
+    return _Val(value, max(v.level for v in vals), sum(v.weight for v in vals) + 1)
 
 
 def dispatch(base: _Ctx, branches: list[_Ctx]) -> _Ctx:
@@ -295,36 +330,28 @@ def dispatch(base: _Ctx, branches: list[_Ctx]) -> _Ctx:
     names = list(base.cols)
     for b in branches:
         names += [c for c in b.cols if c not in names]
-    merge = {}  # column → (arms, its values: writers in order, then the base value)
+    out = _Ctx(base.plan, {c: base.cols.get(c) for c in names})
     for c in names:
         default = base.cols.get(c)
         arms = [(b.selector, b.cols.get(c)) for b in branches if b.cols.get(c) is not default]
+        if not arms:
+            continue
         writers = [v for _, v in arms if v is not None]
-        if arms:
-            merge[c] = (arms, writers + ([] if default is None else [default]), len(writers))
-    probe = [v.expr for _, vals, _ in merge.values() if len(vals) > 1 for v in vals]
-    types = iter(base.plan.dtypes(*probe) if probe else ())
+        vals = writers + ([] if default is None else [default])
+        target = (writers[-1] if writers else default).sql.dtype
 
-    out = _Ctx(base.plan, {c: base.cols.get(c) for c in names})
-    for c, (arms, vals, n_writers) in merge.items():
-        typed = {id(v): next(types) for v in vals} if len(vals) > 1 else {}
-        target = typed.get(id(vals[max(n_writers - 1, 0)]))  # last writer, else the base
+        def cast(v: _Val | None) -> str:
+            return "NULL" if v is None else try_cast(v.sql, target).text
 
-        def cast(v: _Val | None) -> Column:
-            if v is None:
-                return F.lit(None)
-            return v.expr if typed.get(id(v)) == target else v.expr.try_cast(target)
-
-        default = base.cols.get(c)
         rest = None if default is None else cast(default)
-        out.cols[c] = _merged(_case([(sel, cast(v)) for sel, v in arms], rest), vals)
+        out.cols[c] = _merged(Sql(_case([(sel, cast(v)) for sel, v in arms], rest), target), vals)
 
     out.dropped = base.dropped
     flags = [(b.selector, b.dropped) for b in branches if b.dropped is not base.dropped]
     if flags:
-        rest = F.lit(False) if base.dropped is None else base.dropped.expr
-        cases = [(sel, v.expr) for sel, v in flags]
-        out.dropped = _merged(_case(cases, rest), [v for _, v in flags])
+        rest = "false" if base.dropped is None else base.dropped.sql.text
+        cases = _case([(sel, v.sql.text) for sel, v in flags], rest)
+        out.dropped = _merged(Sql(cases, BOOLEAN), [v for _, v in flags])
     return out
 
 
@@ -348,22 +375,22 @@ def register_action(name: str) -> Callable[[ActionFn], ActionFn]:
 @register_action("add")
 @register_action("set")
 def _add(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.set_col(flat_name(args[0]), F.lit(args[1]))
+    ctx.set_col(flat_name(args[0]), lit(args[1]))
 
 
 @register_action("setInt")
 def _set_int(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.set_col(flat_name(args[0]), F.lit(int(args[1])))
+    ctx.set_col(flat_name(args[0]), lit(int(args[1])))
 
 
 @register_action("setFloat")
 def _set_float(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.set_col(flat_name(args[0]), F.lit(float(args[1])))
+    ctx.set_col(flat_name(args[0]), lit(float(args[1])))
 
 
 @register_action("setBool")
 def _set_bool(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.set_col(flat_name(args[0]), F.lit(args[1].lower() == "true"))
+    ctx.set_col(flat_name(args[0]), lit(args[1].lower() == "true"))
 
 
 @register_action("copy")
@@ -397,26 +424,23 @@ def _under_root(ctx: _Ctx, args: list[str], extra: dict) -> None:
     src = flat_name(name)
     if src not in ctx.cols:
         return
-    from pyspark.sql.types import StructType
-
     value = ctx.col(src)
-    dtype = ctx.plan.dtypes(value)[0]
-    if not isinstance(dtype, StructType):
+    if not isinstance(value.dtype, T.StructType):
         raise ValueError(f"underRoot target {name!r} is not a struct column")
-    for f_ in dtype.fields:
-        ctx.set_col(f_.name, value.getField(f_.name))
+    for f_ in value.dtype.fields:
+        ctx.set_col(f_.name, item(value, f_.name))
     ctx.del_col(src)
 
 
 @register_action("dropEvent")
 def _drop_event(ctx: _Ctx, args: list[str], extra: dict) -> None:
     gate = ctx._gate()
-    ctx.dropped = ctx._flag(ctx.dropped, F.lit(True) if gate is None else gate)
+    ctx.dropped = ctx._flag(ctx.dropped, "true" if gate is None else gate)
 
 
 @register_action("return")
 def _return(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    hit = F.lit(True) if ctx.branch is None else ctx._use(ctx.branch)
+    hit = "true" if ctx.branch is None else ctx._use(ctx.branch)
     ctx.halted = ctx._flag(ctx.halted, hit)
 
 
@@ -448,15 +472,14 @@ def _add_meta(ctx: _Ctx, args: list[str], extra: dict) -> None:
     ``pipeline`` column). Internal control columns are the ``@private``
     analog and never exported."""
     target = args[0] if args else extra.get("target", "meta")
-    fields: list[Column] = []
+    fields: list[tuple[str, Sql]] = []
     for col_name, meta_key in _META_COLUMN_KEYS:
         if col_name in ctx.cols:
-            fields.append(ctx.col(col_name).alias(meta_key))
+            fields.append((meta_key, ctx.col(col_name)))
     if "pipelineName" in extra and "pipeline" not in ctx.cols:
-        fields.append(F.lit(extra["pipelineName"]).alias("systemPipelineName"))
-    ptime = ctx.plan.time_col if ctx.plan.time_col is not None else F.current_timestamp()
-    fields.append(ptime.alias("systemProductTime"))
-    ctx.set_col(flat_name(target), F.struct(*fields))
+        fields.append(("systemPipelineName", lit(extra["pipelineName"])))
+    fields.append(("systemProductTime", ctx.plan.time))
+    ctx.set_col(flat_name(target), struct(fields))
 
 
 # --------------------------------------------------------------------------
@@ -474,7 +497,7 @@ def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict)
     FindStringSubmatch (regex.go:70-116); match success is detected by
     the split arity.
     """
-    src = ctx.read(key).cast("string")
+    src = _str(ctx.read(key))
     groups = named_groups(pattern)
     jpat = _java_pattern(pattern)
     n = len(groups)
@@ -492,25 +515,27 @@ def _apply_regex(ctx: _Ctx, key: str, to: str | None, pattern: str, extra: dict)
     # matched is a definite boolean: a NULL body (or a row the kernel
     # skipped) is the reference's GetString("") → no-match → action
     # error semantics.
-    parr, matched = split_groups(src, wrapped, n, kernel=ctx.kernel)
+    parr, matched = split_groups(
+        src, wrapped, n, kernel=lambda parts: ctx.kernel(Sql(parts, ARRAY_STRING)).text
+    )
 
     ignore_blank = extra.get("ignoreBlank", False)
-    out_cols: dict[str, Column] = {}
+    out_cols: list[tuple[str, Sql]] = []
     for gname, gidx in groups.items():
-        val = F.get(parr, gidx)
+        val = f"get({parr}, {gidx})"
         if ignore_blank:
-            val = F.when(val == "", F.lit(None)).otherwise(val)
-        out_cols[gname] = F.when(matched, val)
+            val = f"CASE WHEN ({val} = '') THEN NULL ELSE {val} END"
+        out_cols.append((gname, Sql(f"CASE WHEN {matched} THEN {val} END", STRING)))
 
     if to:
-        ctx.set_col(flat_name(to), F.struct(*[v.alias(k) for k, v in out_cols.items()]))
+        ctx.set_col(flat_name(to), struct(out_cols))
     else:
-        for k, v in out_cols.items():
+        for k, v in out_cols:
             ctx.set_col(k, v)
     # regex.go:90-115 deletes the source key after a root extract
     if extra.get("deleteSrc", False) and key != "body":
         ctx.del_col(flat_name(key))
-    ctx.apply_error_policy(~matched, extra)
+    ctx.apply_error_policy(_not(matched), extra)
 
 
 @register_action("regex")
@@ -546,21 +571,20 @@ def _split(ctx: _Ctx, args: list[str], extra: dict) -> None:
     sep: str = extra["separator"]
     keys: list[str] = extra["keys"]
     max_n: int = extra.get("max", -1)
-    src = ctx.read(key).cast("string")
+    src = _str(ctx.read(key))
     # Java split limit: -1 = no limit; loggie max = number of pieces.
-    parts = F.split(src, re.escape(sep), max_n if max_n > 0 else -1)
-    failed = F.size(parts) != len(keys)
-    # F.get (not getItem): ANSI mode throws on out-of-bounds subscripts
-    # and arity-mismatched rows would kill the job instead of following
-    # the error policy.
+    parts = f"split({src}, {quote(re.escape(sep))}, {max_n if max_n > 0 else -1})"
+    failed = f"(size({parts}) <> {len(keys)})"
+    # get (not a [] subscript): ANSI mode throws on out-of-bounds
+    # subscripts and arity-mismatched rows would kill the job instead of
+    # following the error policy.
     if to:
-        ctx.set_col(
-            flat_name(to),
-            F.struct(*[F.get(parts, i).alias(k) for i, k in enumerate(keys)]),
-        )
+        fields = [(k, Sql(f"get({parts}, {i})", STRING)) for i, k in enumerate(keys)]
+        ctx.set_col(flat_name(to), struct(fields))
     else:
         for i, k in enumerate(keys):
-            ctx.set_col(flat_name(k), F.when(~failed, F.get(parts, i)))
+            value = f"CASE WHEN {_not(failed)} THEN get({parts}, {i}) END"
+            ctx.set_col(flat_name(k), Sql(value, STRING))
     ctx.apply_error_policy(failed, extra)
 
 
@@ -576,32 +600,28 @@ def _json_decode(ctx: _Ctx, args: list[str], extra: dict) -> None:
     """
     key = args[0]
     to = args[1] if len(args) > 1 else None
-    src = ctx.read(key).cast("string")
+    src = _str(ctx.read(key))
     schema = extra.get("schema")
 
     if schema:
-        import pyspark.sql.types as T
-
-        parsed = F.from_json(src, schema)
-        field_names = [f_.name for f_ in T._parse_datatype_string(schema).fields]
-        getter = lambda p, n: p.getField(n)  # noqa: E731
+        dtype = T._parse_datatype_string(schema)
+        field_names = [f_.name for f_ in dtype.fields]
     else:
-        parsed = F.from_json(src, "map<string,string>")
+        schema, dtype = "map<string,string>", MAP_STRING
         field_names = extra.get("fields") or []
-        getter = lambda p, n: p.getItem(n)  # noqa: E731
         if to is None and not field_names:
             raise ValueError("schemaless jsonDecode to root needs a 'fields' list")
 
     # The PARSED VALUE is the kernel: one from_json per row, not one per
     # lifted field or reader (same lesson as _apply_regex's array).
-    pattr = ctx.kernel(parsed)
-    failed = pattr.isNull() & src.isNotNull()
+    parsed = ctx.kernel(Sql(f"from_json({src}, {quote(schema)})", dtype))
+    failed = f"(({parsed.text} IS NULL) AND ({src} IS NOT NULL))"
     ctx.apply_error_policy(failed, extra)
     if to:
-        ctx.set_col(flat_name(to), pattr)
+        ctx.set_col(flat_name(to), parsed)
     else:
         for n in field_names:
-            ctx.set_col(flat_name(n), getter(pattr, n))
+            ctx.set_col(flat_name(n), item(parsed, n))
 
     if extra.get("deleteSrc", True) and key != "body":
         ctx.del_col(flat_name(key))
@@ -611,7 +631,7 @@ def _json_decode(ctx: _Ctx, args: list[str], extra: dict) -> None:
 def _json_encode(ctx: _Ctx, args: list[str], extra: dict) -> None:
     key = args[0]
     to = args[1] if len(args) > 1 else key
-    ctx.set_col(flat_name(to), F.to_json(ctx.read(key)))
+    ctx.set_col(flat_name(to), Sql(f"to_json({ctx.read(key).text})", STRING))
 
 
 # --------------------------------------------------------------------------
@@ -624,22 +644,26 @@ def _replace(ctx: _Ctx, args: list[str], extra: dict) -> None:
     key = args[0]
     old, new = extra["old"], extra["new"]
     max_n = int(extra.get("max", -1))
-    src = ctx.read(key).cast("string")
+    src = _str(ctx.read(key))
     if max_n < 0:
-        ctx.set_col(flat_name(key), F.replace(src, F.lit(old), F.lit(new)))
+        out = f"replace({src}, {quote(old)}, {quote(new)})"
     else:
         # Replace only the first max_n occurrences: split with limit
         # max_n+1 (Java semantics: last element keeps the remainder,
         # untouched separators included) and rejoin with the new text.
-        parts = F.split(src, re.escape(old), max_n + 1)
-        ctx.set_col(flat_name(key), F.array_join(parts, new))
+        out = f"array_join(split({src}, {quote(re.escape(old))}, {max_n + 1}), {quote(new)})"
+    ctx.set_col(flat_name(key), Sql(out, STRING))
 
 
 @register_action("replaceRegex")
 def _replace_regex(ctx: _Ctx, args: list[str], extra: dict) -> None:
     key = args[0]
-    src = ctx.read(key).cast("string")
-    ctx.set_col(flat_name(key), F.regexp_replace(src, extra["expression"], extra["replace"]))
+    src = _str(ctx.read(key))
+    out = f"regexp_replace({src}, {quote(extra['expression'])}, {quote(extra['replace'])})"
+    ctx.set_col(flat_name(key), Sql(out, STRING))
+
+
+_STRCONV_TYPES = {"bool": BOOLEAN, "int": LONG, "float": T.DoubleType()}
 
 
 @register_action("strconv")
@@ -657,26 +681,27 @@ def _strconv(ctx: _Ctx, args: list[str], extra: dict) -> None:
     # surrounding whitespace (Go ParseInt(" 7") fails) and accepts
     # y/yes/n/no for bools (Go ParseBool doesn't).
     key, typ = args[0], args[1]
-    spark_t = {"bool": "boolean", "int": "long", "float": "double"}[typ]
+    dtype = _STRCONV_TYPES[typ]
     src = ctx.read(key)
-    cast = src.try_cast(spark_t)  # ANSI-safe: malformed → null → error policy
+    # ANSI-safe: malformed → null → error policy
+    cast = f"TRY_CAST({src.text} AS {dtype.simpleString()})"
     if extra.get("keepOriginal"):
-        from loggie_spark.functions.gofmt import go_float_str
+        from loggie_spark.functions.gofmt import go_float_sql
 
         if typ == "float":
-            rendered = go_float_str(cast)
+            rendered = go_float_sql(cast)
         elif typ == "bool":
-            # Two-sided when: a NULL cast must stay NULL (otherwise()
-            # would swallow parse failures into 'false').
-            rendered = F.when(cast, "true").when(~cast, "false")
+            # Two-sided: a NULL cast must stay NULL (an ELSE would
+            # swallow parse failures into 'false').
+            rendered = f"CASE WHEN {cast} THEN 'true' WHEN (NOT {cast}) THEN 'false' END"
         else:
-            rendered = cast.cast("string")
-        ctx.set_col(flat_name(key), F.coalesce(rendered, src.cast("string")))
+            rendered = f"CAST({cast} AS STRING)"
+        ctx.set_col(flat_name(key), Sql(f"coalesce({rendered}, {_str(src)})", STRING))
         return
-    failed = cast.isNull() & src.isNotNull()
+    failed = f"(({cast} IS NULL) AND ({src.text} IS NOT NULL))"
     # Policy before the overwrite: the overwrite is gated by it.
     ctx.apply_error_policy(failed, extra)
-    ctx.set_col(flat_name(key), cast)
+    ctx.set_col(flat_name(key), Sql(cast, dtype))
 
 
 @register_action("toStr")
@@ -684,17 +709,14 @@ def _to_str(ctx: _Ctx, args: list[str], extra: dict) -> None:
     """tostr.go:123-152: bools → "true"/"false", ints → base-10, floats
     → Go 'g' shortest formatting (functions/gofmt.py reproduces
     strconv.FormatFloat(v, 'g', -1, bits) in Catalyst)."""
-    from pyspark.sql.types import DoubleType, FloatType
-
-    from loggie_spark.functions.gofmt import go_float_str
+    from loggie_spark.functions.gofmt import go_float_sql
 
     src = ctx.read(args[0])
-    dtype = ctx.plan.dtypes(src)[0]
-    if isinstance(dtype, (DoubleType, FloatType)):
-        out = go_float_str(src)
+    if isinstance(src.dtype, (T.DoubleType, T.FloatType)):
+        out = go_float_sql(src.text)
     else:
-        out = src.cast("string")
-    ctx.set_col(flat_name(args[0]), out)
+        out = _str(src)
+    ctx.set_col(flat_name(args[0]), Sql(out, STRING))
 
 
 @register_action("timestamp")
@@ -717,35 +739,36 @@ def _timestamp(ctx: _Ctx, args: list[str], extra: dict) -> None:
     src = ctx.read(key)
 
     if from_layout == "unix":
-        ts = F.timestamp_seconds(src.try_cast("long"))
+        ts = f"timestamp_seconds(TRY_CAST({src.text} AS BIGINT))"
     elif from_layout == "unix_ms":
-        ts = F.timestamp_millis(src.try_cast("long"))
+        ts = f"timestamp_millis(TRY_CAST({src.text} AS BIGINT))"
     else:
-        ts = F.try_to_timestamp(src.cast("string"), F.lit(go_layout_to_jvm(from_layout)))
+        ts = f"try_to_timestamp({_str(src)}, {quote(go_layout_to_jvm(from_layout))})"
         if from_loc and from_loc != "UTC":
             # Layouts with an explicit zone already parse absolutely;
             # fromLocation applies to zone-less wall times (Go
             # ParseInLocation semantics — zone in the string wins).
-            ts = F.to_utc_timestamp(ts, from_loc)
+            ts = f"to_utc_timestamp({ts}, {quote(from_loc)})"
 
-    failed = ts.isNull() & src.isNotNull()
+    failed = f"(({ts} IS NULL) AND ({src.text} IS NOT NULL))"
     ctx.apply_error_policy(failed, extra)  # before the overwrite it gates
     if to_layout == "unix":
-        out = ts.cast("long")
+        out = Sql(f"CAST({ts} AS BIGINT)", LONG)
     elif to_layout == "unix_ms":
-        out = F.unix_millis(ts)
+        out = Sql(f"unix_millis({ts})", LONG)
     else:
-        rendered = F.from_utc_timestamp(ts, to_loc) if to_loc and to_loc != "UTC" else ts
-        out = F.date_format(rendered, go_layout_to_jvm(to_layout))
+        if to_loc and to_loc != "UTC":
+            ts = f"from_utc_timestamp({ts}, {quote(to_loc)})"
+        out = Sql(f"date_format({ts}, {quote(go_layout_to_jvm(to_layout))})", STRING)
     ctx.set_col(flat_name(key), out)
 
 
 @register_action("fmt")
 def _fmt(ctx: _Ctx, args: list[str], extra: dict) -> None:
-    ctx.set_col(
-        flat_name(args[0]),
-        compile_pattern(extra["pattern"], ctx.plan.time_col, ctx.plan.env, path=ctx.read),
+    text = pattern_sql(
+        extra["pattern"], ctx.plan.time.text, ctx.plan.env, path=lambda p: ctx.read(p).text
     )
+    ctx.set_col(flat_name(args[0]), Sql(text, STRING))
 
 
 @register_action("fmtKey")
@@ -765,11 +788,12 @@ def _fmt_key(ctx: _Ctx, args: list[str], extra: dict) -> None:
 def apply_program(
     df: DataFrame,
     program: list[dict],
-    time_col: Column | None = None,
+    time_col: str | None = None,
     env: dict[str, str] | None = None,
 ) -> DataFrame:
     """Compile an action program onto ``df`` (every row runs it);
-    dropped rows are removed."""
+    dropped rows are removed. ``time_col`` names the processing-time
+    column (default ``current_timestamp()``)."""
     plan = Plan(df, time_col=time_col, env=env)
     ctx = plan.root()
     ctx.run(program)

@@ -8,8 +8,9 @@ condition/conditions.go:93-161):
     name     := equal | contain | exist | greater | less | match |
                 oneOf | hasPrefix  (extensible registry)
 
-Compiles to a boolean Column. Numeric comparisons coerce both sides to
-double (pkg/util/eventops/number.go:37-82).
+Compiles to boolean SQL text (one ``F.expr`` for a Column). Numeric
+comparisons coerce both sides to double
+(pkg/util/eventops/number.go:37-82).
 """
 
 from __future__ import annotations
@@ -20,9 +21,11 @@ from collections.abc import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from loggie_spark.fieldpath import col_for_path
+from loggie_spark.fieldpath import path_sql
+from loggie_spark.sqltext import lit, quote
 
-ConditionFn = Callable[[list[str], Callable[[str], Column]], Column]
+# (args, path) → boolean SQL text; ``path`` gives a field path's text.
+ConditionFn = Callable[[list[str], Callable[[str], str]], str]
 
 _CONDITIONS: dict[str, ConditionFn] = {}
 
@@ -38,45 +41,51 @@ def register_condition(name: str) -> Callable[[ConditionFn], ConditionFn]:
 # -- registry (condition/*.go) ---------------------------------------------
 
 
+def _str(args: list[str], path) -> str:
+    return f"CAST({path(args[0])} AS STRING)"
+
+
 @register_condition("equal")
-def _equal(args: list[str], path) -> Column:
+def _equal(args: list[str], path) -> str:
     # equal.go:53-60 — string compare after byte→string.
-    return path(args[0]).cast("string") == F.lit(args[1])
+    return f"({_str(args, path)} = {quote(args[1])})"
 
 
 @register_condition("contain")
-def _contain(args: list[str], path) -> Column:
-    return path(args[0]).cast("string").contains(args[1])
+def _contain(args: list[str], path) -> str:
+    return f"contains({_str(args, path)}, {quote(args[1])})"
 
 
 @register_condition("exist")
-def _exist(args: list[str], path) -> Column:
-    return path(args[0]).isNotNull()
+def _exist(args: list[str], path) -> str:
+    return f"({path(args[0])} IS NOT NULL)"
 
 
 @register_condition("greater")
-def _greater(args: list[str], path) -> Column:
-    return path(args[0]).try_cast("double") > float(args[1])
+def _greater(args: list[str], path) -> str:
+    return f"(TRY_CAST({path(args[0])} AS DOUBLE) > {lit(float(args[1])).text})"
 
 
 @register_condition("less")
-def _less(args: list[str], path) -> Column:
-    return path(args[0]).try_cast("double") < float(args[1])
+def _less(args: list[str], path) -> str:
+    return f"(TRY_CAST({path(args[0])} AS DOUBLE) < {lit(float(args[1])).text})"
 
 
 @register_condition("match")
-def _match(args: list[str], path) -> Column:
-    return path(args[0]).cast("string").rlike(args[1])
+def _match(args: list[str], path) -> str:
+    return f"({_str(args, path)} RLIKE {quote(args[1])})"
 
 
 @register_condition("oneOf")
-def _one_of(args: list[str], path) -> Column:
-    return path(args[0]).cast("string").isin(*args[1:])
+def _one_of(args: list[str], path) -> str:
+    if len(args) < 2:
+        return "false"  # IN () — no value matches
+    return f"({_str(args, path)} IN ({', '.join(quote(a) for a in args[1:])}))"
 
 
 @register_condition("hasPrefix")
-def _has_prefix(args: list[str], path) -> Column:
-    return path(args[0]).cast("string").startswith(args[1])
+def _has_prefix(args: list[str], path) -> str:
+    return f"startswith({_str(args, path)}, {quote(args[1])})"
 
 
 # -- parser -----------------------------------------------------------------
@@ -95,9 +104,10 @@ def parse_call(text: str) -> tuple[str, list[str]]:
     return name, args
 
 
-def compile_condition(expr: str, path: Callable[[str], Column] = col_for_path) -> Column:
-    """Compile a full condition expression to a boolean Column; ``path``
-    resolves field paths (the action compiler passes its symbolic row).
+def condition_sql(expr: str, path: Callable[[str], str] = path_sql) -> str:
+    """Compile a full condition expression to boolean SQL text; ``path``
+    gives a field path's text (the action compiler passes its symbolic
+    row).
 
     A single connector kind per expression — mixing AND and OR is an
     error, matching conditions.go:116-161 (no parentheses either).
@@ -108,7 +118,7 @@ def compile_condition(expr: str, path: Callable[[str], Column] = col_for_path) -
         raise ValueError(f"cannot mix AND and OR in one expression: {expr!r}")
     parts = expr.split(" AND ") if has_and else expr.split(" OR ") if has_or else [expr]
 
-    cols: list[Column] = []
+    texts: list[str] = []
     for part in parts:
         part = part.strip()
         negate = part.startswith("NOT ")
@@ -117,10 +127,14 @@ def compile_condition(expr: str, path: Callable[[str], Column] = col_for_path) -
         name, args = parse_call(part)
         if name not in _CONDITIONS:
             raise KeyError(f"unknown condition: {name}")
-        col = _CONDITIONS[name](args, path)
-        cols.append(~col if negate else col)
+        text = _CONDITIONS[name](args, path)
+        texts.append(f"(NOT {text})" if negate else text)
+    if len(texts) == 1:
+        return texts[0]
+    return "(" + (" AND " if has_and else " OR ").join(texts) + ")"
 
-    out = cols[0]
-    for c in cols[1:]:
-        out = (out & c) if has_and else (out | c)
-    return out
+
+def compile_condition(expr: str) -> Column:
+    """A condition expression as a boolean Column over the frame's own
+    columns (:func:`condition_sql`)."""
+    return F.expr(condition_sql(expr))

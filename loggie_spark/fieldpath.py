@@ -7,14 +7,15 @@ the raw byte body (pkg/util/eventops/event.go:26-45).
 
 In the Spark model, parsed/known fields are top-level (or struct)
 columns and ``body`` is the decoded line column, so a path resolves to
-``F.col(seg0)`` chained through ``getItem`` for nested struct/map
-segments.
+the column ``seg0`` subscripted by each nested struct/map segment.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from loggie_spark.sqltext import ident, quote
 
 BODY_KEY = "body"
 
@@ -38,16 +39,18 @@ def parse_path(path: str) -> list[str]:
     return [s for s in segments if s != ""]
 
 
-def col_for_path(path: str) -> Column:
-    """Resolve a field path to a Column (struct/map traversal via
-    getItem — works for StructType, MapType and ArrayType indices)."""
+def path_sql(path: str) -> str:
+    """SQL text of a field path: the column ``seg0`` subscripted by
+    each further segment (struct field, map key or array index)."""
     segs = parse_path(path)
     if not segs:
         raise ValueError(f"empty field path: {path!r}")
-    col = F.col(segs[0])
-    for seg in segs[1:]:
-        col = col.getItem(seg)
-    return col
+    return ident(segs[0]) + "".join(f"[{quote(seg)}]" for seg in segs[1:])
+
+
+def col_for_path(path: str) -> Column:
+    """Resolve a field path to a Column (:func:`path_sql`)."""
+    return F.expr(path_sql(path))
 
 
 def flat_name(path: str) -> str:

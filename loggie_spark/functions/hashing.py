@@ -20,12 +20,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from loggie_spark.sqltext import quote
+
 
 def md5_60bit(col: Column, seed: int | None = None) -> Column:
     """60-bit integer hash of a string column (engine-agnostic)."""
     if seed is not None:
         col = F.concat(F.lit(f"{seed}|"), col)
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
+
+
+def md5_60bit_spark_sql(expr: str, seed: int | str | None = None) -> str:
+    """:func:`md5_60bit` as Spark SQL text over the SQL ``expr`` (the
+    same expression; a test holds the two equal)."""
+    if seed is not None:
+        expr = f"concat({quote(f'{seed}|')}, {expr})"
+    return f"CAST(conv(substring(md5(CAST({expr} AS STRING)), 1, 15), 16, 10) AS BIGINT)"
 
 
 def md5_60bit_sql(expr: str, seed: int | None = None) -> str:

@@ -15,35 +15,39 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from loggie_spark.sqltext import ident
 
-def truncate_utf8_bytes(col: Column | str, max_bytes: int) -> Column:
-    """Truncate a string column at the first UTF-8 rune boundary >=
-    ``max_bytes`` (exact subUtf8 semantics, incl. the keep-straddling-
-    rune and run-off-the-end cases)."""
-    s = F.col(col) if isinstance(col, str) else col
-    raw = s.cast("binary")
-    n = F.octet_length(s)
 
-    def is_rune_start(pos: int) -> Column:
+def truncate_utf8_sql(s: str, max_bytes: int) -> str:
+    """SQL text truncating the string SQL ``s`` at the first UTF-8 rune
+    boundary >= ``max_bytes`` (exact subUtf8 semantics, incl. the
+    keep-straddling-rune and run-off-the-end cases)."""
+    raw = f"CAST({s} AS BINARY)"
+    n = f"octet_length({s})"
+
+    def is_rune_start(pos: int) -> str:
         # utf8.RuneStart(b) == (b & 0xC0) != 0x80; pos is 1-indexed.
-        v = F.conv(F.hex(F.substring(raw, pos, 1)), 16, 10).cast("int")
-        return (v < 0x80) | (v >= 0xC0)
+        v = f"CAST(conv(hex(substring({raw}, {pos}, 1)), 16, 10) AS INT)"
+        return f"(({v} < {0x80}) OR ({v} >= {0xC0}))"
 
     # Go: for i := maxBytes; i < len; i++ { if RuneStart(bytes[i]) ->
     # bytes[:i] }. A UTF-8 rune is <= 4 bytes, so only positions
     # maxBytes..maxBytes+3 (0-indexed) can be the cut; guard each
     # position against the end of the string (no break -> keep all).
+    m = max_bytes
     cut = (
-        F.when(is_rune_start(max_bytes + 1), F.lit(max_bytes))
-        .when(n == max_bytes + 1, n)
-        .when(is_rune_start(max_bytes + 2), F.lit(max_bytes + 1))
-        .when(n == max_bytes + 2, n)
-        .when(is_rune_start(max_bytes + 3), F.lit(max_bytes + 2))
-        .when(n == max_bytes + 3, n)
-        .otherwise(F.lit(max_bytes + 3))
+        f"CASE WHEN {is_rune_start(m + 1)} THEN {m} WHEN ({n} = {m + 1}) THEN {n} "
+        f"WHEN {is_rune_start(m + 2)} THEN {m + 1} WHEN ({n} = {m + 2}) THEN {n} "
+        f"WHEN {is_rune_start(m + 3)} THEN {m + 2} WHEN ({n} = {m + 3}) THEN {n} "
+        f"ELSE {m + 3} END"
     )
-    # Column.substr on the binary cast slices BYTES with a Column length.
-    return F.when(s.isNull() | (n <= max_bytes), s).otherwise(
-        raw.substr(F.lit(1), cut).cast("string")
+    # substr on the binary cast slices BYTES.
+    return (
+        f"CASE WHEN (({s} IS NULL) OR ({n} <= {m})) THEN {s} "
+        f"ELSE CAST(substr({raw}, 1, {cut}) AS STRING) END"
     )
 
+
+def truncate_utf8_bytes(col: str, max_bytes: int) -> Column:
+    """Column ``col`` truncated by :func:`truncate_utf8_sql`."""
+    return F.expr(truncate_utf8_sql(ident(col), max_bytes))

@@ -1,11 +1,11 @@
 """Plan-time compilers for loggie's three little languages.
 
-All three run at *plan build time* (pure Python producing Column
-expressions) — nothing here executes per row in Python:
+All three run at *plan build time* (pure Python producing SQL text,
+sqltext.py) — nothing here executes per row in Python:
 
 1. ``${...}`` pattern rendering (pkg/util/pattern/pattern.go:28-41):
    the router DSL used for kafka topics / ES indexes / file paths.
-   Compiled to a ``F.concat`` of literals, column refs,
+   Compiled to a ``concat`` of literals, column refs,
    ``date_format`` calls, and env-var literals.
 2. Grok macro expansion (pkg/interceptor/transformer/action/grok.go:40-62,
    150-173): ``%{NAME:field}`` macros expand recursively into one plain
@@ -24,6 +24,9 @@ from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from loggie_spark.fieldpath import path_sql
+from loggie_spark.sqltext import ident, quote
 
 # --------------------------------------------------------------------------
 # Grok (grok.go:40-62 DefaultgrokPattern, ported as data)
@@ -226,7 +229,7 @@ def go_layout_to_jvm(layout: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# ${...} pattern rendering → Column (pattern.go:28-41,62-89)
+# ${...} pattern rendering → SQL text (pattern.go:28-41,62-89)
 # --------------------------------------------------------------------------
 
 _PATTERN_TOKEN = re.compile(r"\$\{(.+?)\}")
@@ -241,20 +244,21 @@ def k8s_token_column(token: str) -> str:
     return "k8s_" + token[len("_k8s.") :].replace(".", "_")
 
 
-def compile_pattern(
+def pattern_sql(
     pattern: str,
-    time_col: Column | None = None,
+    time: str | None = None,
     env: dict[str, str] | None = None,
-    path=None,
-) -> Column:
-    """Compile a ``${...}`` routing pattern into a Column expression;
-    ``path`` resolves field paths (default: fieldpath.col_for_path).
+    path: Callable[[str], str] = path_sql,
+) -> str:
+    """Compile a ``${...}`` routing pattern into string SQL text;
+    ``path`` gives a field path's text, ``time`` the processing-time
+    text (default ``current_timestamp()``).
 
     - ``${a.b}``       → header/field path (fieldpath DSL, so
       ``${a.[b.c]}`` bracket-escaped keys resolve like everywhere else)
-    - ``${+YYYY.MM.dd}`` → ``date_format(time_col, ...)`` — the time the
-      event is *processed*; pass an explicit ``time_col`` for
-      deterministic tests (defaults to ``current_timestamp()``)
+    - ``${+YYYY.MM.dd}`` → ``date_format(time, ...)`` — the time the
+      event is *processed*; pass an explicit time column for
+      deterministic tests
     - ``${_env.X}``    → environment variable, resolved at plan time
     - ``${_k8s.X}``    → k8s discovery metadata column (addK8sMeta
       enrich must have run); missing values render "" like the
@@ -263,52 +267,53 @@ def compile_pattern(
     Joda-ish tokens used by loggie (YYYY/MM/dd/HH/mm/ss) map onto JVM
     pattern letters (YYYY → yyyy).
     """
-    from loggie_spark.fieldpath import col_for_path
+    env = env if env is not None else os.environ
+    tcol = time or "current_timestamp()"
 
-    path = path or col_for_path
-    env = env if env is not None else dict(os.environ)
-    tcol = time_col if time_col is not None else F.current_timestamp()
-
-    parts: list[Column] = []
+    parts: list[str] = []
     pos = 0
     for m in _PATTERN_TOKEN.finditer(pattern):
         if m.start() > pos:
-            parts.append(F.lit(pattern[pos : m.start()]))
+            parts.append(quote(pattern[pos : m.start()]))
         token = m.group(1)
         if token.startswith("+"):
             fmt = token[1:].replace("YYYY", "yyyy").replace("DD", "dd")
-            parts.append(F.date_format(tcol, fmt))
+            parts.append(f"date_format({tcol}, {quote(fmt)})")
         elif token.startswith("_env."):
-            parts.append(F.lit(env.get(token[5:], "")))
+            parts.append(quote(env.get(token[5:], "")))
         elif token.startswith("_k8s."):
-            parts.append(
-                F.coalesce(F.col(k8s_token_column(token)).cast("string"), F.lit(""))
-            )
+            parts.append(f"coalesce(CAST({ident(k8s_token_column(token))} AS STRING), '')")
         else:
-            parts.append(path(token).cast("string"))
+            parts.append(f"CAST({path(token)} AS STRING)")
         pos = m.end()
     if pos < len(pattern):
-        parts.append(F.lit(pattern[pos:]))
+        parts.append(quote(pattern[pos:]))
     if not parts:
-        return F.lit("")
+        return "''"
     if len(parts) == 1:
         return parts[0]
-    return F.concat(*parts)
+    return f"concat({', '.join(parts)})"
 
 
-def extract_pattern(
-    value: Column | str, pattern: str
-) -> dict[str, Column]:
+def compile_pattern(
+    pattern: str, time_col: str | None = None, env: dict[str, str] | None = None
+) -> Column:
+    """A ``${...}`` pattern as a string Column over the frame's own
+    columns (:func:`pattern_sql`); ``time_col`` names the processing-time
+    column (default ``current_timestamp()``)."""
+    return F.expr(pattern_sql(pattern, ident(time_col) if time_col else None, env))
+
+
+def extract_pattern(value: str, pattern: str) -> dict[str, Column]:
     """Inverse rendering (pattern.go:219-283 GetSplits/Extract): parse
-    field values back out of a composed string. Used by addK8sMeta to
-    pull e.g. a pod uid out of a log path shaped like
-    ``/var/log/pods/${namespace}_${podname}_${poduid}/...``.
+    field values back out of the composed string in column ``value``.
+    Used by addK8sMeta to pull e.g. a pod uid out of a log path shaped
+    like ``/var/log/pods/${namespace}_${podname}_${poduid}/...``.
 
     Compiles to ONE regexp pass (:func:`split_groups`, shared with the
     regex action — the literal segments become the regex skeleton, each
     ``${field}`` a lazy capture).
     """
-    col = F.col(value) if isinstance(value, str) else value
     fields: list[str] = []
     regex_parts: list[str] = ["^"]
     pos = 0
@@ -327,8 +332,10 @@ def extract_pattern(
     regex_parts.append("$")
     rx = "".join(regex_parts)
 
-    parts, ok = split_groups(col, rx, len(fields))
-    return {f: F.when(ok, F.get(parts, i + 1)) for i, f in enumerate(fields)}
+    parts, ok = split_groups(ident(value), rx, len(fields))
+    return {
+        f: F.expr(f"CASE WHEN {ok} THEN get({parts}, {i + 1}) END") for i, f in enumerate(fields)
+    }
 
 
 # Multi-byte sentinels of the one-pass extraction; a collision with
@@ -339,23 +346,24 @@ _XMARK = "\x02\x06\x03"
 
 
 def split_groups(
-    col: Column, regex: str, n: int, kernel: Callable[[Column], Column] | None = None
-) -> tuple[Column, Column]:
-    """All ``n`` capture groups of a whole-string ``regex`` in ONE pass:
-    regexp_replace the value with ``MARK SEP $1 SEP $2 ...`` and split
-    on SEP. Returns ``(parts, matched)``: ``parts[i]`` (1-based) is
-    group i, and ``matched`` is a definite boolean (False for a NULL
-    value or a non-match). ``kernel`` maps the split array before it is
-    read (the regex action computes it once in the parse Generate).
+    value: str, regex: str, n: int, kernel: Callable[[str], str] | None = None
+) -> tuple[str, str]:
+    """All ``n`` capture groups of a whole-string ``regex`` over the
+    string SQL ``value`` in ONE pass: regexp_replace the value with
+    ``MARK SEP $1 SEP $2 ...`` and split on SEP. Returns the SQL text
+    ``(parts, matched)``: ``get(parts, i)`` is group i, and ``matched``
+    is a definite boolean (false for a NULL value or a non-match).
+    ``kernel`` maps the split array's text before it is read (the regex
+    action computes it once in the parse Generate).
 
     The leading marker tells a real match from a value that merely
     splits into n+1 parts (a non-matching line is itself a 1-element
     split)."""
     repl = _XMARK + _XSEP + _XSEP.join(f"${i}" for i in range(1, n + 1))
-    parts = F.split(F.regexp_replace(col, regex, repl), _XSEP)
+    parts = f"split(regexp_replace({value}, {quote(regex)}, {quote(repl)}), {quote(_XSEP)})"
     if kernel is not None:
         parts = kernel(parts)
-    matched = F.coalesce((F.size(parts) == n + 1) & (F.get(parts, 0) == _XMARK), F.lit(False))
+    matched = f"coalesce((size({parts}) = {n + 1} AND get({parts}, 0) = {quote(_XMARK)}), false)"
     return parts, matched
 
 
@@ -372,14 +380,16 @@ def pattern_fields(pattern: str) -> list[str]:
     ]
 
 
-def pattern_is_strict_ok(pattern: str) -> Column:
-    """Column predicate: every field placeholder renders non-empty
+def strict_ok_sql(pattern: str) -> str:
+    """Boolean SQL text: every field placeholder renders non-empty
     (strict mode, pattern.go:149-151,182-184)."""
-    from loggie_spark.fieldpath import col_for_path
+    cond = ["true"]
+    for f_ in pattern_fields(pattern):
+        c = f"CAST({path_sql(f_)} AS STRING)"
+        cond += [f"({c} IS NOT NULL)", f"({c} <> '')"]
+    return cond[0] if len(cond) == 1 else "(" + " AND ".join(cond) + ")"
 
-    fields = pattern_fields(pattern)
-    cond = F.lit(True)
-    for f_ in fields:
-        c = col_for_path(f_).cast("string")
-        cond = cond & c.isNotNull() & (c != "")
-    return cond
+
+def pattern_is_strict_ok(pattern: str) -> Column:
+    """Column predicate of :func:`strict_ok_sql`."""
+    return F.expr(strict_ok_sql(pattern))

@@ -49,6 +49,7 @@ from loggie_spark.sinks.router import (
     SinkSpec,
     explode_to_sinks,
 )
+from loggie_spark.sqltext import STRING, Sql, ident, lit, quote, struct
 
 # Above this many pending buckets the per-bucket rows_in observation is
 # skipped (the count_if fan-out would cost O(B) comparisons per row);
@@ -180,8 +181,7 @@ class Pipeline:
 
             df = decode_tokens_arrow(df, "tokens", "body", keep_tokens=cfg.keep_tokens)
 
-        time_col = F.col(cfg.time_col_name) if cfg.time_col_name else None
-        plan = Plan(df, time_col=time_col)
+        plan = Plan(df, time_col=cfg.time_col_name)
         ctx = plan.root()
         fields = {s.name: s.resolved_fields() for s in cfg.sources}
         under_keys = {
@@ -199,10 +199,10 @@ class Pipeline:
             self._source_stage(ctx, src)
             f = fields[src.name]
             if f and under_key:
-                ctx.set_col(under_key, F.struct(*[F.lit(v).alias(k) for k, v in f.items()]))
+                ctx.set_col(under_key, struct([(k, lit(v)) for k, v in f.items()]))
             else:
                 for k, v in f.items():
-                    ctx.set_col(k, F.lit(v))
+                    ctx.set_col(k, lit(v))
         elif cfg.sources:
             ctx = self._dispatch(ctx, fields, under_key)
 
@@ -222,7 +222,7 @@ class Pipeline:
 
         # Routed fan-out; 'fail'-policy render failures are quarantined
         # under route_key=__failed__ and count as fail_count.
-        return explode_to_sinks(out, cfg.sinks, time_col=time_col)
+        return explode_to_sinks(out, cfg.sinks, time_col=cfg.time_col_name)
 
     def _dispatch(self, ctx: _Ctx, fields: dict[str, dict], under_key: str | None) -> _Ctx:
         """belongTo: each source's stage compiles, without gates, on a
@@ -231,19 +231,19 @@ class Pipeline:
         same CASE (a source declaring some keys carries "" for the rest);
         rows no source names keep their columns and get NULL fields."""
         cfg = self.cfg
-        key = F.col(cfg.source_col)
+        key = ident(cfg.source_col)
         keys = sorted({k for f in fields.values() for k in f})
         branches = []
         for src in cfg.sources:
-            b = ctx.fork(key == src.name)
+            b = ctx.fork(f"({key} = {quote(src.name)})")
             self._source_stage(b, src)
             f = fields[src.name]
             for k in keys if f else ():
-                b.set_col(k, F.lit(str(f.get(k, ""))))
+                b.set_col(k, lit(str(f.get(k, ""))))
             branches.append(b)
         out = dispatch(ctx, branches)
         if under_key:
-            out.set_col(under_key, F.struct(*[out.col(k).alias(k) for k in keys]))
+            out.set_col(under_key, struct([(k, out.col(k)) for k in keys]))
             for k in keys:
                 out.del_col(k)
         return out
@@ -261,12 +261,12 @@ class Pipeline:
             from loggie_spark.patterns import go_layout_to_jvm
 
             layout = src.timestamp_layout or DEFAULT_TS_LAYOUT
-            t = ctx.plan.time_col if ctx.plan.time_col is not None else F.current_timestamp()
-            ctx.set_col(src.timestamp_key, F.date_format(t, go_layout_to_jvm(layout)))
+            fmt = quote(go_layout_to_jvm(layout))
+            ctx.set_col(src.timestamp_key, Sql(f"date_format({ctx.plan.time.text}, {fmt})", STRING))
         if src.body_key and "body" in ctx.cols:
             ctx.step()
             ctx.set_col(src.body_key, ctx.col("body"))
-            ctx.set_col("body", F.lit(""))
+            ctx.set_col("body", lit(""))
 
     @staticmethod
     def _apply_interceptor(ctx: _Ctx, icp: dict) -> None:
@@ -275,12 +275,13 @@ class Pipeline:
         if typ in ("metric", "retry"):
             return  # structural: run() computes metrics / manifest resume
         if typ == "maxbytes":
-            from loggie_spark.functions.truncate import truncate_utf8_bytes
+            from loggie_spark.functions.truncate import truncate_utf8_sql
 
             target = icp.get("target", "body")
             max_bytes = int(icp.get("maxBytes", 131072))  # maxbytes/config.go:28
             if target in ctx.cols:
-                ctx.set_col(target, truncate_utf8_bytes(ctx.col(target), max_bytes))
+                text = truncate_utf8_sql(ctx.col(target).text, max_bytes)
+                ctx.set_col(target, Sql(text, STRING))
             return
         if typ in ("normalize", "transformer"):
             from loggie_spark.processors import compile_processors

@@ -289,7 +289,7 @@ def pl_route_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loggie_spark.patterns import compile_pattern
 
     events = _t(spark, sf_dir, "events")
-    route = compile_pattern("log-${event_type}-${+YYYY.MM.dd}", time_col=F.col("ts"))
+    route = compile_pattern("log-${event_type}-${+YYYY.MM.dd}", time_col="ts")
     return (
         events.withColumn("route_key", route)
         .groupBy("route_key")
@@ -1515,9 +1515,7 @@ def pl_k8s_extract_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("/app.log"),
     )
     df = docs.withColumn("path", path)
-    cols = extract_pattern(
-        F.col("path"), "/var/log/pods/${namespace}_${podname}_${poduid}/app.log"
-    )
+    cols = extract_pattern("path", "/var/log/pods/${namespace}_${podname}_${poduid}/app.log")
     df = df.withColumn("namespace", cols["namespace"]).withColumn(
         "podname", cols["podname"]
     )
@@ -1660,7 +1658,7 @@ def pl_addmeta(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = apply_program(
         docs,
         [{"action": "addMeta(meta)", "pipelineName": "p1"}],
-        time_col=F.col("_t"),
+        time_col="_t",
     )
     return out.select(
         "doc_id",

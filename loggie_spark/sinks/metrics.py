@@ -17,16 +17,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loggie_spark.sinks.router import FAILED_COL, SINK_COL
+from loggie_spark.sqltext import ident, quote
 
 
 def ok_fail_counts() -> list[Column]:
     """``success_count`` / ``fail_count`` aggregates over routed rows: a
     row is a failure iff the router flagged its route render
     (``_route_failed``, the 'fail' policy's quarantine)."""
-    failed = F.col(FAILED_COL)
+    failed = ident(FAILED_COL)
     return [
-        F.count_if(~failed).alias("success_count"),
-        F.count_if(failed).alias("fail_count"),
+        F.expr(f"count_if(NOT {failed}) AS success_count"),
+        F.expr(f"count_if({failed}) AS fail_count"),
     ]
 
 
@@ -34,7 +35,7 @@ def sink_metrics(routed: DataFrame, pipeline_name: str, source_col: str = "sourc
     """(pipeline, source, sink, success_count, fail_count) —
     FIXTURES.md §F4 metrics contract, exact counts."""
     return routed.groupBy(
-        F.lit(pipeline_name).alias("pipeline"),
-        F.col(source_col).alias("source"),
-        F.col(SINK_COL),
+        F.expr(f"{quote(pipeline_name)} AS pipeline"),
+        F.expr(f"{ident(source_col)} AS source"),
+        F.expr(ident(SINK_COL)),
     ).agg(*ok_fail_counts())

@@ -20,11 +20,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from loggie_spark.expr import compile_condition
-from loggie_spark.patterns import compile_pattern, pattern_is_strict_ok
+from loggie_spark.expr import condition_sql
+from loggie_spark.patterns import pattern_sql, strict_ok_sql
+from loggie_spark.sqltext import ident, lit, quote
 
 SINK_COL = "sink"
 ROUTE_COL = "route_key"
@@ -54,37 +55,34 @@ class SinkSpec:
     base_dirs: list[str] = field(default_factory=list)  # file sink dirs
     dir_hash_key: str | None = None  # consistent-hash key (file/sink.go:81-92)
 
-    def selector_col(self) -> Column:
+    def selector_sql(self) -> str:
         if self.selector is None:
-            return F.lit(True)
-        return F.coalesce(compile_condition(self.selector), F.lit(False))
+            return "true"
+        return f"coalesce({condition_sql(self.selector)}, false)"
 
 
-def rendezvous_dir(key: Column, dirs: list[str]) -> Column:
-    """Deterministic consistent-hash dir selection — the batch analog
-    of the file sink's stathat ring (file/sink.go:81-92,153-163).
+def rendezvous_dir(key: str, dirs: list[str]) -> str:
+    """Deterministic consistent-hash dir selection over the SQL ``key``
+    — the batch analog of the file sink's stathat ring
+    (file/sink.go:81-92,153-163).
 
     Highest-random-weight (rendezvous) hashing over the engine-agnostic
     md5-60bit family: same consistency contract as the ring (removing a
     dir reassigns only its keys), reproducible in any SQL engine for
     oracles — the exact stathat crc32 ring layout is NOT copied.
     """
-    from loggie_spark.functions.hashing import md5_60bit
+    from loggie_spark.functions.hashing import md5_60bit_spark_sql
 
-    candidates = F.array(
-        *[
-            F.struct(
-                md5_60bit(F.concat(F.lit(d + "|"), key.cast("string"))).alias("h"),
-                F.lit(d).alias("d"),
-            )
-            for d in dirs
-        ]
-    )
-    return F.array_max(candidates)["d"]
+    def candidate(d: str) -> str:
+        h = md5_60bit_spark_sql(f"CAST({key} AS STRING)", seed=d)
+        return f"named_struct('h', {h}, 'd', {quote(d)})"
+
+    candidates = ", ".join(candidate(d) for d in dirs)
+    return f"array_max(array({candidates}))['d']"
 
 
 def explode_to_sinks(
-    df: DataFrame, sinks: list[SinkSpec], time_col: Column | None = None
+    df: DataFrame, sinks: list[SinkSpec], time_col: str | None = None
 ) -> DataFrame:
     """Fan one row out to every sink whose selector matches, in ONE
     narrow pass: one ``explode`` of an array with one
@@ -92,7 +90,9 @@ def explode_to_sinks(
     projection that drops the NULL entries and expands the struct. The
     same plan for any number of sinks — one sink is the reference's
     own shape (an event has exactly one sink per pipeline); more
-    generalize the Selector interface.
+    generalize the Selector interface. Each entry is one SQL text;
+    ``time_col`` names the processing-time column of ``${+...}``
+    (default ``current_timestamp()``).
 
     Adds ``sink``, ``route_key``, ``_route_failed``, ``_pkey`` (the
     sink's rendered ``partition_key``, null when unset — the kafka
@@ -107,57 +107,50 @@ def explode_to_sinks(
     included) becomes ``__failed__`` and ``_route_failed`` is true, so
     the metrics contract counts it as a failure.
     """
+    time = ident(time_col) if time_col else None
+    null = lit(None).text
     entries = []
     for s in sinks:
-        route = compile_pattern(s.route_pattern, time_col=time_col)
-        ok = pattern_is_strict_ok(s.route_pattern)
-        emit = s.selector_col()
+        route = pattern_sql(s.route_pattern, time)
+        ok = strict_ok_sql(s.route_pattern)
+        emit = s.selector_sql()
         policy = s.on_render_fail
         if policy == "default":
-            route = F.when(ok, route).otherwise(F.lit(s.default_route))
+            route = f"CASE WHEN {ok} THEN {route} ELSE {quote(s.default_route)} END"
         elif policy == "ignore":
-            route = F.when(ok, route).otherwise(F.lit(""))
+            route = f"CASE WHEN {ok} THEN {route} ELSE '' END"
         elif policy == "drop":
-            emit = emit & ok
-        pkey = (
-            compile_pattern(s.partition_key, time_col=time_col).cast("string")
-            if s.partition_key
-            else F.lit(None).cast("string")
-        )
-        doc_id = (
-            compile_pattern(s.document_id, time_col=time_col).cast("string")
-            if s.document_id
-            else F.lit(None).cast("string")
-        )
+            emit = f"({emit} AND {ok})"
+        pkey = f"CAST({pattern_sql(s.partition_key, time)} AS STRING)" if s.partition_key else null
+        doc_id = f"CAST({pattern_sql(s.document_id, time)} AS STRING)" if s.document_id else null
         if s.base_dirs:
             # file sink consistent hashing: pick a base dir from the
             # rendered dirHashKey, prefix the filename route
             # (selectFilename, file/sink.go:153-177).
-            hash_key = (
-                compile_pattern(s.dir_hash_key, time_col=time_col)
-                if s.dir_hash_key
-                else F.lit("")
-            )
-            route = F.concat(rendezvous_dir(hash_key, s.base_dirs), route)
-        failed = F.lit(False)
+            hash_key = pattern_sql(s.dir_hash_key, time) if s.dir_hash_key else "''"
+            route = f"concat({rendezvous_dir(hash_key, s.base_dirs)}, {route})"
+        failed = "false"
         if policy not in ("default", "ignore", "drop"):  # 'fail'
-            failed = ~ok
-            route = F.when(ok, route).otherwise(F.lit("__failed__"))
-        entry = F.struct(
-            F.lit(s.name).alias(SINK_COL),
-            route.alias(ROUTE_COL),
-            failed.alias(FAILED_COL),
-            pkey.alias(PKEY_COL),
-            doc_id.alias(DOCID_COL),
-        )
-        entries.append(F.when(emit, entry))
+            failed = f"(NOT {ok})"
+            route = f"CASE WHEN {ok} THEN {route} ELSE '__failed__' END"
+        fields = [
+            (SINK_COL, quote(s.name)),
+            (ROUTE_COL, route),
+            (FAILED_COL, failed),
+            (PKEY_COL, pkey),
+            (DOCID_COL, doc_id),
+        ]
+        entry = ", ".join(f"{quote(n)}, {v}" for n, v in fields)
+        entries.append(f"CASE WHEN {emit} THEN named_struct({entry}) END")
 
     added = {SINK_COL, ROUTE_COL, FAILED_COL, PKEY_COL, DOCID_COL}
-    keep = ["`" + c.replace("`", "``") + "`" for c in df.columns if c.lower() not in added]
+    replaced = [ident(c) for c in df.columns if c.lower() in added]
+    keep = f"* EXCEPT ({', '.join(replaced)})" if replaced else "*"
     # The entry struct travels under the name of its first field and is
     # expanded in place, so no staging column is left behind.
-    routed = df.select(*keep, F.explode(F.array(*entries)).alias(SINK_COL))
-    return routed.filter(F.col(SINK_COL).isNotNull()).select(*keep, f"{SINK_COL}.*")
+    sink = ident(SINK_COL)
+    routed = df.selectExpr(keep, f"explode(array({', '.join(entries)})) AS {sink}")
+    return routed.filter(f"{sink} IS NOT NULL").selectExpr(f"* EXCEPT ({sink})", f"{sink}.*")
 
 
 def iceberg_available(spark) -> bool:

@@ -30,7 +30,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 COPIES = 5
 OUT_DIR = f"/tmp/loggie_stress5x_{os.path.basename(SF_DIR.rstrip('/'))}"
 

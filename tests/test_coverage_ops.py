@@ -152,7 +152,7 @@ def test_extract_pattern_inverse(spark):
     )
     pat = "/var/log/pods/${ns}_${pod}_${uid}/app.log"
     rendered = df.withColumn("path", compile_pattern(pat))
-    cols = extract_pattern(F.col("path"), pat)
+    cols = extract_pattern("path", pat)
     back = rendered.select(
         "ns", "pod", "uid",
         cols["ns"].alias("ns2"), cols["pod"].alias("pod2"), cols["uid"].alias("uid2"),
@@ -162,7 +162,7 @@ def test_extract_pattern_inverse(spark):
 
     # non-matching strings extract nothing (marker guards single-field too)
     bad = spark.createDataFrame([Row(path="/not/a/pod/path")])
-    one = extract_pattern(F.col("path"), "/var/log/${only}/app.log")
+    one = extract_pattern("path", "/var/log/${only}/app.log")
     assert bad.select(one["only"].alias("v")).collect()[0].v is None
 
 

@@ -366,6 +366,41 @@ def test_flagship_plan_shape(spark):
     assert n_broadcast == 1, f"expected 1 BroadcastExchange (lookup), got {n_broadcast}:\n{plan}"
 
 
+def test_flagship_build_round_trips(spark, monkeypatch):
+    """Building the flagship plan costs a few hundred py4j round trips,
+    not thousands: the pipeline compiles to SQL text and Spark gets one
+    string per output column, kernel slot, filter and sink entry. Only
+    round trips this thread makes are counted: wall time swings with
+    host CPU steal, and py4j's finalizer thread frees JVM objects of
+    earlier tests whenever it runs. The input frame is built before
+    counting starts."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from loggie_spark.sinks.metrics import sink_metrics
+
+    seq = generate_sequences(spark, N).withColumn(
+        "_ptime", F.lit("2024-03-01 00:00:00").cast("timestamp")
+    )
+    cfg = reference_pipeline(time_col_name="_ptime")
+    sink_metrics(Pipeline(cfg).transform(seq), cfg.name)  # warm
+
+    calls = 0
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counted(self, command):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    sink_metrics(Pipeline(cfg).transform(seq), cfg.name)
+    monkeypatch.undo()
+    assert calls <= 300, f"flagship plan build made {calls} py4j round trips"
+
+
 def test_iceberg_write_capability_gate(spark):
     """The Iceberg routed-append path is capability-gated: without the
     runtime jar (this container) it must fail with the documented

@@ -14,10 +14,11 @@ Oracled semantics (reference citations in each test):
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SETTINGS = dict(
     max_examples=5,
@@ -385,3 +386,186 @@ def test_kmv_jaccard_exact_when_sets_fit_in_sketch(spark, overlap, only):
     est = pairs.select(kmv_jaccard(pairs, k=64).alias("j")).collect()[0].j
     true_j = overlap / (overlap + 2 * only)
     assert abs(est - true_j) < 1e-12
+
+
+# -- the SQL-text plan compiler (sqltext.py, actions.py) ---------------------
+
+_QUOTE_ALPHABET = list("'\\$1{}`\"\n\r\t\x00\x01\x02\x03\x06\x7f .*+?()[]^|ab") + [
+    "é",
+    "\u2028",
+    "\U0001F600",
+    "\U00010348",
+]
+_QUOTE_SPECIALS = [
+    "$1",
+    "${env:HOME}",
+    "${spark.app.name}",
+    "\x01\x00\x02",  # patterns.split_groups separator
+    "\x02\x06\x03",  # and marker
+    "a''b",
+    "\\'",
+    "'\\",
+    "\\u0041",
+    "(?<n>\\S+) \\d{3}$",
+    "`x``y`",
+]
+quoty = st.one_of(
+    st.text(alphabet=st.sampled_from(_QUOTE_ALPHABET), max_size=16),
+    st.sampled_from(_QUOTE_SPECIALS),
+    texty,
+)
+
+
+@given(strings=st.lists(quoty, min_size=1, max_size=30))
+@example(strings=_QUOTE_SPECIALS + ["\x00", "\U0001F600"])
+@settings(**SETTINGS)
+def test_sql_quote_reads_back_equal(spark, strings):
+    """Every string the one escape helper quotes reads back equal from
+    Spark's SQL parser — regex metacharacters, the split_groups
+    sentinels, NUL, ``$1`` and ``${...}`` (the parser's variable
+    substitution must not fire), non-BMP characters; every name it
+    quotes as an identifier names the column it was given as an alias,
+    a column reference and a struct field, ``${...}`` included."""
+    from loggie_spark.sqltext import INT, ident, quote, sql_type
+
+    row = spark.range(1).select(
+        *[F.expr(quote(s)).alias(f"c{i}") for i, s in enumerate(strings)]
+    ).collect()[0]
+    assert list(row) == strings
+    names = [f"{s}_{i}" for i, s in enumerate(strings)]
+    frame = spark.range(1).selectExpr(*[f"{i} AS {ident(n)}" for i, n in enumerate(names)])
+    assert frame.columns == names
+    struct = T.StructType([T.StructField(n, INT) for n in names])
+    fields = ", ".join(f"{quote(n)}, {ident(n)}" for n in names)
+    out = frame.selectExpr(f"CAST(named_struct({fields}) AS {sql_type(struct)}) AS s")
+    assert out.schema["s"].dataType == struct
+    assert list(out.collect()[0].s) == list(range(len(names)))
+
+
+@given(
+    values=st.lists(st.one_of(texty, st.none()), min_size=1, max_size=20),
+    seed=st.one_of(st.none(), st.integers(0, 99), st.sampled_from(["logs/a", "it's"])),
+)
+@settings(**SETTINGS)
+def test_md5_60bit_text_equals_column(spark, values, seed):
+    """The SQL-text spelling of the 60-bit hash (rendezvous dir choice)
+    equals the Column one on any string, seeded or not."""
+    from loggie_spark.functions.hashing import md5_60bit, md5_60bit_spark_sql
+    from loggie_spark.sqltext import ident
+
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    rows = df.select(
+        md5_60bit(F.col("v"), seed=seed).alias("col"),
+        F.expr(md5_60bit_spark_sql(ident("v"), seed=seed)).alias("text"),
+    ).collect()
+    assert [r.col for r in rows] == [r.text for r in rows]
+
+
+_TYPED_SCHEMA = (
+    "src string, body string, s string, i int, l bigint, d double, f float, "
+    "b boolean, ts timestamp, st struct<x:string,y:bigint>, m map<string,string>"
+)
+
+# One or more steps of every action family, over columns of every type.
+_TYPED_STEPS = [
+    {"action": "regex(body)", "pattern": r"(?<g1>\S+) (?<g2>.*)"},
+    {"action": "regex(body, rx)", "pattern": r"(?<g1>\S+)"},
+    {"action": "grok(body)", "match": "%{WORD:w} %{INT:n}"},
+    {"action": "split(s)", "separator": ",", "keys": ["sa", "sb"]},
+    {"action": "split(s, sp)", "separator": ",", "keys": ["sa", "sb"]},
+    {"action": "jsonDecode(body, jm)"},
+    {"action": "jsonDecode(body)", "fields": ["k"]},
+    {"action": "jsonDecode(body, js)", "schema": "k string, n bigint"},
+    {"action": "jsonDecode(body)", "schema": "k string, n bigint"},
+    {"action": "strconv(s, int)"},
+    {"action": "strconv(i, float)"},
+    {"action": "strconv(d, bool)"},
+    {"action": "strconv(s, float)", "keepOriginal": True},
+    {"action": "strconv(l, bool)", "keepOriginal": True},
+    {"action": "strconv(d, int)", "keepOriginal": True},
+    {"action": "timestamp(s)", "fromLayout": "2006-01-02", "toLayout": "unix"},
+    {"action": "timestamp(l)", "fromLayout": "unix", "toLayout": "2006-01-02"},
+    {"action": "timestamp(i)", "fromLayout": "unix_ms", "toLayout": "unix_ms"},
+    {"action": "toStr(d)"},
+    {"action": "toStr(f)"},
+    {"action": "toStr(i)"},
+    {"action": "add(i, x)"},
+    {"action": "set(new, y)"},
+    {"action": "setInt(d, 3)"},
+    {"action": "setInt(big, 9999999999)"},
+    {"action": "setFloat(i, 2.5)"},
+    {"action": "setBool(s, true)"},
+    {"action": "copy(st.y, cy)"},
+    {"action": "copy(m.k, s)"},
+    {"action": "copy(d, i)"},
+    {"action": "move(l, s)"},
+    {"action": "move(m, m2)"},
+    {"action": "del(f)"},
+    {"action": "addMeta(meta)"},
+    {"action": "underRoot(st)"},
+]
+
+
+@st.composite
+def _typed_program(draw):
+    """Steps of every family; some gated by an if/else (the gated write
+    keeps the old value through a try_cast to the new type)."""
+    steps = []
+    for step in draw(st.lists(st.sampled_from(_TYPED_STEPS), min_size=1, max_size=5)):
+        if step["action"].startswith("underRoot"):
+            if not steps:  # underRoot runs only unconditionally
+                steps.append(step)
+        elif draw(st.booleans()):
+            other = draw(st.sampled_from(_TYPED_STEPS[:-1]))
+            steps.append({"if": "equal(b, true)", "then": [step], "else": [other]})
+        else:
+            steps.append(step)
+    return steps
+
+
+# Every family in one program (underRoot first: it runs only
+# unconditionally), and every family gated.
+_EVERY_STEP = [_TYPED_STEPS[-1]] + _TYPED_STEPS[:-1]
+_EVERY_STEP_GATED = [{"if": "equal(b, true)", "then": [step]} for step in _TYPED_STEPS[:-1]]
+
+
+@given(one=_typed_program(), two=_typed_program())
+@example(one=_EVERY_STEP, two=_EVERY_STEP_GATED)
+@settings(**{**SETTINGS, "max_examples": 3})
+def test_compiler_types_match_analyzed_schema(spark, one, two):
+    """Nothing is analysed to learn a type: the compiler infers every
+    value's Spark type from the program and the input schema. For one
+    program and for two per-source programs merged by ``dispatch``, each
+    inferred output type equals the type Spark analyses (nullability
+    aside)."""
+    from datetime import datetime
+
+    from loggie_spark.actions import Plan, dispatch
+    from loggie_spark.sqltext import sql_type
+
+    rows = [
+        ("a", '{"k": "v", "n": 3}', "1,2", 7, 1700000000, 2.5, 0.5, True,
+         datetime(2024, 3, 1), ("x", 1), {"k": "v"}),
+        ("b", "hello 42", "2024-03-01", None, None, 1e21, None, False, None, None, None),
+    ]
+    df = spark.createDataFrame(rows, _TYPED_SCHEMA)
+
+    def check(plan, ctx):
+        inferred = {n: v.sql.dtype for n, v in ctx.cols.items()}
+        out = plan.frame(ctx)
+        for f in out.schema.fields:
+            assert sql_type(f.dataType) == sql_type(inferred[f.name]), (f.name, one, two)
+
+    plan = Plan(df)
+    ctx = plan.root()
+    ctx.run(one)
+    check(plan, ctx)
+
+    plan = Plan(df)
+    root = plan.root()
+    branches = []
+    for name, program in (("a", one), ("b", two)):
+        b = root.fork(f"(`src` = '{name}')")
+        b.run(program)
+        branches.append(b)
+    check(plan, dispatch(root, branches))
