@@ -11,7 +11,10 @@ pandas UDFs and plan-time compilers (grok expansion, ${...} patterns,
 the transformer action/condition grammar).
 """
 
+from loggie_spark import zipcache
 from loggie_spark.session import get_spark
+
+zipcache.install()
 
 __version__ = "0.1.0"
 

@@ -78,6 +78,7 @@ from loggie_spark.sqltext import (
     item,
     lit,
     quote,
+    sql_type,
     struct,
     try_cast,
 )
@@ -87,6 +88,8 @@ from loggie_spark.sqltext import (
 # so a program that keeps reading what it wrote cannot grow its
 # expressions exponentially.
 _PIN_WEIGHT = 64
+
+_COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 
 _NAMED_GROUP_ANY = re.compile(r"\(\?P?<([a-zA-Z][a-zA-Z0-9_]*)>")
 
@@ -320,13 +323,46 @@ def _merged(value: Sql, vals: list[_Val]) -> _Val:
     return _Val(value, max(v.level for v in vals), sum(v.weight for v in vals) + 1)
 
 
+# Atomic types TRY_CAST converts between, by family: source family ->
+# the families it reaches (Spark 4 analysis, probed pair by pair).
+_FAMILIES = (
+    ("s", T.StringType),
+    ("n", T.NumericType),
+    ("b", T.BooleanType),
+    ("t", T.TimestampType),
+    ("d", T.DateType),
+    ("x", T.BinaryType),
+)
+_TRY_CASTS = {"s": "snbtdx", "n": "nbt", "b": "nb", "t": "ntd", "d": "td", "x": "x"}
+
+
+def _family(dt: T.DataType) -> str | None:
+    return next((fam for fam, cls in _FAMILIES if isinstance(dt, cls)), None)
+
+
+def _reaches(src: T.DataType, dst: T.DataType) -> bool:
+    """Whether ``TRY_CAST(<src> AS <dst>)`` passes analysis."""
+    if sql_type(src) == sql_type(dst) or isinstance(dst, T.StringType):
+        return True
+    if isinstance(src, T.ArrayType) and isinstance(dst, T.ArrayType):
+        return _reaches(src.elementType, dst.elementType)
+    if isinstance(src, T.MapType) and isinstance(dst, T.MapType):
+        return _reaches(src.keyType, dst.keyType) and _reaches(src.valueType, dst.valueType)
+    fs, fd = _family(src), _family(dst)
+    return fs is not None and fd is not None and fd in _TRY_CASTS[fs]
+
+
 def dispatch(base: _Ctx, branches: list[_Ctx]) -> _Ctx:
     """Merge per-source contexts forked from ``base`` into one context
     over every row. A column a source changed becomes ``CASE WHEN
     <its selector> THEN value ... ELSE <base value or NULL> END`` with
     one arm per source that changed it; a source that deleted it reads
     NULL. The last source writing a column sets its type and the other
-    values are try_cast to it, as sequential gated writes did."""
+    values are try_cast to it, as sequential gated writes did. Where a
+    value cannot be try_cast to that type (a string to a map, say), the
+    column is a STRING instead. Merged to a STRING, an array, map or
+    struct value is rendered as JSON (as ``jsonEncode`` does), in either
+    source order."""
     names = list(base.cols)
     for b in branches:
         names += [c for c in b.cols if c not in names]
@@ -339,9 +375,15 @@ def dispatch(base: _Ctx, branches: list[_Ctx]) -> _Ctx:
         writers = [v for _, v in arms if v is not None]
         vals = writers + ([] if default is None else [default])
         target = (writers[-1] if writers else default).sql.dtype
+        if not all(_reaches(v.sql.dtype, target) for v in vals):
+            target = STRING
 
         def cast(v: _Val | None) -> str:
-            return "NULL" if v is None else try_cast(v.sql, target).text
+            if v is None:
+                return "NULL"
+            if isinstance(target, T.StringType) and isinstance(v.sql.dtype, _COMPLEX):
+                return f"to_json({v.sql.text})"
+            return try_cast(v.sql, target).text
 
         rest = None if default is None else cast(default)
         out.cols[c] = _merged(Sql(_case([(sel, cast(v)) for sel, v in arms], rest), target), vals)

@@ -49,6 +49,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loggie_spark.session import local_frame
+
 BUCKET_COL = "_bucket"
 
 FINAL_METRICS_SCHEMA = (
@@ -175,4 +177,4 @@ class Manifest:
                     t = totals.setdefault((m["pipeline"], m["source"], m["sink"]), [0, 0])
                     t[0] += m["success_count"]
                     t[1] += m["fail_count"]
-        return spark.createDataFrame([(*k, *v) for k, v in totals.items()], FINAL_METRICS_SCHEMA)
+        return local_frame(spark, [(*k, *v) for k, v in totals.items()], FINAL_METRICS_SCHEMA)

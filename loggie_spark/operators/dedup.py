@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from loggie_spark.functions.hashing import md5_60bit
 from loggie_spark.operators.sharing import shared_persist
+from loggie_spark.session import local_frame
 
 
 def tokenize(col: Column | str, lowercase: bool = True) -> Column:
@@ -847,7 +848,7 @@ def _dup_clusters_driver(edges: DataFrame) -> DataFrame:
     spark = edges.sparkSession
     pdf = edges.toPandas()
     if not len(pdf):
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     parent: dict = {}
     size: dict = {}
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from loggie_spark.session import local_frame
+
 
 def _sorted_fold(col: Column) -> Column:
     """Sequential left fold of the sorted collected values — the
@@ -157,7 +159,7 @@ def _pagerank_driver(e: DataFrame, iters: int, d: float) -> DataFrame:
     srcs, dsts = pdf["src"].tolist(), pdf["dst"].tolist()
     nodes = sorted(set(srcs) | set(dsts))
     if not nodes:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out_deg = {v: 0 for v in nodes}
     incoming: dict = {v: [] for v in nodes}
     for s, t in zip(srcs, dsts):

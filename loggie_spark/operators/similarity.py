@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from loggie_spark.functions.vectors import dot, norm
+from loggie_spark.session import local_frame
 
 
 def brute_force_topk(
@@ -181,7 +182,8 @@ def save_centroids(
     corpus-wide hash-ordered TakeOrdered (or Lloyd refinement) just to
     rebuild the same few-KB centroid list. The table is n_cells rows —
     driver/executor cost of reloading is microseconds."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path)
@@ -628,8 +630,8 @@ def _pq_luts(
                 row.append(s)
             lut.append(row)
         lut_rows.append((int(r[0]), lut))
-    return corpus.sparkSession.createDataFrame(
-        lut_rows, "query_id: bigint, lut: array<array<double>>"
+    return local_frame(
+        corpus.sparkSession, lut_rows, "query_id: bigint, lut: array<array<double>>"
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from loggie_spark.actions import apply_program
 from loggie_spark.examples import ACCESS_PATTERN, AUDIT_GROK
 from loggie_spark.patterns import expand_grok, named_groups, DEFAULT_GROK_PATTERNS
+from loggie_spark.session import local_frame
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -4760,12 +4761,13 @@ def td_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     merges = bpe_train(docs, n_merges=_BPE_N, top_words=_BPE_TOP)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (m["rank"], m["left"], m["right"], m["merged"], m["pair_count"])
             for m in merges
         ],
-        schema="rank INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT",
+        "rank INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT",
     )
 
 

@@ -10,8 +10,10 @@ concurrency, pkg/pipeline/pipeline.go:578-830, maps onto this).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -80,3 +82,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-built frame of ``rows`` (tuples in ``schema``
+    order), sent as one Arrow table so that Spark plans it as a
+    LocalTableScan. ``spark.createDataFrame(<python list>)`` plans a
+    PythonRDD instead, and every execution of a plan over it then runs
+    a Python stage just to re-serialize the rows."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.table(
+        {f.name: list(c) for f, c in zip(struct.fields, cols)}, schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)

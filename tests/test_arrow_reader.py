@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -102,3 +104,28 @@ def test_decode_paths_agree_on_hostile_tokens(spark, tmp_path):
                 ).collect()
             }
             assert got == {r.doc_id: want[r.doc_id] for r in rows}, (name, got)
+
+
+def test_arrow_reader_runs_in_one_stage(spark, tmp_path):
+    """The work list is a LocalTableScan that the reader's own stage
+    runs: one MapInArrow, no Exchange, no PythonRDD in the lineage, and
+    one work partition per requested slot up to the unit count."""
+    rows = [Row(doc_id=f"d{i}", tokens=[104, 105], n_tok=2, source="s") for i in range(60)]
+    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    six, two = str(tmp_path / "six"), str(tmp_path / "two")
+    spark.createDataFrame(rows, schema).repartition(6).write.parquet(six)
+    spark.createDataFrame(rows, schema).repartition(2).write.parquet(two)
+
+    df = read_sequences_arrow(spark, six)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+    slots = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == min(6, slots)
+    for path, units in ((six, 6), (two, 2)):
+        for p in range(1, slots + 1):
+            got = read_sequences_arrow(spark, path, parallelism=p).rdd.getNumPartitions()
+            assert got == min(units, p), (units, p, got)
+    assert read_sequences_arrow(spark, two, parallelism=slots).count() == 60

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 import re
+import threading
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 import pytest
@@ -366,18 +368,34 @@ def test_flagship_plan_shape(spark):
     assert n_broadcast == 1, f"expected 1 BroadcastExchange (lookup), got {n_broadcast}:\n{plan}"
 
 
+@contextmanager
+def _round_trips(monkeypatch):
+    """Count the py4j round trips this thread makes in the block. Wall
+    time swings with host CPU steal, and py4j's finalizer thread frees
+    JVM objects of earlier tests whenever it runs, so only this
+    thread's calls are counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counted(self, command):
+        calls[0] += threading.get_ident() == me
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    try:
+        yield calls
+    finally:
+        monkeypatch.undo()
+
+
 def test_flagship_build_round_trips(spark, monkeypatch):
     """Building the flagship plan costs a few hundred py4j round trips,
     not thousands: the pipeline compiles to SQL text and Spark gets one
-    string per output column, kernel slot, filter and sink entry. Only
-    round trips this thread makes are counted: wall time swings with
-    host CPU steal, and py4j's finalizer thread frees JVM objects of
-    earlier tests whenever it runs. The input frame is built before
-    counting starts."""
-    import threading
-
-    from py4j.clientserver import ClientServerConnection
-
+    string per output column, kernel slot, filter and sink entry. The
+    input frame is built before counting starts."""
     from loggie_spark.sinks.metrics import sink_metrics
 
     seq = generate_sequences(spark, N).withColumn(
@@ -386,19 +404,28 @@ def test_flagship_build_round_trips(spark, monkeypatch):
     cfg = reference_pipeline(time_col_name="_ptime")
     sink_metrics(Pipeline(cfg).transform(seq), cfg.name)  # warm
 
-    calls = 0
-    send = ClientServerConnection.send_command
-    me = threading.get_ident()
+    with _round_trips(monkeypatch) as calls:
+        sink_metrics(Pipeline(cfg).transform(seq), cfg.name)
+    assert calls[0] <= 300, f"flagship plan build made {calls[0]} py4j round trips"
 
-    def counted(self, command):
-        nonlocal calls
-        calls += threading.get_ident() == me
-        return send(self, command)
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    sink_metrics(Pipeline(cfg).transform(seq), cfg.name)
-    monkeypatch.undo()
-    assert calls <= 300, f"flagship plan build made {calls} py4j round trips"
+def test_run_round_trips(spark, tmp_path, monkeypatch):
+    """A whole ``Pipeline.run`` (build, routed write, accounting and
+    manifest commit) stays within a few hundred py4j round trips: its
+    per-bucket ``rows_in`` observation is one SQL string per bucket,
+    where a Column expression per bucket cost about 41 (1,196 round
+    trips for the reference pipeline's 16 buckets; 563 as SQL text).
+    The metrics frame it returns is built from Arrow: no Python stage
+    runs when it is read."""
+    seq = generate_sequences(spark, N).withColumn(
+        "_ptime", F.lit("2024-03-01 00:00:00").cast("timestamp")
+    )
+    cfg = reference_pipeline(time_col_name="_ptime")
+    with _round_trips(monkeypatch) as calls:
+        metrics = Pipeline(cfg).run(spark, seq, str(tmp_path / "out"), run_id="r")
+    assert calls[0] <= 700, f"Pipeline.run made {calls[0]} py4j round trips"
+    assert "PythonRDD" not in metrics._jdf.queryExecution().toRdd().toDebugString()
+    assert metrics.count() == len(SOURCES) * len(("kafka", "es", "file"))
 
 
 def test_iceberg_write_capability_gate(spark):

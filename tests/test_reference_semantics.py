@@ -417,6 +417,31 @@ def test_dispatch_hostile_sources_match_belongto_model(spark):
         Pipeline(cfg).transform(df)
 
 
+def test_dispatch_string_and_map_writers_meet_as_json_string(spark):
+    """One source copies the body to ``payload`` (a string), another
+    jsonDecodes it there (a map). No try_cast takes a string to a map,
+    so in either source order the merged column is a string and the map
+    is rendered as JSON; a row no source names reads NULL."""
+    from loggie_spark.pipeline import Pipeline, PipelineConfig, SourceSpec
+    from loggie_spark.sinks.router import SinkSpec
+
+    rows = [("1", '{"k":"v"}', "a"), ("2", '{"k":"w","n":3}', "b"), ("3", '{"k":"x"}', None)]
+    df = spark.createDataFrame(rows, "doc_id string, body string, source string").withColumn(
+        "_pt", F.lit("2024-03-01 08:00:00").cast("timestamp")
+    )
+    copy = SourceSpec("a", [{"action": "copy(body, payload)"}])
+    decode = SourceSpec("b", [{"action": "jsonDecode(body, payload)"}])
+    want = {"1": '{"k":"v"}', "2": '{"k":"w","n":"3"}', "3": None}
+    for sources in ([copy, decode], [decode, copy]):
+        cfg = PipelineConfig(
+            name="p", sources=sources, sinks=[SinkSpec("out", "fixed")], time_col_name="_pt"
+        )
+        out = Pipeline(cfg).transform(df)
+        assert dict(out.dtypes)["payload"] == "string", [s.name for s in sources]
+        got = {r.doc_id: r.payload for r in out.collect()}
+        assert got == want, ([s.name for s in sources], got)
+
+
 # -- file-source scan options (glob / exclude / ignoreOlder) -----------------
 
 
